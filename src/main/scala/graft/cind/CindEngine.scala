@@ -1,15 +1,9 @@
 package graft.cind
 
-import graft.core.{Capture, ConditionCodes, SortedOps}
+import graft.core.{CacheOps, ConditionCodes, SortedOps}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-
-/** One capture's co-occurrence evidence from a single join line. */
-final case class CindEvidence(dep: Capture, refs: Array[Capture])
-
-/** Intersection result for one dependent capture. */
-final case class CindSet(count: Long, refs: Array[Capture])
 
 /** A discovered CIND row (final output shape). */
 final case class CindRow(
@@ -37,26 +31,37 @@ final case class HybridEvidence(dep: Long, refs: Array[Long], bits: Array[Long])
 final case class HybridCindSet(count: Long, refs: Array[Long], hasExact: Boolean,
     bits: Array[Long], hasBits: Boolean)
 
-/** Exact second-round evidence: refs pre-filtered by round-1 state. */
+/** Exact evidence over encoded ids: one dependent capture and its sorted
+  * co-occurring refs from ONE join line (strategy 0), or those refs
+  * pre-filtered by round-1 state (the hybrid's second round). */
 final case class LongRefsEvidence(dep: Long, refs: Array[Long])
 
-/** Exact intersection state for the second round (this exchange carries
-  * one buffer per unsure dep per map partition). */
+/** Exact intersection state: lines seen and the refs in all of them (the
+  * exchange carries one buffer per dep per map partition). */
 final case class LongRefsSet(count: Long, refs: Array[Long])
 
 /** [[CindEngine.encodedJoinLines]]' result: the persisted capture
-  * dictionary, the encoded lines relation (NOT persisted — each strategy
-  * decides via [[CindEngine.persistEncodedLines]]), the dictionary's
-  * counted size, whether the lines are a pure map over a cached upstream
-  * (no shuffle to recompute — the persist-valve auto signal), and the
-  * internal caches (lines0/dedup + dict) the STRATEGY must release once
-  * its compact result is materialized (VERDICT r13 #4: these leaked). */
+  * dictionary, the encoded lines relation (not persisted — the strategy
+  * skeleton decides), the dictionary's counted size, the ONE
+  * broadcast-vs-shuffle regime decision every downstream join hint reads
+  * (`broadcast`), whether the lines are a pure map over a cached upstream
+  * (no shuffle to recompute them), and the internal caches (lines0/dedup +
+  * dict) the caller must release once its compact result is materialized
+  * (VERDICT r13 #4: these leaked). */
 private[cind] final case class EncodedLines(
-    dict: org.apache.spark.sql.DataFrame,
-    lines: org.apache.spark.sql.DataFrame,
+    dict: DataFrame,
+    lines: DataFrame,
     nDict: Long,
+    broadcast: Boolean,
     linesMapOnly: Boolean,
-    internal: Seq[org.apache.spark.sql.Dataset[_]])
+    internal: Seq[Dataset[_]])
+
+/** A strategy's evidence step output: directed (dep_id, ref_id, n) rows —
+  * `n == support(dep)` exactly when dep ⊑ ref — plus the internal caches
+  * the step persisted, released by the skeleton after the result is
+  * materialized. */
+private[cind] final case class Evidence(counts: DataFrame,
+    internal: Seq[Dataset[_]] = Nil)
 
 /** The CIND discovery pipeline, re-expressed Spark-first.
   *
@@ -73,12 +78,16 @@ private[cind] final case class EncodedLines(
   *                                          packed longs; ref: overlap sets)
   *     -> CINDs: co-count == dep support   (ref: SmallToLargeTraversalStrategy.scala:63-105)
   *
-  * Alternative strategies, all result-identical (spec-pinned):
-  * `allCindsIntersect` (reference strategy 0: typed-Aggregator k-way
-  * sorted-set intersection), `allCindsTwoRound` (reference strategies 2/3:
-  * spectral-sketch candidate pruning + exact second round), and the
-  * `bloomConditions` flag (frequency Bloom filters instead of exact
-  * broadcast sets).
+  * Every strategy runs on one skeleton ([[discover]], the reference's
+  * plan/TraversalStrategy.scala base) and differs only in its evidence
+  * step over the encoded lines; all are result-identical (spec-pinned):
+  * `allCindsIntersect` (reference strategy 0: k-way sorted-set
+  * intersection), `allCindsTwoRound` (reference strategies 2/3:
+  * spectral-sketch candidate pruning + exact second round),
+  * `allCindsSmallToLarge` (strategy 1's arity ladder) and
+  * `allCindsHybrid` (the half-approximate exact/Bloom merge). The
+  * `bloomConditions` flag swaps in frequency Bloom filters for the exact
+  * broadcast sets.
   *
   * The pruning layers are *semantics-preserving*: a capture can appear in a
   * reported CIND (as dep or ref) only if its support >= minSupport, and
@@ -219,11 +228,12 @@ object CindEngine {
         condHash(col("cond_code"), col("v1"), col("v2")) === col("h"), "left_semi")
   }
 
-  /** Distributed Bloom-filter build: per-partition filters merged by bitwise
-    * OR (the reference's mapPartition-build + reduce-putAll pattern,
-    * plan/FrequentConditionPlanner.scala:201-283 and 5 more call sites).
-    * All filters share (numBits, numHashes) so merge is exact bit algebra. */
-  def buildBloom(keys: org.apache.spark.sql.Dataset[String], expectedInsertions: Long,
+  /** Distributed Bloom-filter build over 64-bit keys: per-partition
+    * filters merged by bitwise OR (the reference's mapPartition-build +
+    * reduce-putAll pattern, plan/FrequentConditionPlanner.scala:201-283 and
+    * 5 more call sites). All filters share (numBits, numHashes) so merge is
+    * exact bit algebra; the stream never materializes a String per key. */
+  def buildBloomLongs(keys: org.apache.spark.sql.Dataset[Long], expectedInsertions: Long,
       fpp: Double): graft.core.BloomFilter = {
     val proto = graft.core.Bloom.create(expectedInsertions, fpp)
     val (nb, nh) = (proto.numBits, proto.numHashes)
@@ -239,28 +249,6 @@ object CindEngine {
     // either: its zeroValue (a full empty bit array, MBs) would be serialized
     // into every task closure. mapPartitions emits exactly one array per
     // partition, so the RDD is non-empty whenever keys has partitions.
-    val or = (a: Array[Long], b: Array[Long]) => {
-      var i = 0; while (i < a.length) { a(i) |= b(i); i += 1 }; a
-    }
-    val rdd = bitArrays.rdd
-    val merged =
-      if (rdd.getNumPartitions == 0) new Array[Long](words)
-      else rdd.treeReduce(or, depth = 2)
-    graft.core.Bloom.wrap(nb, nh, merged)
-  }
-
-  /** [[buildBloom]] for 64-bit keys: same partial-build + executor-side
-    * tree merge, but the stream never materializes a String per key. */
-  def buildBloomLongs(keys: org.apache.spark.sql.Dataset[Long], expectedInsertions: Long,
-      fpp: Double): graft.core.BloomFilter = {
-    val proto = graft.core.Bloom.create(expectedInsertions, fpp)
-    val (nb, nh) = (proto.numBits, proto.numHashes)
-    val words = (nb + 63) >>> 6
-    val bitArrays = keys.mapPartitions { it =>
-      val bf = graft.core.Bloom.wrap(nb, nh, new Array[Long](words))
-      it.foreach(bf.put)
-      Iterator.single(bf.bits)
-    }(keys.sparkSession.implicits.newLongArrayEncoder)
     val or = (a: Array[Long], b: Array[Long]) => {
       var i = 0; while (i < a.length) { a(i) |= b(i); i += 1 }; a
     }
@@ -313,66 +301,6 @@ object CindEngine {
       .agg(count_distinct(col("join_val")).as("support"))
       .filter(col("support") >= minSupport)
 
-  /** Join lines: per distinct value, the set of (frequent) captures that
-    * contain it. The frequent-capture set is bounded by vocabulary /
-    * minSupport in practice but not in principle, so the semi-join carries
-    * no broadcast hint — AQE broadcasts it at runtime when it fits.
-    * Grouped by (xxhash64(join_val), join_val) — see [[hashPrefixed]]. */
-  def joinLines(instances: DataFrame, frequentCaps: DataFrame): DataFrame =
-    instances
-      .join(frequentCaps.select("code", "v1", "v2"),
-        Seq("code", "v1", "v2"), "left_semi")
-      .withColumn("jh", xxhash64(col("join_val")))
-      .groupBy("jh", "join_val")
-      .agg(collect_set(struct(col("code"), col("v1"), col("v2"))).as("captures"))
-      .drop("jh")
-
-  /** Per join line, one evidence row per member capture: (dep, all
-    * co-captures not trivially implied by dep, sorted). Rows with empty refs
-    * are kept — they still count toward the dep's support. */
-  def evidences(lines: DataFrame): Dataset[CindEvidence] = {
-    import lines.sparkSession.implicits._
-    lines
-      .select(col("captures").as[Array[Capture]])
-      .flatMap { caps =>
-        val sorted = caps.sorted
-        sorted.iterator.map { dep =>
-          val refs = sorted.filter(c => !(c == dep) && !dep.implies(c))
-          CindEvidence(dep, refs)
-        }
-      }
-  }
-
-  /** All CINDs (trivial implications excluded) with support >= minSupport.
-    * Output columns: dep_code, dep_v1, dep_v2, ref_code, ref_v1, ref_v2,
-    * support.
-    *
-    * Count-match formulation (the reference's own overlap==count trick,
-    * plan/SmallToLargeTraversalStrategy.scala:63-105, generalized to all
-    * arities): `dep ⊑ ref` iff the number of join lines containing BOTH
-    * equals dep's support. The whole plan is relational — explode fan-outs,
-    * hash aggregates, broadcast joins — so it runs inside whole-stage
-    * codegen with map-side partial aggregation; no typed Aggregator and no
-    * per-row JVM collections. The strategy-0 shape (`allCindsIntersect`,
-    * typed-Aggregator k-way intersection) is kept as a first-class
-    * alternative: on narrow-join-line data its per-dep ref arrays stay
-    * short and it measures FASTER than the pair fan-out (19.6s vs 28.4s
-    * at sf0.1, min-of-2); the count-match plan is the scale default
-    * because its memory per aggregation buffer is O(1) — a packed-long
-    * count — where the intersect buffer holds a ref ARRAY whose size is
-    * unbounded on hub-heavy data. Frequent-capture pruning
-    * (support >= minSupport on BOTH sides — sound because a reported ref's
-    * value set contains its dep's, so its support is >= dep's) is what keeps
-    * hub join lines narrow and the pair fan-out quadratic-safe.
-    */
-  /** The pruned, dictionary-encoded join lines shared by discovery and the
-    * join-line statistics: returns (dict, lines, nDict) where dict is the
-    * persisted frequent-capture dictionary (code, v1, v2, support, id),
-    * lines is (join_val, ids ARRAY<LONG>), and nDict is the dictionary's
-    * counted size — threaded to every downstream regime decision so the
-    * whole strategy call makes exactly ONE broadcast-vs-partitioned choice
-    * (r12 VERDICT: three independent dict.count() re-decisions could in
-    * principle diverge if the conf changed mid-query). */
   /** Dictionary size above which the encode abandons the driver-collect +
     * broadcast-array regime for a shuffle equi-join (SURVEY §5
     * hard-part 5's partitioned fallback; the r11 sf10 soak measured the
@@ -403,29 +331,6 @@ object CindEngine {
     * code must not emit unconditional stderr noise per invocation). */
   private[cind] def cindVerbose(spark: SparkSession): Boolean =
     spark.conf.getOption("spark.graft.cind.verbose").exists(_.toBoolean)
-
-  /** A/B valve for the strategies' encoded-lines persist (VERDICT r13 #1:
-    * the r13 persist shipped without one and sat on the path of the two
-    * driver-regressed flagship queries). Values:
-    *   - "always": persist + eager count in every strategy (r13 behavior);
-    *   - "never":  never persist (each pair-fan-out arm recomputes the
-    *     lines from the cached lines0/dedup relation);
-    *   - "auto" (default): persist only when rebuilding the lines involves
-    *     a SHUFFLE beyond the cached upstream — i.e. the salted-regroup
-    *     shapes (shuffle-encode fallback, bloomCaptures), where the r13
-    *     job profile measured the whole regroup subtree executing 4x. In
-    *     the broadcast-map regime the lines are a pure map over the cached
-    *     lines0 (BF probe + hash-map lookup per capture), so re-running
-    *     that map per consumer is cheaper than writing + count-barriering
-    *     a second full copy of the lines (measured this round, A/B table
-    *     in OPTIMIZATION_r14.md). */
-  private[cind] def persistEncodedLines(spark: SparkSession,
-      autoDefault: Boolean): Boolean =
-    spark.conf.getOption("spark.graft.cind.persistEncodedLines") match {
-      case Some("always") => true
-      case Some("never")  => false
-      case _              => autoDefault
-    }
 
   /** Dictionary size up to which the DIRECTIONAL evidence paths (hybrid
     * round 1/2, the s2l binary extractions) broadcast a dense id→support
@@ -461,18 +366,6 @@ object CindEngine {
     }
   }
 
-  /** MEASURED NEGATIVE (r13, BASELINE.md): grouping the line-formation
-    * exchange over 8-byte xxhash64 capture keys (strings re-attached at
-    * dictionary scale by a second instance pass) left the 23.8 GB sf5 max
-    * stage UNCHANGED — that stage is the pair/evidence exchange, whose
-    * bytes are set by co-occurrence cardinality, not row format — while
-    * the extra ~1B-row string-dedup pass DOUBLED wall (1271.6 s vs
-    * 623.0 s, identical 8,749,727 rows). LZ4 already crushes the repeated
-    * URI strings in the one line-formation exchange, so the struct shape
-    * below stays; the evidence exchange is attacked where the bytes are
-    * (see [[IntersectHybridCandidates]]' packed buffers).
-    */
-
   /** Salted two-phase regroup of (join_val, id, nsalt) rows into
     * (join_val, ids): phase 1 groups by (join_val, salt) with every
     * aggregation buffer bounded ≈ the salt threshold; phase 2 concatenates
@@ -505,6 +398,23 @@ object CindEngine {
         (floor((col("n_") - 1) / lit(hot)) + 1).cast("int").as("nsalt")))
   }
 
+  /** The pruned, dictionary-encoded join lines shared by every strategy,
+    * the join-line histogram and the unary overlaps: the persisted
+    * frequent-capture dictionary (code, v1, v2, support, id), the lines
+    * (join_val, ids ARRAY<LONG>), and the dictionary's counted size. The
+    * broadcast-vs-shuffle regime is decided HERE, once, and carried in
+    * [[EncodedLines]] to every downstream join hint (r12 VERDICT: separate
+    * re-decisions could diverge if the conf changed mid-query).
+    *
+    * MEASURED NEGATIVE (r13, BASELINE.md): grouping the line-formation
+    * exchange over 8-byte xxhash64 capture keys (strings re-attached at
+    * dictionary scale by a second instance pass) left the 23.8 GB sf5 max
+    * stage UNCHANGED — that stage is the pair/evidence exchange, whose
+    * bytes are set by co-occurrence cardinality, not row format — while
+    * the extra ~1B-row string-dedup pass DOUBLED wall (1271.6 s vs
+    * 623.0 s, identical 8,749,727 rows). LZ4 already crushes the repeated
+    * URI strings in the one line-formation exchange, so the struct shape
+    * below stays. */
   private[cind] def encodedJoinLines(triples: DataFrame, minSupport: Int,
       bloomConditions: Boolean = false,
       arRules: Option[DataFrame] = None,
@@ -533,165 +443,131 @@ object CindEngine {
     }
     val spark = triples.sparkSession
     import spark.implicits._
-    def logRegime(nDict: Long): Unit =
-      if (cindVerbose(spark))
-        System.err.println(s"graft.cind: dict=$nDict captures, encode=" +
-          (if (nDict <= dictEncodeMaxBroadcastRows(spark)) "broadcast-map"
-           else "shuffle-join"))
+    // 2. The cached upstream both the capture supports and the encode read.
+    //    Exact shape: ONE full-data shuffle groups instances by join value
+    //    directly, with a partial-aggregating collect_set — the map side
+    //    dedups (capture, join value) duplicates while it combines. Caveat
+    //    at scale: each aggregation buffer holds one join value's distinct
+    //    condition-frequent captures; for adversarial hub values use
+    //    bloomCaptures=true — the reference's `--find-frequent-captures`
+    //    valve (programs/RDFind.scala:376-399), whose two-pass shape never
+    //    materializes a per-value capture SET before the frequency filter,
+    //    so hub join values stay row-shaped (pass 1: dedup shuffle +
+    //    capture supports; pass 2: encode + regroup below).
+    val (upstream, grouped) =
+      if (!bloomCaptures) {
+        // grouped by (xxhash64(join_val), join_val): grouping-identical —
+        // the hash is functionally dependent on the value — but the
+        // ObjectHashAggregate ALWAYS falls back to sort-based merge past
+        // 128 groups, and its sort's 8-byte prefix then reads the leading
+        // hash column instead of the first 8 chars of join_val. The
+        // fixture's values share long prefixes ("order:", "lineitem:"), so
+        // the string prefix discriminates nothing and every comparison fell
+        // through to a full string compare; the hash prefix resolves almost
+        // all of them (r13 A/B: the isolated line-formation subquery reads
+        // ~13% less CPU, BASELINE.md "Retired experiment mains"). This is
+        // the measured max stage of every CIND strategy at sf5/sf10, where
+        // the same sort dominates.
+        val lines0 = pruned.withColumn("jh", xxhash64(col("join_val")))
+          .groupBy("jh", "join_val")
+          .agg(collect_set(struct(col("code"), col("v1"), col("v2"))).as("caps"))
+          .drop("jh")
+          .persist()
+        // no eager count: the next consumer is dictWithIds' partition-size
+        // job, which fills this cache on the way; every later reader
+        // (dictionary collect, encode, fallback explode) runs after that
+        // job has finished, so nothing races an unfilled cache.
+        // 3. Capture supports from the cached lines: each line is one
+        //    DISTINCT join value, so explode+count == count_distinct(join_val).
+        (lines0, lines0.select(explode(col("caps")).as("c"))
+          .groupBy(col("c.code").as("code"), col("c.v1").as("v1"), col("c.v2").as("v2"))
+          .agg(count(lit(1)).as("support"))
+          .filter(col("support") >= minSupport))
+      } else {
+        val dedup = pruned.dropDuplicates("code", "v1", "v2", "join_val").persist()
+        (dedup, dedup.groupBy("code", "v1", "v2")
+          .agg(count(lit(1)).as("support"))
+          .filter(col("support") >= minSupport))
+      }
+    val (dict, nDict) = dictWithIds(spark, grouped)
+    // SCALE VALVE (SURVEY §5 hard-part 5, forced by the r11 sf10
+    // broadcast-regime finding): past dictEncodeMaxBroadcastRows the
+    // driver-side collect + executor hash maps are the first thing to die,
+    // so the encode (and every downstream dictionary join) goes partitioned
+    val inRegime = nDict <= dictEncodeMaxBroadcastRows(spark)
+    if (cindVerbose(spark))
+      System.err.println(s"graft.cind: dict=$nDict captures, encode=" +
+        (if (inRegime) "broadcast-map" else "shuffle-join"))
+    // the dictionary ships once per executor as a broadcast hash map, and
+    // the native dict_encode_ids expression rewrites a capture-struct
+    // array to frequent-capture ids in place (misses drop out)
+    def dictEncoded(caps: Column): Column = {
+      val dictMap = new java.util.HashMap[String, java.lang.Long]()
+      dict.select("code", "v1", "v2", "id").collect().foreach { r =>
+        dictMap.put(graft.functions.DictEncodeIds.key(
+          r.getInt(0), r.getString(1), r.getString(2)), r.getLong(3))
+      }
+      org.apache.spark.sql.graft.ColumnBridge.column(
+        graft.functions.DictEncodeIds(
+          org.apache.spark.sql.graft.ColumnBridge.expression(caps),
+          spark.sparkContext.broadcast(dictMap)))
+    }
     // frequent-capture membership BF over [[condHash]] keys, built at
-    // dictionary scale: the shuffle-encode fallback probes it MAP-SIDE so
-    // infrequent captures never reach the encode join's exchange (VERDICT
-    // r12 #3; the bloomCaptures path has always pre-filtered this way).
-    // False positives only ADMIT extra rows; the inner dict join drops them.
-    def freqCaptureBF(grouped: DataFrame)
-        : org.apache.spark.broadcast.Broadcast[graft.core.BloomFilter] =
-      spark.sparkContext.broadcast(buildBloomLongs(
-        grouped.select(condHash(col("code"), col("v1"), col("v2")).as("k")).as[Long],
-        expectedCaptures, 0.01))
-    if (!bloomCaptures) {
-      // 2. ONE full-data shuffle: group instances by join value directly,
-      //    with a partial-aggregating collect_set — the map side dedups
-      //    (capture, join value) duplicates while it combines, so the old
-      //    shape's separate dropDuplicates shuffle and the re-group of the
-      //    encoded stream into lines both disappear. Caveat at scale: each
-      //    aggregation buffer holds one join value's distinct
-      //    condition-frequent captures; for adversarial hub values use
-      //    bloomCaptures=true, which keeps the two-pass shape below.
-      // grouped by (xxhash64(join_val), join_val): grouping-identical — the
-      // hash is functionally dependent on the value — but the
-      // ObjectHashAggregate ALWAYS falls back to sort-based merge past 128
-      // groups, and its sort's 8-byte prefix then reads the leading hash
-      // column instead of the first 8 chars of join_val. The fixture's
-      // values share long prefixes ("order:", "lineitem:"), so the string
-      // prefix discriminates nothing and every comparison fell through to
-      // a full string compare; the hash prefix resolves almost all of them
-      // (r13 A/B: the isolated line-formation subquery reads ~13% less CPU,
-      // Exp1). This is the measured max stage of every CIND strategy at
-      // sf5/sf10, where the same sort dominates.
-      val lines0 = pruned.withColumn("jh", xxhash64(col("join_val")))
-        .groupBy("jh", "join_val")
-        .agg(collect_set(struct(col("code"), col("v1"), col("v2"))).as("caps"))
-        .drop("jh")
-        .persist()
-      // no eager count: the next consumer is dictWithIds' zipWithIndex
-      // size probe — a SINGLE sequential job that fills this cache on the
-      // way; every later reader (encode, supports, fallback explode) runs
-      // after dict.count(), so nothing races an unfilled cache. (The
-      // strategies' own lines.count() calls stay — THEIR next consumers
-      // are parallel AQE stage materializations.)
-      // 3. Capture supports from the cached lines: each line is one DISTINCT
-      //    join value, so explode+count == count_distinct(join_val).
-      val grouped = lines0.select(explode(col("caps")).as("c"))
-        .groupBy(col("c.code").as("code"), col("c.v1").as("v1"), col("c.v2").as("v2"))
-        .agg(count(lit(1)).as("support"))
-        .filter(col("support") >= minSupport)
-      val (dict, nDict) = dictWithIds(spark, grouped)
-      logRegime(nDict)
-      // 4. Map-side encode when the dictionary fits the broadcast regime:
-      //    it ships once per executor as a broadcast hash map, and the
-      //    native dict_encode_ids expression rewrites each line's capture
-      //    array to frequent-capture ids in place. The grouped lines never
-      //    re-shuffle; lines reduced to zero frequent captures drop out
-      //    (they fed neither pairs nor the histogram before either).
-      //    SCALE VALVE (SURVEY §5 hard-part 5, forced by the r11 sf10
-      //    broadcast-regime finding): past dictEncodeMaxBroadcastRows the
-      //    driver-side collect + executor hash maps are the first thing to
-      //    die, so the encode falls back to a shuffle equi-join — explode
-      //    the cached lines' capture arrays, BF-drop infrequent captures
-      //    MAP-SIDE before the exchange (VERDICT r12 #3: the old fallback
-      //    joined the full exploded stream), inner-join the dict on the
-      //    capture key (join misses drop BF false positives exactly as the
-      //    map miss dropped them), and regroup by join value through the
-      //    salted bounded regroup (VERDICT r12 #2) — nsalt rides the
-      //    explode for free from the cached array sizes. Two exchanges
-      //    instead of zero, but every structure stays partitioned.
-      val lines =
-        if (nDict <= dictEncodeMaxBroadcastRows(spark)) {
-          val dictMap = new java.util.HashMap[String, java.lang.Long]()
-          dict.select("code", "v1", "v2", "id").collect().foreach { r =>
-            dictMap.put(graft.functions.DictEncodeIds.key(
-              r.getInt(0), r.getString(1), r.getString(2)), r.getLong(3))
-          }
-          val bcast = spark.sparkContext.broadcast(dictMap)
-          val encoded = org.apache.spark.sql.graft.ColumnBridge.column(
-            graft.functions.DictEncodeIds(
-              org.apache.spark.sql.graft.ColumnBridge.expression(col("caps")), bcast))
-          lines0.select(col("join_val"), encoded.as("ids"))
+    // dictionary scale: the shuffle paths probe it MAP-SIDE so infrequent
+    // captures never reach an encode exchange (VERDICT r12 #3). False
+    // positives only ADMIT extra rows; the dictionary join or map miss
+    // drops them.
+    def frequentCaptureRows(rows: DataFrame): DataFrame =
+      rows.filter(bloomContains(
+        spark.sparkContext.broadcast(buildBloomLongs(
+          grouped.select(condHash(col("code"), col("v1"), col("v2")).as("k")).as[Long],
+          expectedCaptures, 0.01)),
+        condHash(col("code"), col("v1"), col("v2"))))
+    val idCols = dict.select("code", "v1", "v2", "id")
+    val lines =
+      if (!bloomCaptures) {
+        // 4. In the broadcast regime the grouped lines never re-shuffle:
+        //    a map-side rewrite, and lines reduced to zero frequent
+        //    captures drop out (they fed neither pairs nor the histogram).
+        //    Past it: explode the cached lines' capture arrays, BF-drop
+        //    infrequent captures map-side, inner-join the dict on the
+        //    capture key, and regroup by join value through the salted
+        //    bounded regroup (VERDICT r12 #2) — nsalt rides the explode for
+        //    free from the cached array sizes. Two exchanges instead of
+        //    zero, but every structure stays partitioned.
+        if (inRegime)
+          upstream.select(col("join_val"), dictEncoded(col("caps")).as("ids"))
             .filter(size(col("ids")) > 0)
-        } else {
-          val bf = freqCaptureBF(grouped)
+        else {
           val hot = hotLineSaltThreshold(spark)
-          saltedLines(lines0
+          saltedLines(frequentCaptureRows(upstream
             .select(col("join_val"),
               (floor((size(col("caps")) - 1) / lit(hot)) + 1).cast("int").as("nsalt"),
               explode(col("caps")).as("c"))
-            .select(col("join_val"), col("nsalt"), col("c.code"), col("c.v1"), col("c.v2"))
-            .filter(bloomContains(bf, condHash(col("code"), col("v1"), col("v2"))))
-            .join(dict.select("code", "v1", "v2", "id"), Seq("code", "v1", "v2"))
+            .select(col("join_val"), col("nsalt"), col("c.code"), col("c.v1"), col("c.v2")))
+            .join(idCols, Seq("code", "v1", "v2"))
             .select(col("join_val"), col("id"), col("nsalt")))
         }
-      // mapOnly: in the broadcast regime the lines are a pure map over the
-      // cached lines0 (no shuffle to recompute); the fallback regroup
-      // shuffles. internal caches released by the strategy's cacheResult.
-      EncodedLines(dict, lines, nDict,
-        linesMapOnly = nDict <= dictEncodeMaxBroadcastRows(spark),
-        internal = Seq(lines0, dict))
-    } else {
-      // bloomCaptures — the reference's `--find-frequent-captures` valve
-      // (programs/RDFind.scala:376-399: pack frequent captures into a BF)
-      // and this engine's skew valve: the two-pass shape never materializes
-      // a per-value capture SET before the frequency filter, so hub join
-      // values with huge distinct-capture sets stay row-shaped. Pass 1:
-      // dedup shuffle + capture supports; pass 2: BF drops
-      // infrequent-capture instances MAP-SIDE, the survivors encode
-      // MAP-SIDE through the same dict_encode_ids broadcast hash map the
-      // exact path uses (an encode JOIN here shuffled the full deduped
-      // instance stream twice — ~180 MB of map writes at sf0.1 — for a
-      // dictionary that ships everywhere else as a broadcast anyway), and
-      // lines re-group from ids through the salted bounded regroup
-      // (VERDICT r12 #2). BF false positives only let extra instances
-      // reach the encode, where the dictionary-map miss drops them —
-      // results identical.
-      val dedup = pruned.dropDuplicates("code", "v1", "v2", "join_val").persist()
-      val grouped = dedup.groupBy("code", "v1", "v2")
-        .agg(count(lit(1)).as("support"))
-        .filter(col("support") >= minSupport)
-      val (dict, nDict) = dictWithIds(spark, grouped)
-      logRegime(nDict)
-      val bfBcast = freqCaptureBF(grouped)
-      val keyOf = condHash(col("code"), col("v1"), col("v2"))
-      val toEncode = dedup.filter(bloomContains(bfBcast, keyOf))
-      // same scale valve as the exact path: map-side hash-map encode in
-      // the broadcast regime, shuffle equi-join encode past it (the BF
-      // already dropped almost every infrequent instance map-side, so the
-      // join input is the frequent stream either way; join misses play
-      // the dictionary-map-miss role for BF false positives)
-      val ided =
-        if (nDict <= dictEncodeMaxBroadcastRows(spark)) {
-          val dictMap = new java.util.HashMap[String, java.lang.Long]()
-          dict.select("code", "v1", "v2", "id").collect().foreach { r =>
-            dictMap.put(graft.functions.DictEncodeIds.key(
-              r.getInt(0), r.getString(1), r.getString(2)), r.getLong(3))
-          }
-          val mapBcast = spark.sparkContext.broadcast(dictMap)
-          val encoded = org.apache.spark.sql.graft.ColumnBridge.column(
-            graft.functions.DictEncodeIds(
-              org.apache.spark.sql.graft.ColumnBridge.expression(
-                array(struct(col("code"), col("v1"), col("v2")))), mapBcast))
-          toEncode.select(col("join_val"), explode(encoded).as("id"))
-        } else
-          toEncode.join(dict.select("code", "v1", "v2", "id"),
-              Seq("code", "v1", "v2"))
-            .select(col("join_val"), col("id"))
-      // inputs are already (capture, value)-distinct; per-value sizes are
-      // unknown in this row shape, so the bounded regroup derives them
-      // with one combinable count-by-key pass (the hot-buffer valve's
-      // price — VERDICT r12 #2)
-      val lines = boundedRegroupCounted(ided, hotLineSaltThreshold(spark))
-      // the regroup always shuffles, so the lines are never map-only here
-      EncodedLines(dict, lines, nDict, linesMapOnly = false,
-        internal = Seq(dedup, dict))
-    }
+      } else {
+        // BF-filtered instances encode through the same map (broadcast
+        // regime; an encode JOIN here shuffled the full deduped instance
+        // stream twice — ~180 MB of map writes at sf0.1) or the same
+        // equi-join (past it). Per-value sizes are unknown in this row
+        // shape, so the bounded regroup derives them with one combinable
+        // count-by-key pass (the hot-buffer valve's price).
+        val toEncode = frequentCaptureRows(upstream)
+        val ided =
+          if (inRegime)
+            toEncode.select(col("join_val"),
+              explode(dictEncoded(array(struct(col("code"), col("v1"), col("v2"))))).as("id"))
+          else
+            toEncode.join(idCols, Seq("code", "v1", "v2")).select(col("join_val"), col("id"))
+        boundedRegroupCounted(ided, hotLineSaltThreshold(spark))
+      }
+    // map-only: in the broadcast regime the exact-shape lines are a pure
+    // map over the cached lines0; every other shape regroups (shuffles)
+    EncodedLines(dict, lines, nDict, broadcast = inRegime,
+      linesMapOnly = inRegime && !bloomCaptures, internal = Seq(upstream, dict))
   }
 
   /** Dictionary of frequent captures with deterministic dense int IDs —
@@ -699,10 +575,10 @@ object CindEngine {
     * quadratic pair fan-out then runs over packed longs instead of 6-column
     * string tuples (the reference's ConditionCompressor idea, Spark-style).
     *
-    * Dense IDs via zipWithIndex, NOT row_number over a global window: the
+    * Dense IDs numbered per partition from one tiny partition-size job
+    * (the zipWithIndex scheme), NOT row_number over a global window: the
     * unpartitioned window funnels every frequent capture through a single
-    * task (the 100 TB killer). zipWithIndex numbers partitions in place
-    * after one tiny partition-size job; IDs only need distinctness and
+    * task (the 100 TB killer). IDs only need distinctness and
     * < 2^31 (they feed the packed-long pair key), not global order.
     * The low bit tags unary captures so arity predicates evaluate on the
     * encoded id arrays MAP-SIDE (no decode join before a fan-out filter).
@@ -712,12 +588,10 @@ object CindEngine {
     * (the encode collect in the broadcast regime, the strategy's lines job
     * past it) fills the cache.
     *
-    * Returns (dict, nDict): ONE partition-size job both numbers the ids
-    * (replacing zipWithIndex's internal size probe — same offsets, so the
-    * assigned ids are bit-identical) and counts the dictionary (replacing
-    * the caller's separate eager `dict.count()` barrier). VERDICT r13 #3:
-    * the strategies' driver-side serial fraction was three sequential
-    * jobs here (probe, count, collect) — now two. */
+    * Returns (dict, nDict): the ONE partition-size job both numbers the ids
+    * and counts the dictionary, so no separate count barrier runs (VERDICT
+    * r13 #3: three sequential driver jobs here, probe/count/collect, are
+    * now two). */
   private def dictWithIds(spark: SparkSession, grouped: DataFrame): (DataFrame, Long) = {
     val rdd = grouped.rdd
     val sizes = spark.sparkContext.runJob(rdd,
@@ -750,7 +624,7 @@ object CindEngine {
     // histogram is materialized (they leaked here before r14)
     val hist = enc.lines.select(size(col("ids")).as("n_captures"))
       .groupBy("n_captures").agg(count(lit(1)).as("n_lines"))
-    graft.core.CacheOps.cacheResult(hist, enc.internal)
+    CacheOps.cacheResult(hist, enc.internal)
   }
 
   /** Width beyond which a join line's pair emission is sliced across tasks
@@ -762,17 +636,11 @@ object CindEngine {
     * splitting (co-occurrence counting is emission-order-insensitive). */
   val SplitThreshold = 1024
 
-  /** Directed co-occurrence counts over encoded join lines:
-    * (dep_id, ref_id, n) where n = number of join lines containing both.
-    * Counts are direction-symmetric, so each unordered pair is emitted once
-    * (halving the quadratic fan-out) and expanded to both directions after
-    * aggregation. Wide lines are sliced first (skew split), narrow lines
-    * emit directly. This relation IS the reference's OverlapSet
-    * (data/OverlapSet.scala, built by MultiunionOverlapCandidates):
-    * overlap(dep, ref) = n. */
-  /** Unordered-pair key stream: one packed long `pk = dep<<32 | ref`
-    * (dep < ref) per (capture pair, join line) co-occurrence, skew-split. */
-  private def pairKeys(lines: DataFrame, splitThreshold: Int): DataFrame = {
+  /** The skew-split pair emitter shared by every pair-counting evidence
+    * step: one (dep, ref) row per ordered pair of ids co-occurring in a
+    * join line (including dep == ref). Wide lines are sliced first (see
+    * [[SplitThreshold]]), narrow lines emit directly. */
+  private def linePairs(lines: DataFrame, splitThreshold: Int): DataFrame = {
     val narrow = lines.filter(size(col("ids")) <= splitThreshold)
       .select(explode(col("ids")).as("dep"), col("ids"))
     val wide = lines.filter(size(col("ids")) > splitThreshold)
@@ -783,11 +651,22 @@ object CindEngine {
         lit(splitThreshold))).as("dep"), col("ids"))
     narrow.unionAll(wide)
       .select(col("dep"), explode(col("ids")).as("ref"))
-      .filter(col("dep") < col("ref"))
-      .select((shiftleft(col("dep"), 32) + col("ref")).as("pk"))
   }
 
-  /** Aggregate unordered pair keys and expand to both directions. */
+  /** Unordered-pair key stream: one packed long `pk = dep<<32 | ref`
+    * (dep < ref) per (capture pair, join line) co-occurrence. Counts are
+    * direction-symmetric, so each unordered pair is emitted once (halving
+    * the quadratic fan-out) and [[expandCounts]] restores both directions
+    * after aggregation. */
+  private def pairKeys(lines: DataFrame, splitThreshold: Int): DataFrame =
+    linePairs(lines, splitThreshold)
+      .filter(col("dep") < col("ref"))
+      .select((shiftleft(col("dep"), 32) + col("ref")).as("pk"))
+
+  /** Aggregate unordered pair keys and expand to directed
+    * (dep_id, ref_id, n), n = number of join lines containing both. This
+    * relation IS the reference's OverlapSet (data/OverlapSet.scala, built
+    * by MultiunionOverlapCandidates): overlap(dep, ref) = n. */
   private def expandCounts(keys: DataFrame): DataFrame =
     keys
       .groupBy("pk").agg(count(lit(1)).as("n"))
@@ -798,9 +677,6 @@ object CindEngine {
           shiftright(col("pk"), 32).as("ref_id")))).as("p"), col("n"))
       .select(col("p.dep_id"), col("p.ref_id"), col("n"))
 
-  private def overlapCounts(lines: DataFrame, splitThreshold: Int): DataFrame =
-    expandCounts(pairKeys(lines, splitThreshold))
-
   /** Unary-unary capture overlaps with their co-occurrence counts
     * (reference CreateUnaryUnaryOverlapCandidates +
     * MultiunionOverlapCandidates; the dep side carries its support so
@@ -810,7 +686,6 @@ object CindEngine {
   def unaryOverlaps(triples: DataFrame, minSupport: Int = DefaultMinSupport,
       sketch: Boolean = true, expectedPairs: Long = 4000000L): DataFrame = {
     val enc = encodedJoinLines(triples, minSupport)
-    val (dict, nDict) = (enc.dict, enc.nDict)
     // arity filter BEFORE the quadratic fan-out: the unary bit rides the
     // encoded ids, so binary captures drop out of the lines map-side
     // (roughly halving pair volume) instead of post-aggregation at decode
@@ -831,7 +706,7 @@ object CindEngine {
         val raw = pairKeys(cached, SplitThreshold)
         sketchPrunedKeys(raw, minSupport, expectedPairs)
       }
-    val unary = dict.filter(col("v2") === "")
+    val unary = enc.dict.filter(col("v2") === "")
     val depSide = unary.select(col("id").as("dep_id"), col("code").as("dep_code"),
       col("v1").as("dep_v1"), col("support").as("dep_support"))
     val refSide = unary.select(col("id").as("ref_id"), col("code").as("ref_code"),
@@ -840,9 +715,7 @@ object CindEngine {
     // broadcast inside the regime (measured faster than the unhinted
     // plan), plain partitioned joins past it (a forced hint there is the
     // first thing to die at 100x)
-    val inRegime =
-      nDict <= dictEncodeMaxBroadcastRows(triples.sparkSession)
-    def hinted(side: DataFrame) = if (inRegime) broadcast(side) else side
+    def hinted(side: DataFrame) = if (enc.broadcast) broadcast(side) else side
     val out = expandCounts(keys)
       // overlaps below minSupport can never certify a CIND nor survive the
       // reference's candidate filters — dropping them pre-decode keeps the
@@ -852,11 +725,12 @@ object CindEngine {
       .join(hinted(refSide), "ref_id")
       .select(col("dep_code"), col("dep_v1"), col("ref_code"), col("ref_v1"),
         col("n").as("overlap"), col("dep_support"))
-    graft.core.CacheOps.cacheResult(out, internal.result() ++ enc.internal)
+    CacheOps.cacheResult(out, internal.result() ++ enc.internal)
   }
 
   /** Decode directed counts into CIND rows: keep pairs whose co-count
-    * equals the dep's support, drop trivially-implied refs, resolve IDs.
+    * equals the dep's support — the ONE place every strategy's result is
+    * certified — drop trivially-implied refs, resolve IDs.
     *
     * SIZE-CONDITIONAL shape (the encode valve's twin, both regimes
     * measured at the r12 sf5 soak): below dictEncodeMaxBroadcastRows the
@@ -870,15 +744,15 @@ object CindEngine {
     * (dep_id, support) two-long projection, and the string columns
     * attached only to the surviving final CIND set. The support floor is
     * a strict win and applies in both regimes. */
-  private def decodeCinds(dict: DataFrame, counts: DataFrame,
-      minSupport: Int, nDict: Long): Dataset[CindRow] = {
+  private def decodeCinds(enc: EncodedLines, counts: DataFrame,
+      minSupport: Int): Dataset[CindRow] = {
+    val dict = enc.dict
     import dict.sparkSession.implicits._
-    val spark = dict.sparkSession
     val floored = counts.filter(col("n") >= minSupport)
     val refSide = dict.select(col("id").as("ref_id"), col("code").as("ref_code"),
       col("v1").as("ref_v1"), col("v2").as("ref_v2"))
     val kept =
-      if (nDict <= dictEncodeMaxBroadcastRows(spark)) {
+      if (enc.broadcast) {
         val depSide = dict.select(col("id").as("dep_id"),
           col("code").as("dep_code"), col("v1").as("dep_v1"),
           col("v2").as("dep_v2"), col("support"))
@@ -908,40 +782,72 @@ object CindEngine {
       .as[CindRow]
   }
 
+  /** The one strategy skeleton (the reference's plan/TraversalStrategy
+    * .scala base): encode the join lines, apply the persist rule, run the
+    * strategy's evidence step, decode, apply the AR output filter, and
+    * materialize the compact result while releasing every internal cache.
+    * Strategies differ ONLY in `evidence`.
+    *
+    * Persist rule: the encoded lines are persisted (and counted, so the
+    * evidence step's parallel stage materializations read a filled cache)
+    * iff recomputing them shuffles — the salted regroup shapes — or the
+    * strategy asks for it (`persistLines`, two-round). Pair fan-outs read
+    * the lines once per union arm (pairKeys' narrow and wide branches'
+    * differing pushed-down projections defeat exchange reuse): the r13 job
+    * profile showed the whole regroup subtree EXECUTING 4x there. In the
+    * broadcast-map regime the lines are a pure map over the cached lines0,
+    * and re-running that map per consumer measured CHEAPER than writing +
+    * count-barriering a second full copy (r14 A/B, OPTIMIZATION_r14.md). */
+  private def discover(triples: DataFrame, minSupport: Int,
+      bloomConditions: Boolean, bloomCaptures: Boolean,
+      expectedFrequentKeys: Long, projections: String,
+      arRules: Option[DataFrame], persistLines: Boolean = false)(
+      evidence: EncodedLines => Evidence): Dataset[CindRow] = {
+    // expectedFrequentKeys sizes BOTH Bloom paths (reference rule:
+    // estimated triples / minSupport, FrequentConditionPlanner.scala:34-38)
+    val enc0 = encodedJoinLines(triples, minSupport, bloomConditions,
+      arRules = arRules, bloomCaptures = bloomCaptures,
+      expectedCaptures = expectedFrequentKeys, projections = projections)
+    val enc =
+      if (!persistLines && enc0.linesMapOnly) enc0
+      else {
+        val lines = enc0.lines.persist()
+        lines.count()
+        enc0.copy(lines = lines, internal = lines +: enc0.internal)
+      }
+    val ev = evidence(enc)
+    val cinds = decodeCinds(enc, ev.counts, minSupport)
+    val out = arRules.fold(cinds)(rules => arImpliedCindFilter(cinds.toDF(), rules))
+    CacheOps.cacheResult(out, ev.internal ++ enc.internal)
+  }
+
+  /** All CINDs (trivial implications excluded) with support >= minSupport.
+    * Output columns: dep_code, dep_v1, dep_v2, ref_code, ref_v1, ref_v2,
+    * support.
+    *
+    * Count-match formulation (the reference's own overlap==count trick,
+    * plan/SmallToLargeTraversalStrategy.scala:63-105, generalized to all
+    * arities): `dep ⊑ ref` iff the number of join lines containing BOTH
+    * equals dep's support. The evidence step is relational — explode
+    * fan-outs and one hash aggregate over packed-long pair keys — so it
+    * runs inside whole-stage codegen with map-side partial aggregation and
+    * O(1) state per key; the intersect strategy's buffer instead holds a
+    * ref ARRAY whose size is unbounded on hub-heavy data. Frequent-capture
+    * pruning (support >= minSupport on BOTH sides — sound because a
+    * reported ref's value set contains its dep's, so its support is >=
+    * dep's) is what keeps hub join lines narrow and the pair fan-out
+    * quadratic-safe. */
   def allCinds(triples: DataFrame, minSupport: Int = DefaultMinSupport,
       splitThreshold: Int = SplitThreshold,
       bloomConditions: Boolean = false,
       bloomCaptures: Boolean = false,
       expectedFrequentKeys: Long = 10000000L,
       projections: String = "spo",
-      arRules: Option[DataFrame] = None): Dataset[CindRow] = {
-    // expectedFrequentKeys sizes BOTH Bloom paths (reference rule:
-    // estimated triples / minSupport, FrequentConditionPlanner.scala:34-38)
-    val enc = encodedJoinLines(triples, minSupport, bloomConditions,
-      arRules = arRules,
-      bloomCaptures = bloomCaptures, expectedCaptures = expectedFrequentKeys,
-      projections = projections)
-    // persist the encoded lines before the pair fan-out IFF recomputing
-    // them shuffles (the salted regroup shapes): pairKeys' narrow and wide
-    // branches are UNION arms whose differing pushed-down projections
-    // defeat exchange reuse, so an unpersisted lines relation is computed
-    // once per branch — the r13 job profile showed the whole regroup
-    // subtree EXECUTING 4x in parallel there (saltedLines' two arms x
-    // pairKeys' two arms). In the broadcast-map regime the lines are a
-    // pure map over the cached lines0, and re-running that map per branch
-    // measures CHEAPER than writing + count-barriering a second full copy
-    // of the lines (r14 valve A/B, OPTIMIZATION_r14.md). The valve
-    // (spark.graft.cind.persistEncodedLines) forces either regime.
-    val doPersist = persistEncodedLines(triples.sparkSession,
-      autoDefault = !enc.linesMapOnly)
-    val lines = if (doPersist) { val l = enc.lines.persist(); l.count(); l }
-                else enc.lines
-    val cinds = decodeCinds(enc.dict, overlapCounts(lines, splitThreshold),
-      minSupport, enc.nDict)
-    val out = arRules.fold(cinds)(rules => arImpliedCindFilter(cinds.toDF(), rules))
-    graft.core.CacheOps.cacheResult(out,
-      (if (doPersist) Seq(lines) else Nil) ++ enc.internal)
-  }
+      arRules: Option[DataFrame] = None): Dataset[CindRow] =
+    discover(triples, minSupport, bloomConditions, bloomCaptures,
+        expectedFrequentKeys, projections, arRules) { enc =>
+      Evidence(expandCounts(pairKeys(enc.lines, splitThreshold)))
+    }
 
   /** A rule's merged binary condition as (cond_code, v1, v2), values ordered
     * by attribute code (reference CreateJoinPartners.scala:183-196). */
@@ -972,7 +878,7 @@ object CindEngine {
       splitThreshold: Int = SplitThreshold): Dataset[CindRow] = {
     val rules = preparedRules(triples, minSupport)
     val out = allCinds(triples, minSupport, splitThreshold, arRules = Some(rules))
-    graft.core.CacheOps.cacheResult(out, Seq(rules))
+    CacheOps.cacheResult(out, Seq(rules))
   }
 
   /** Association rules persisted for the two places every AR-pruned
@@ -1033,27 +939,17 @@ object CindEngine {
       bloomCaptures: Boolean = false,
       expectedFrequentKeys: Long = 10000000L,
       projections: String = "spo",
-      arRules: Option[DataFrame] = None): Dataset[CindRow] = {
-    val enc = encodedJoinLines(triples, minSupport, bloomConditions,
-      arRules = arRules, bloomCaptures = bloomCaptures,
-      expectedCaptures = expectedFrequentKeys, projections = projections)
+      arRules: Option[DataFrame] = None): Dataset[CindRow] =
     // both rounds re-run the FULL O(w^2) pair explode over the lines
     // (sketch build + exact recount), so unlike the other strategies the
     // persist pays for itself even in the map-only broadcast regime —
-    // r14 interleaved A/B: always 11.28 s / 127 cpu-s vs never 12.90 s /
-    // 228 cpu-s (OPTIMIZATION_r14.md); valve still overrides
-    val doPersist = persistEncodedLines(triples.sparkSession,
-      autoDefault = true)
-    val lines = if (doPersist) { val l = enc.lines.persist(); l.count(); l }
-                else enc.lines
-    val keys = pairKeys(lines, splitThreshold)
-    val cinds = decodeCinds(enc.dict,
-      expandCounts(sketchPrunedKeys(keys, minSupport, expectedPairs)), minSupport,
-      enc.nDict)
-    val out = arRules.fold(cinds)(rules => arImpliedCindFilter(cinds.toDF(), rules))
-    graft.core.CacheOps.cacheResult(out,
-      (if (doPersist) Seq(lines) else Nil) ++ enc.internal)
-  }
+    // r14 interleaved A/B: persisted 11.28 s / 127 cpu-s vs recomputed
+    // 12.90 s / 228 cpu-s (OPTIMIZATION_r14.md)
+    discover(triples, minSupport, bloomConditions, bloomCaptures,
+        expectedFrequentKeys, projections, arRules, persistLines = true) { enc =>
+      Evidence(expandCounts(sketchPrunedKeys(
+        pairKeys(enc.lines, splitThreshold), minSupport, expectedPairs)))
+    }
 
   /** Spectral-sketch pruning of an unordered pair-key stream (the shared
     * round-1 of the half-approximate strategies; reference E4/E5 extract,
@@ -1081,7 +977,7 @@ object CindEngine {
       it.foreach(s.add) // long-key path: no per-key String allocation
       Iterator.single(s.cells)
     }(spark.implicits.newLongArrayEncoder)
-    // executor-side tree merge (see buildBloom): cell arrays are MBs each,
+    // executor-side tree merge (see buildBloomLongs): cell arrays are MBs each,
     // funnelling them all through the driver is the scale bottleneck; and
     // treeReduce (not treeAggregate) so the MB-sized zero array is not
     // serialized into every task closure
@@ -1137,33 +1033,31 @@ object CindEngine {
       projections: String = "spo",
       arRules: Option[DataFrame] = None): Dataset[CindRow] = {
     require(spillThreshold > 0, "spillThreshold must be positive")
-    val spark = triples.sparkSession
+    discover(triples, minSupport, bloomConditions, bloomCaptures,
+      expectedFrequentKeys, projections, arRules)(hybridEvidence(_, minSupport, spillThreshold))
+  }
+
+  /** [[allCindsHybrid]]'s evidence step: both rounds, n = the dep's line
+    * count. */
+  private def hybridEvidence(enc: EncodedLines, minSupport: Int, spill: Int): Evidence = {
+    val lines = enc.lines
+    val spark = lines.sparkSession
     import spark.implicits._
-    val enc = encodedJoinLines(triples, minSupport, bloomConditions,
-      arRules = arRules, bloomCaptures = bloomCaptures,
-      expectedCaptures = expectedFrequentKeys, projections = projections)
-    val (dict, nDict) = (enc.dict, enc.nDict)
-    // round 1 + round 2 both read the lines — same valve-adjudicated
-    // persist rule as allCinds (map-only lines recompute cheaper)
-    val doPersist = persistEncodedLines(spark, autoDefault = !enc.linesMapOnly)
-    val lines = if (doPersist) { val l = enc.lines.persist(); l.count(); l }
-                else enc.lines
     // ONE shared BF geometry: bitwise AND of filters is only meaningful
     // when every evidence uses the same (numBits, numHashes). Sized from
     // the spill threshold, not the data: a hub line saturates its filter
     // (admits everything) and degrades to the exact round-2 path for its
     // deps — graceful, never wrong.
-    val proto = graft.core.Bloom.create(math.max(1024L, spillThreshold * 8L), 0.05)
+    val proto = graft.core.Bloom.create(math.max(1024L, spill * 8L), 0.05)
     val (nb, nh) = (proto.numBits, proto.numHashes)
     val words = (nb + 63) >>> 6
-    val spill = spillThreshold
     // support-monotonicity evidence prune (r13, see supportPruneMaxIds):
     // the narrow arm drops refs poorer than their dep BEFORE the evidence
     // exchange. A dep whose whole line prunes away still EMITS an
     // empty-refs exact evidence — reduce() treats it as an exact arm and
     // zeroes the intersection, which is the truth (no ref survives a line
     // where none is feasible... and none is, by monotonicity).
-    val bcSup = spark.sparkContext.broadcast(supportArray(dict, nDict))
+    val bcSup = spark.sparkContext.broadcast(supportArray(enc.dict, enc.nDict))
     val evid = lines.select(col("ids")).as[Array[Long]].flatMap { ids0 =>
       val ids = ids0.sorted
       val sup = bcSup.value
@@ -1196,10 +1090,12 @@ object CindEngine {
       .filter(_._2.count >= minSupport) // belt: dict deps satisfy this anyway
       .persist()
     agged.count() // exact split + unsure collect both read this
+    // n = lines holding dep, i.e. its support: every surviving pair of an
+    // intersection over ALL of dep's lines is at full support
     val exactPairs = agged.flatMap { case (dep, s) =>
-      if (!s.hasBits) s.refs.iterator.map(r => (dep, r))
+      if (!s.hasBits) s.refs.iterator.map(r => (dep, r, s.count))
       else Iterator.empty
-    }.toDF("dep_id", "ref_id")
+    }.toDF("dep_id", "ref_id", "n")
     // unsure deps -> driver: per dep either the BF-filtered exact candidate
     // array or (dep seen ONLY in wide lines) the intersected bits
     val exactCands = new java.util.HashMap[java.lang.Long, Array[Long]]()
@@ -1241,23 +1137,9 @@ object CindEngine {
     }
     val verifiedPairs = round2.groupByKey(_.dep).agg(IntersectLongRefs.toColumn)
       .flatMap { case (dep, s) =>
-        s.refs.iterator.map(r => (dep, r)) }
-      .toDF("dep_id", "ref_id")
-    // decode reuses the count==support filter trivially: every surviving
-    // pair IS at full support by construction of the intersections
-    // size-conditional dict hint (the decodeCinds policy): this
-    // projection is two longs per dict row, so it stays hintable well
-    // past the string dict's regime — same threshold keeps one policy
-    val supSide = dict.select(col("id").as("dep_id"), col("support").as("sup_"))
-    val withN = exactPairs.unionByName(verifiedPairs)
-      .join(if (nDict <= dictEncodeMaxBroadcastRows(spark))
-          broadcast(supSide) else supSide,
-        "dep_id")
-      .select(col("dep_id"), col("ref_id"), col("sup_").as("n"))
-    val cinds = decodeCinds(dict, withN, minSupport, nDict)
-    val out = arRules.fold(cinds)(rules => arImpliedCindFilter(cinds.toDF(), rules))
-    graft.core.CacheOps.cacheResult(out,
-      (if (doPersist) Seq(lines) else Nil) ++ Seq(agged) ++ enc.internal)
+        s.refs.iterator.map(r => (dep, r, s.count)) }
+      .toDF("dep_id", "ref_id", "n")
+    Evidence(exactPairs.unionByName(verifiedPairs), Seq(agged))
   }
 
   /** Directed pair counts over encoded join lines, map-side-filtered by a
@@ -1270,23 +1152,13 @@ object CindEngine {
     * (see [[allCindsSmallToLarge]]). Over-admission is harmless — a pair
     * that later passes count == support is by definition a true CIND. */
   private def filteredPairCounts(lines: DataFrame,
-      pairPred: (Column, Column) => Column, splitThreshold: Int): DataFrame = {
-    val narrow = lines.filter(size(col("ids")) <= splitThreshold)
-      .select(explode(col("ids")).as("dep"), col("ids"))
-    val wide = lines.filter(size(col("ids")) > splitThreshold)
-      .select(col("ids"), explode(sequence(lit(0),
-        floor((size(col("ids")) - 1) / lit(splitThreshold)).cast("int"))).as("slice"))
-      .repartition() // round-robin the few replicated hub slices
-      .select(explode(slice(col("ids"), col("slice") * splitThreshold + 1,
-        lit(splitThreshold))).as("dep"), col("ids"))
-    narrow.unionAll(wide)
-      .select(col("dep"), explode(col("ids")).as("ref"))
+      pairPred: (Column, Column) => Column, splitThreshold: Int): DataFrame =
+    linePairs(lines, splitThreshold)
       .filter(col("dep") =!= col("ref") && pairPred(col("dep"), col("ref")))
       .select((shiftleft(col("dep"), 32) + col("ref")).as("dpk"))
       .groupBy("dpk").agg(count(lit(1)).as("n"))
       .select(shiftright(col("dpk"), 32).as("dep_id"),
         col("dpk").bitwiseAND(lit(0xFFFFFFFFL)).as("ref_id"), col("n"))
-  }
 
   /** Small-to-large staged discovery — the reference's DEFAULT traversal
     * (strategy 1, plan/SmallToLargeTraversalStrategy.scala:38-171),
@@ -1340,18 +1212,18 @@ object CindEngine {
       bloomCaptures: Boolean = false,
       expectedFrequentKeys: Long = 10000000L,
       projections: String = "spo",
-      arRules: Option[DataFrame] = None): Dataset[CindRow] = {
-    val spark = triples.sparkSession
+      arRules: Option[DataFrame] = None): Dataset[CindRow] =
+    discover(triples, minSupport, bloomConditions, bloomCaptures,
+      expectedFrequentKeys, projections, arRules)(smallToLargeEvidence(_, minSupport, splitThreshold))
+
+  /** [[allCindsSmallToLarge]]'s evidence step: the three stages' counts.
+    * The stage-internal `n == support` filters only build the next stage's
+    * probe filters; the result is certified by the skeleton's decode. */
+  private def smallToLargeEvidence(enc: EncodedLines, minSupport: Int,
+      splitThreshold: Int): Evidence = {
+    val (lines, dict, nDictL) = (enc.lines, enc.dict, enc.nDict)
+    val spark = lines.sparkSession
     import spark.implicits._
-    val enc = encodedJoinLines(triples, minSupport, bloomConditions,
-      arRules = arRules, bloomCaptures = bloomCaptures,
-      expectedCaptures = expectedFrequentKeys, projections = projections)
-    val (dict, nDictL) = (enc.dict, enc.nDict)
-    // stage-1 fan-out + both extractions read the lines — same
-    // valve-adjudicated persist rule as allCinds
-    val doPersist = persistEncodedLines(spark, autoDefault = !enc.linesMapOnly)
-    val lines = if (doPersist) { val l = enc.lines.persist(); l.count(); l }
-                else enc.lines
     val unaryBit = (id: Column) => id.bitwiseAND(lit(1L))
     def pk(a: Column, b: Column) = shiftleft(a, 32) + b
     // ---- stage 1: unary×unary overlaps (arity bit filters lines map-side)
@@ -1380,7 +1252,7 @@ object CindEngine {
       .select(col("id"), col("sub1_id"), col("sub2_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // dense ARRAYS indexed by (id >> 1) - 1: dictionary ids are dense by
-    // construction (zipWithIndex), so the lookup is O(1) — a MAP would be
+    // construction (dictWithIds), so the lookup is O(1) — a MAP would be
     // an O(|dict|) linear scan per probe, which at 4 lookups per emitted
     // pair dominated the whole extraction. Unary slots hold 0 (never a
     // valid id); every probe using them is already vetoed by the arity
@@ -1462,49 +1334,35 @@ object CindEngine {
       .filter(size(col("ids")) > 1)
     val countsB = filteredPairCounts(binaryLines,
       (d, r) => binPred(d, r) && supPred(d, r), splitThreshold)
-    // ---- assemble: one decode; count==support + trivial-ref filter live there
-    val cinds = decodeCinds(dict,
-      c11.unionByName(countsA).unionByName(countsB), minSupport, nDictL)
-    val out = arRules.fold(cinds)(rules => arImpliedCindFilter(cinds.toDF(), rules))
-    // materialize the compact CIND result, then release the staged caches —
-    // without this every call leaks lines/c11/countsA blocks for the session
-    graft.core.CacheOps.cacheResult(out,
-      (if (doPersist) Seq(lines) else Nil) ++ Seq(c11, countsA) ++ enc.internal)
+    // ---- assemble: the skeleton's one decode applies count==support and
+    // the trivial-ref filter, then releases c11/countsA
+    Evidence(c11.unionByName(countsA).unionByName(countsB), Seq(c11, countsA))
   }
 
   /** Strategy 0 (AllAtOnce, reference plan/AllAtOnceTraversalStrategy
-    * .scala:33-85): evidence sets per dependent capture, k-way sorted-set
-    * intersection via a typed Aggregator. Semantically identical to
-    * `allCinds` (cross-checked in CindEngineSpec); kept as the faithful
-    * intersect-merge shape — preferable when join lines are wide but
-    * evidence arrays are short. */
+    * .scala:33-85): per join line, one evidence per member capture — its
+    * sorted co-occurring ids — and a k-way sorted-set intersection per
+    * dependent capture via the [[IntersectLongRefs]] Aggregator; n is the
+    * dep's line count. Runs on the shared encoded lines (ids, not string
+    * captures), result-identical to `allCinds` (cross-checked in
+    * CindEngineSpec); trivially implied refs drop at decode. Preferable
+    * when join lines are wide but evidence arrays stay short. */
   def allCindsIntersect(triples: DataFrame, minSupport: Int = DefaultMinSupport,
       bloomConditions: Boolean = false,
       expectedFrequentKeys: Long = 10000000L,
       projections: String = "spo",
       arRules: Option[DataFrame] = None): Dataset[CindRow] = {
     import triples.sparkSession.implicits._
-    val instances0 =
-      if (bloomConditions)
-        bloomPrunedCaptureInstances(triples, minSupport, expectedFrequentKeys, projections)
-      else prunedCaptureInstances(triples, minSupport, projections)
-    // same AR fan-out anti-join the encoded path applies (see encodedJoinLines)
-    val instances = arRules match {
-      case Some(rules) => instances0.join(broadcast(arImpliedConditions(rules)),
-        Seq("cond_code", "v1", "v2"), "left_anti")
-      case None => instances0
-    }
-    val freqCaps = frequentCaptures(instances, minSupport)
-    val lines = joinLines(instances, freqCaps)
-    val cinds = evidences(lines)
-      .groupByKey(_.dep)
-      .agg(IntersectCindCandidates.toColumn)
-      .filter(_._2.count >= minSupport)
-      .flatMap { case (dep, cs) =>
-        cs.refs.iterator.map(r =>
-          CindRow(dep.code, dep.v1, dep.v2, r.code, r.v1, r.v2, cs.count))
+    discover(triples, minSupport, bloomConditions, bloomCaptures = false,
+        expectedFrequentKeys, projections, arRules) { enc =>
+      val evid = enc.lines.select(col("ids")).as[Array[Long]].flatMap { ids0 =>
+        val ids = ids0.sorted
+        ids.iterator.map(dep => LongRefsEvidence(dep, ids.filter(_ != dep)))
       }
-    arRules.fold(cinds)(rules => arImpliedCindFilter(cinds.toDF(), rules))
+      Evidence(evid.groupByKey(_.dep).agg(IntersectLongRefs.toColumn)
+        .flatMap { case (dep, s) => s.refs.iterator.map(r => (dep, r, s.count)) }
+        .toDF("dep_id", "ref_id", "n"))
+    }
   }
 
   /** Association rules with confidence 1.0 between unary conditions
@@ -1611,13 +1469,6 @@ object CindEngine {
   }
 }
 
-/** Per-dependent-capture k-way intersection of sorted ref arrays, counting
-  * evidences (reference candidate_merging/IntersectCindCandidates.scala:13-52
-  * over BulkMergeDependencies.scala:21-168 — the memory-adaptive window merge
-  * collapses to pairwise sorted intersection, which Spark runs as
-  * partial+final ObjectHashAggregate automatically). `count == 0` marks the
-  * zero buffer; a real evidence always contributes count 1.
-  */
 /** Single-pass hybrid merge (reference candidate_merging/
   * IntersectHalfApproximateCindCandidates.scala:16-109): exact ref arrays
   * intersect via the sorted two-pointer walk, Bloom halves intersect by
@@ -1665,11 +1516,16 @@ object IntersectHybridCandidates
     org.apache.spark.sql.Encoders.product[HybridCindSet]
 }
 
-/** Exact sorted-intersection over pre-filtered long refs — the hybrid's
-  * refinement round (the reference refines `!isExact` CindSets in its
-  * follow-up round the same way). `count == 0` marks the zero buffer; an
-  * evidence with EMPTY refs still counts (it must zero the intersection —
-  * a line containing dep with no surviving candidate kills every ref). */
+/** Per-dependent-capture k-way intersection of sorted id arrays, counting
+  * evidences — strategy 0's merge (reference candidate_merging/
+  * IntersectCindCandidates.scala:13-52 over BulkMergeDependencies
+  * .scala:21-168: the memory-adaptive window merge collapses to pairwise
+  * sorted intersection, which Spark runs as partial+final aggregation) and
+  * the hybrid's refinement round (the reference refines `!isExact`
+  * CindSets in its follow-up round the same way). `count == 0` marks the
+  * zero buffer; an evidence with EMPTY refs still counts (it must zero the
+  * intersection — a line containing dep with no surviving candidate kills
+  * every ref). */
 object IntersectLongRefs
     extends Aggregator[LongRefsEvidence, LongRefsSet, LongRefsSet] {
   override def zero: LongRefsSet = LongRefsSet(0L, Array.empty)
@@ -1689,24 +1545,4 @@ object IntersectLongRefs
     org.apache.spark.sql.Encoders.product[LongRefsSet]
   override def outputEncoder: org.apache.spark.sql.Encoder[LongRefsSet] =
     org.apache.spark.sql.Encoders.product[LongRefsSet]
-}
-
-object IntersectCindCandidates extends Aggregator[CindEvidence, CindSet, CindSet] {
-  override def zero: CindSet = CindSet(0L, Array.empty)
-
-  override def reduce(b: CindSet, e: CindEvidence): CindSet =
-    if (b.count == 0L) CindSet(1L, e.refs)
-    else CindSet(b.count + 1L, SortedOps.intersect(b.refs, e.refs))
-
-  override def merge(a: CindSet, b: CindSet): CindSet =
-    if (a.count == 0L) b
-    else if (b.count == 0L) a
-    else CindSet(a.count + b.count, SortedOps.intersect(a.refs, b.refs))
-
-  override def finish(r: CindSet): CindSet = r
-
-  override def bufferEncoder: org.apache.spark.sql.Encoder[CindSet] =
-    org.apache.spark.sql.Encoders.product[CindSet]
-  override def outputEncoder: org.apache.spark.sql.Encoder[CindSet] =
-    org.apache.spark.sql.Encoders.product[CindSet]
 }

@@ -31,9 +31,9 @@ object StreamDriver {
     * a micro-batch pays per-partition fixed cost — a stateful task, an
     * HDFS-backed state store open + delta-file commit, scheduler overhead
     * — on EVERY batch, so tiny fixture states on 32 partitions were
-    * mostly overhead (interleaved A/B, tools/Exp4: six stream queries ran
-    * 1.8-2.3x faster at the data-derived count; table in
-    * OPTIMIZATION_r14.md). The count is ceil(rows / rowsPerStatePartition)
+    * mostly overhead (interleaved A/B: six stream queries ran 1.8-2.3x
+    * faster at the data-derived count; BASELINE.md "Retired experiment
+    * mains"). The count is ceil(rows / rowsPerStatePartition)
     * — data-derived, so it GROWS with input at scale (10M rows → 200
     * partitions at the default target) and is independent of the local
     * core count (the bench's 8-core and 32-core runs see the same plan).

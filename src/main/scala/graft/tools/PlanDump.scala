@@ -10,6 +10,8 @@ import java.nio.file.{Files, Paths}
   * once with a count() first), so join strategies and AQE reads reflect
   * what actually ran, not pre-runtime placeholders. Runs at the bench's
   * core count / shuffle-partition config so plans match bench conditions.
+  * Plans are written normalised (see [[normalise]]) so that before/after
+  * dumps of an unchanged plan diff to empty.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -33,7 +35,7 @@ object PlanDump {
         df.count() // finalize the adaptive plan
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
+        Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), normalise(txt))
         System.err.println(s"[plandump] wrote ${name}_$suffix.txt")
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $name FAILED: $e")
@@ -41,4 +43,21 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  /** Strips what differs between two runs of an unchanged plan:
+    * expression ids (`code#123`), exchange plan ids, whole-stage-codegen
+    * and adaptive query-stage ids (numbered in materialization order,
+    * which parallel broadcasts race), RDD and broadcast-variable ids
+    * (session-wide counters, shifted by every earlier query), call-site
+    * line numbers, and lambda class names and object hash codes. */
+  def normalise(plan: String): String = Seq(
+    "#\\d+" -> "#",
+    "plan_id=\\d+" -> "plan_id=",
+    "codegen id : \\d+" -> "codegen id : ",
+    "(?m)^Arguments: \\d+$" -> "Arguments: ",
+    "RDD\\[\\d+\\] at (\\S+) at (\\S+)\\.scala:\\d+" -> "RDD[] at $1 at $2.scala",
+    "Broadcast\\(\\d+\\)" -> "Broadcast()",
+    "\\$Lambda\\$\\d+/0x[0-9a-f]+" -> "\\$Lambda",
+    "@[0-9a-f]{4,}\\b" -> "@")
+    .foldLeft(plan) { case (p, (re, to)) => p.replaceAll(re, to) }
 }

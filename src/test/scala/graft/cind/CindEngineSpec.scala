@@ -56,12 +56,60 @@ class CindEngineSpec extends SparkSpec {
       .map(r => (Capture(r.dep_code, r.dep_v1, r.dep_v2),
         Capture(r.ref_code, r.ref_v1, r.ref_v2), r.support)).toSet
     val (bExact, bBloom) = (run(), runBloom())
+    // the regime where the strategy skeleton persists the encoded lines:
+    // every strategy's evidence step must read them there too
+    def key(r: CindRow) = (Capture(r.dep_code, r.dep_v1, r.dep_v2),
+      Capture(r.ref_code, r.ref_v1, r.ref_v2), r.support)
+    val strategies: Seq[(String, () => Set[(Capture, Capture, Long)])] = Seq(
+      "tworound" -> (() => CindEngine.allCindsTwoRound(toDF(tiny), minSupport = 2)
+        .collect().map(key).toSet),
+      "hybrid" -> (() => CindEngine.allCindsHybrid(toDF(tiny), minSupport = 2,
+        spillThreshold = 2).collect().map(key).toSet),
+      "small-to-large" -> (() => CindEngine.allCindsSmallToLarge(toDF(tiny),
+        minSupport = 2).collect().map(key).toSet),
+      "intersect" -> (() => CindEngine.allCindsIntersect(toDF(tiny), minSupport = 2)
+        .collect().map(key).toSet))
     spark.conf.set("spark.graft.cind.dictEncodeMaxBroadcastRows", "0")
     try {
       assert(run() == bExact)
       assert(runBloom() == bBloom)
+      for ((name, strategy) <- strategies)
+        assert(strategy() == bruteForce(tiny, 2), name)
     } finally spark.conf.unset("spark.graft.cind.dictEncodeMaxBroadcastRows")
     assert(bExact == bruteForce(tiny, 2))
+  }
+
+  test("every strategy and join-line statistic leaves only its result cached, in both encode regimes") {
+    // library entry points on a long-lived session: each call holds exactly
+    // one new cached relation — the returned Dataset — and the caller's
+    // unpersist() releases it, so no internal persist outlives the call
+    import org.apache.spark.sql.graft.CacheProbe
+    def held() = (CacheProbe.entries(spark), spark.sparkContext.getPersistentRDDs.keySet.toSet)
+    val calls: Seq[(String, () => org.apache.spark.sql.Dataset[_])] = Seq(
+      "count-match" -> (() => CindEngine.allCinds(toDF(tiny), minSupport = 2)),
+      "tworound" -> (() => CindEngine.allCindsTwoRound(toDF(tiny), minSupport = 2)),
+      "hybrid" -> (() => CindEngine.allCindsHybrid(toDF(tiny), minSupport = 2,
+        spillThreshold = 2)),
+      "small-to-large" -> (() => CindEngine.allCindsSmallToLarge(toDF(tiny), minSupport = 2)),
+      "intersect" -> (() => CindEngine.allCindsIntersect(toDF(tiny), minSupport = 2)),
+      "joinLineHistogram" -> (() => CindEngine.joinLineHistogram(toDF(tiny), minSupport = 2)),
+      "unaryOverlaps" -> (() => CindEngine.unaryOverlaps(toDF(tiny), minSupport = 2)))
+    for (fallback <- Seq(false, true); (name, call) <- calls) {
+      val ctx = s"$name (shuffle-join encode: $fallback)"
+      if (fallback) spark.conf.set("spark.graft.cind.dictEncodeMaxBroadcastRows", "0")
+      try {
+        val (n0, rdds0) = held()
+        val out = call()
+        val (n1, rdds1) = held()
+        assert(n1 == n0 + 1, ctx)
+        assert(CacheProbe.isCached(spark, out), ctx)
+        assert((rdds1 -- rdds0).size == 1, ctx)
+        out.unpersist()
+        val (n2, rdds2) = held()
+        assert(n2 == n0, ctx)
+        assert((rdds2 -- rdds0).isEmpty, ctx)
+      } finally spark.conf.unset("spark.graft.cind.dictEncodeMaxBroadcastRows")
+    }
   }
 
   test("support-monotonicity prune is result-identical on hybrid and s2l") {

@@ -32,11 +32,14 @@ object RandomizedCindProps extends Properties("graft.cind.e2e") {
       import spark.implicits._
       val df = ts.toDF("subj", "pred", "obj")
       val got = CindEngine.allCinds(df, minSupport = 2).collect().map(key).toSet
+      // strategy 0's k-way intersection over the same encoded lines
+      val gotIntersect = CindEngine.allCindsIntersect(df, minSupport = 2)
+        .collect().map(key).toSet
       val want = BruteForce(ts, 2)
-      if (got != want) {
-        println(s"triples=$ts\nmissing=${want -- got}\nextra=${got -- want}")
-      }
-      got == want
+      for ((name, g) <- Seq("count-match" -> got, "intersect" -> gotIntersect)
+           if g != want)
+        println(s"$name triples=$ts\nmissing=${want -- g}\nextra=${g -- want}")
+      got == want && gotIntersect == want
     }
 
   property("two-round strategy matches brute force on random multisets") =
