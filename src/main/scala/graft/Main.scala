@@ -191,16 +191,20 @@ object Main {
   }
 
   /** Inputs above which `--strategy auto` switches from count-match to the
-    * single-pass hybrid merge. The crossover is measured (BASELINE.md "10x
-    * scale soak"): count-match wins below ~sf1 (its single pair-count
-    * shuffle beats everything on small dictionaries), but that Exchange
-    * shuffles every co-occurrence it counts — at 23M triples the hybrid is
-    * 10.4x faster with 15x less shuffle, because its combiner-side
-    * intersection collapses each dependent's evidence to ONE bounded
-    * buffer per map task before the shuffle (exactly why the reference
-    * built its hybrid buffers), with small-to-large (2.9x, probe-pruned)
-    * the runner-up. 10M sits safely inside the measured win region on
-    * both sides. */
+    * single-pass hybrid merge. The crossover was measured (BASELINE.md "10x
+    * scale soak") when count-match still counted pairs with a hash
+    * aggregate: count-match won below ~sf1 (its single pair-count shuffle
+    * beat everything on small dictionaries), but that exchange shuffled a
+    * row per distinct co-occurring pair per map task — at 23M triples the
+    * hybrid was 10.4x faster with 15x less shuffle, because its
+    * combiner-side intersection collapses each dependent's evidence to ONE
+    * bounded buffer per map task before the shuffle (exactly why the
+    * reference built its hybrid buffers), with small-to-large (2.9x,
+    * probe-pruned) the runner-up. The sort-based PairCounts kernel now
+    * ships a few bytes per distinct pair instead (hub_lines: 23.8 → 2.6 MB
+    * of evidence shuffle, BASELINE.md), so the crossover may have moved;
+    * it is not re-measured at scale, and 10M stays until that soak is
+    * re-run. */
   val AutoStrategyTriplesCutoff = 10000000L
 
   /** `--strategy auto`: count-match for small inputs, hybrid at scale,

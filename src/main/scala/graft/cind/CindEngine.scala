@@ -74,8 +74,9 @@ private[cind] final case class Evidence(counts: DataFrame,
   *     -> dedup + capture dictionary       (persisted; dense int IDs; support
   *                                          filter; ref: RDFind.scala:348-400)
   *     -> join lines: groupBy(value)       (collect_list of ids; ref: UnionJoinCandidates)
-  *     -> pair co-occurrence counts        (unordered-pair explode, skew split,
-  *                                          packed longs; ref: overlap sets)
+  *     -> pair co-occurrence counts        (PairCounts kernel: sorted runs,
+  *                                          delta-coded blocks, support floor
+  *                                          at the merge; ref: overlap sets)
   *     -> CINDs: co-count == dep support   (ref: SmallToLargeTraversalStrategy.scala:63-105)
   *
   * Every strategy runs on one skeleton ([[discover]], the reference's
@@ -339,8 +340,8 @@ object CindEngine {
     * co-count(dep, ref) == support(dep), and co-count <= support(ref), so a
     * ref poorer than its dep can never certify (the same monotonicity that
     * justifies the reported-CIND support ordering above). Only DIRECTIONAL
-    * emissions can use it — an unordered count-match pair key (pairKeys)
-    * always has one feasible direction, so nothing is droppable there.
+    * emissions can use it — an unordered pair key of the [[PairCounts]]
+    * kernel always has one feasible direction, so nothing is droppable there.
     * Cost: 8 B/capture on each executor ((id >> 1)-indexed longs), hence
     * its own valve; past it the prune is skipped (pure optimization). */
   val DefaultSupportPruneMaxIds = 16000000L
@@ -636,10 +637,11 @@ object CindEngine {
     * splitting (co-occurrence counting is emission-order-insensitive). */
   val SplitThreshold = 1024
 
-  /** The skew-split pair emitter shared by every pair-counting evidence
-    * step: one (dep, ref) row per ordered pair of ids co-occurring in a
-    * join line (including dep == ref). Wide lines are sliced first (see
-    * [[SplitThreshold]]), narrow lines emit directly. */
+  /** The skew-split DIRECTED pair emitter of [[filteredPairCounts]]: one
+    * (dep, ref) row per ordered pair of ids co-occurring in a join line
+    * (including dep == ref). Wide lines are sliced first (see
+    * [[SplitThreshold]]), narrow lines emit directly. Unordered pair counts
+    * go through the [[PairCounts]] kernel instead. */
   private def linePairs(lines: DataFrame, splitThreshold: Int): DataFrame = {
     val narrow = lines.filter(size(col("ids")) <= splitThreshold)
       .select(explode(col("ids")).as("dep"), col("ids"))
@@ -653,23 +655,15 @@ object CindEngine {
       .select(col("dep"), explode(col("ids")).as("ref"))
   }
 
-  /** Unordered-pair key stream: one packed long `pk = dep<<32 | ref`
-    * (dep < ref) per (capture pair, join line) co-occurrence. Counts are
-    * direction-symmetric, so each unordered pair is emitted once (halving
-    * the quadratic fan-out) and [[expandCounts]] restores both directions
-    * after aggregation. */
-  private def pairKeys(lines: DataFrame, splitThreshold: Int): DataFrame =
-    linePairs(lines, splitThreshold)
-      .filter(col("dep") < col("ref"))
-      .select((shiftleft(col("dep"), 32) + col("ref")).as("pk"))
-
-  /** Aggregate unordered pair keys and expand to directed
-    * (dep_id, ref_id, n), n = number of join lines containing both. This
-    * relation IS the reference's OverlapSet (data/OverlapSet.scala, built
-    * by MultiunionOverlapCandidates): overlap(dep, ref) = n. */
-  private def expandCounts(keys: DataFrame): DataFrame =
-    keys
-      .groupBy("pk").agg(count(lit(1)).as("n"))
+  /** Expand the [[PairCounts]] kernel's unordered `(pk, n)` counts to
+    * directed (dep_id, ref_id, n), n = number of join lines containing
+    * both. Counts are direction-symmetric, so the kernel counts each
+    * unordered pair once (halving the quadratic fan-out) and both
+    * directions are restored here, after its support floor. This relation
+    * IS the reference's OverlapSet (data/OverlapSet.scala, built by
+    * MultiunionOverlapCandidates): overlap(dep, ref) = n. */
+  private def expandCounts(counts: DataFrame): DataFrame =
+    counts
       .select(explode(array(
         struct(shiftright(col("pk"), 32).as("dep_id"),
           col("pk").bitwiseAND(lit(0xFFFFFFFFL)).as("ref_id")),
@@ -693,18 +687,20 @@ object CindEngine {
       filter(col("ids"), id => id.bitwiseAND(lit(1L)) === 1L).as("ids"))
       .filter(size(col("ids")) > 1)
     val internal = Seq.newBuilder[Dataset[_]]
-    val keys =
-      if (!sketch) pairKeys(unaryLines, SplitThreshold)
+    // overlaps below minSupport can never certify a CIND nor survive the
+    // reference's candidate filters — the kernel's support floor keeps the
+    // materialized relation proportional to the useful candidates
+    val counts =
+      if (!sketch) PairCounts(unaryLines, minSupport, SplitThreshold)
       else {
         // overlap-side sketch (reference E4/E5/A4/G6, the strategy-1 scale
-        // valve): prune the pair-key stream before its shuffle so the
-        // materialized overlap relation stays proportional to the frequent
-        // candidates, not to every co-occurrence
+        // valve): prune the pair keys before they are buffered, so the
+        // shuffle carries the frequent candidates, not every co-occurrence
         val cached = unaryLines.persist()
         cached.count() // sketch pass + count pass both read the lines
         internal += cached
-        val raw = pairKeys(cached, SplitThreshold)
-        sketchPrunedKeys(raw, minSupport, expectedPairs)
+        PairCounts(cached, minSupport, SplitThreshold,
+          admit = sketchAdmit(cached, minSupport, expectedPairs, SplitThreshold))
       }
     val unary = enc.dict.filter(col("v2") === "")
     val depSide = unary.select(col("id").as("dep_id"), col("code").as("dep_code"),
@@ -716,11 +712,7 @@ object CindEngine {
     // plan), plain partitioned joins past it (a forced hint there is the
     // first thing to die at 100x)
     def hinted(side: DataFrame) = if (enc.broadcast) broadcast(side) else side
-    val out = expandCounts(keys)
-      // overlaps below minSupport can never certify a CIND nor survive the
-      // reference's candidate filters — dropping them pre-decode keeps the
-      // materialized relation proportional to the useful candidates
-      .filter(col("n") >= minSupport)
+    val out = expandCounts(counts)
       .join(hinted(depSide), "dep_id")
       .join(hinted(refSide), "ref_id")
       .select(col("dep_code"), col("dep_v1"), col("ref_code"), col("ref_v1"),
@@ -792,13 +784,13 @@ object CindEngine {
     * evidence step's parallel stage materializations read a filled cache)
     * iff recomputing them shuffles — the salted regroup shapes — or the
     * strategy asks for it (`persistLines`, two-round). Pair fan-outs read
-    * the lines once per union arm (pairKeys' narrow and wide branches'
+    * the lines once per union arm (the narrow and wide skew-split branches'
     * differing pushed-down projections defeat exchange reuse): the r13 job
     * profile showed the whole regroup subtree EXECUTING 4x there. In the
     * broadcast-map regime the lines are a pure map over the cached lines0,
     * and re-running that map per consumer measured CHEAPER than writing +
     * count-barriering a second full copy (r14 A/B, OPTIMIZATION_r14.md). */
-  private def discover(triples: DataFrame, minSupport: Int,
+  private[cind] def discover(triples: DataFrame, minSupport: Int,
       bloomConditions: Boolean, bloomCaptures: Boolean,
       expectedFrequentKeys: Long, projections: String,
       arRules: Option[DataFrame], persistLines: Boolean = false)(
@@ -828,15 +820,17 @@ object CindEngine {
     * Count-match formulation (the reference's own overlap==count trick,
     * plan/SmallToLargeTraversalStrategy.scala:63-105, generalized to all
     * arities): `dep ⊑ ref` iff the number of join lines containing BOTH
-    * equals dep's support. The evidence step is relational — explode
-    * fan-outs and one hash aggregate over packed-long pair keys — so it
-    * runs inside whole-stage codegen with map-side partial aggregation and
-    * O(1) state per key; the intersect strategy's buffer instead holds a
-    * ref ARRAY whose size is unbounded on hub-heavy data. Frequent-capture
-    * pruning (support >= minSupport on BOTH sides — sound because a
-    * reported ref's value set contains its dep's, so its support is >=
-    * dep's) is what keeps hub join lines narrow and the pair fan-out
-    * quadratic-safe. */
+    * equals dep's support. The evidence step is the [[PairCounts]] kernel:
+    * each map task sorts its unordered pair keys in a primitive buffer and
+    * ships run-length counted, delta-varint coded blocks; the reduce side
+    * merges them per hash bucket and drops every count below minSupport
+    * before [[expandCounts]] restores both directions. State is a fixed
+    * buffer per map task and one bucket's blocks per reduce task; the
+    * intersect strategy's buffer instead holds a ref ARRAY whose size is
+    * unbounded on hub-heavy data. Frequent-capture pruning (support >=
+    * minSupport on BOTH sides — sound because a reported ref's value set
+    * contains its dep's, so its support is >= dep's) is what keeps hub
+    * join lines narrow and the pair fan-out quadratic-safe. */
   def allCinds(triples: DataFrame, minSupport: Int = DefaultMinSupport,
       splitThreshold: Int = SplitThreshold,
       bloomConditions: Boolean = false,
@@ -845,9 +839,12 @@ object CindEngine {
       projections: String = "spo",
       arRules: Option[DataFrame] = None): Dataset[CindRow] =
     discover(triples, minSupport, bloomConditions, bloomCaptures,
-        expectedFrequentKeys, projections, arRules) { enc =>
-      Evidence(expandCounts(pairKeys(enc.lines, splitThreshold)))
-    }
+      expectedFrequentKeys, projections, arRules)(countMatchEvidence(_, minSupport, splitThreshold))
+
+  /** [[allCinds]]' evidence step: the kernel's floored pair counts. */
+  private[cind] def countMatchEvidence(enc: EncodedLines, minSupport: Int,
+      splitThreshold: Int, sizes: PairCounts.Sizes = PairCounts.Sizes()): Evidence =
+    Evidence(expandCounts(PairCounts(enc.lines, minSupport, splitThreshold, sizes = sizes)))
 
   /** A rule's merged binary condition as (cond_code, v1, v2), values ordered
     * by attribute code (reference CreateJoinPartners.scala:183-196). */
@@ -912,13 +909,14 @@ object CindEngine {
     * LateBBTraversalStrategy.scala:24-123, re-expressed for the count-match
     * plan):
     *
-    *   round 1 — stream the unordered pair keys through per-partition
-    *     SPECTRAL Bloom filters (saturating counting sketch, cell width from
-    *     minSupport as in the reference), merge cell-wise, collapse with
-    *     `toBloomFilter(minSupport)` (the reference's own G6 move) and
-    *     broadcast. No shuffle: the sketch rides the map side.
-    *   round 2 — re-emit pair keys, keep only keys the filter admits, run
-    *     the exact count-match on the survivors.
+    *   round 1 — stream the [[PairCounts]] kernel's pair enumerator
+    *     through per-partition SPECTRAL Bloom filters (saturating counting
+    *     sketch, cell width from minSupport as in the reference), merge
+    *     cell-wise, collapse with `toBloomFilter(minSupport)` (the
+    *     reference's own G6 move) and broadcast. No shuffle: the sketch
+    *     rides the map side.
+    *   round 2 — the exact kernel count, with the filter as its admit
+    *     predicate: only admitted keys are buffered and shuffled.
     *
     * A CIND pair co-occurs >= minSupport times and the sketch never
     * under-counts (cell saturation caps at >= minSupport by construction),
@@ -940,42 +938,54 @@ object CindEngine {
       expectedFrequentKeys: Long = 10000000L,
       projections: String = "spo",
       arRules: Option[DataFrame] = None): Dataset[CindRow] =
-    // both rounds re-run the FULL O(w^2) pair explode over the lines
+    // both rounds re-run the FULL O(w^2) pair enumeration over the lines
     // (sketch build + exact recount), so unlike the other strategies the
     // persist pays for itself even in the map-only broadcast regime —
     // r14 interleaved A/B: persisted 11.28 s / 127 cpu-s vs recomputed
     // 12.90 s / 228 cpu-s (OPTIMIZATION_r14.md)
     discover(triples, minSupport, bloomConditions, bloomCaptures,
-        expectedFrequentKeys, projections, arRules, persistLines = true) { enc =>
-      Evidence(expandCounts(sketchPrunedKeys(
-        pairKeys(enc.lines, splitThreshold), minSupport, expectedPairs)))
-    }
+        expectedFrequentKeys, projections, arRules, persistLines = true)(
+      twoRoundEvidence(_, minSupport, expectedPairs, splitThreshold))
 
-  /** Spectral-sketch pruning of an unordered pair-key stream (the shared
-    * round-1 of the half-approximate strategies; reference E4/E5 extract,
-    * A4 merge, G6 `EvaluateHalfApproximateOverlapSets` collapse):
+  /** [[allCindsTwoRound]]'s evidence step: sketch round, then the exact
+    * kernel count over the admitted keys. */
+  private[cind] def twoRoundEvidence(enc: EncodedLines, minSupport: Int,
+      expectedPairs: Long, splitThreshold: Int,
+      sizes: PairCounts.Sizes = PairCounts.Sizes()): Evidence =
+    Evidence(expandCounts(PairCounts(enc.lines, minSupport, splitThreshold,
+      admit = sketchAdmit(enc.lines, minSupport, expectedPairs, splitThreshold),
+      sizes = sizes)))
+
+  /** Spectral-sketch candidate filter over the unordered pair keys of
+    * `lines` (the shared round 1 of the half-approximate strategies;
+    * reference E4/E5 extract, A4 merge, G6 `EvaluateHalfApproximateOverlap
+    * Sets` collapse), returned as the kernel's admit predicate:
     *
-    *   - per-partition SPECTRAL Bloom filters count the keys map-side (no
-    *     shuffle; cell width derived from minSupport as in the reference),
+    *   - per-partition SPECTRAL Bloom filters count the kernel's enumerated
+    *     keys map-side (no shuffle; cell width derived from minSupport as
+    *     in the reference),
     *   - cells tree-merge on executors,
     *   - the sketch collapses to a membership filter of keys with count >=
-    *     minSupport (`toBloomFilter`, the reference's G6 move), broadcast,
-    *   - only admitted keys pass to the exact aggregation.
+    *     minSupport (`toBloomFilter`, the reference's G6 move), broadcast.
     *
     * Saturating counters never under-count, so every key with true count >=
     * minSupport is admitted — downstream exact filters see no change; the
     * shuffle just carries plausible candidates instead of every
     * co-occurrence. Undersizing `expectedPairs` only weakens pruning. */
-  private def sketchPrunedKeys(keys: DataFrame, minSupport: Int,
-      expectedPairs: Long): DataFrame = {
-    val spark = keys.sparkSession
-    import spark.implicits._
+  private def sketchAdmit(lines: DataFrame, minSupport: Int,
+      expectedPairs: Long, splitThreshold: Int): Long => Boolean = {
+    val spark = lines.sparkSession
     val proto = graft.core.SpectralBloomFilter.create(expectedPairs, 0.1, minSupport)
     val (nc, bpc, nh, words) = (proto.numCells, proto.bitsPerCell, proto.numHashes, proto.cells.length)
-    val cellArrays = keys.select(col("pk")).as[Long].mapPartitions { it =>
+    val cellArrays = PairCounts.foldPartitions(lines, splitThreshold) { pairs =>
       val s = new graft.core.SpectralBloomFilter(nc, bpc, nh, new Array[Long](words))
-      it.foreach(s.add) // long-key path: no per-key String allocation
-      Iterator.single(s.cells)
+      val buf = new Array[Long](4096)
+      var len = pairs.fill(buf, 0)
+      while (len > 0) {
+        var k = 0; while (k < len) { s.add(buf(k)); k += 1 }
+        len = pairs.fill(buf, 0)
+      }
+      s.cells
     }(spark.implicits.newLongArrayEncoder)
     // executor-side tree merge (see buildBloomLongs): cell arrays are MBs each,
     // funnelling them all through the driver is the scale bottleneck; and
@@ -988,10 +998,9 @@ object CindEngine {
     val merged =
       if (rdd.getNumPartitions == 0) new Array[Long](words)
       else rdd.treeReduce(mergeCells, depth = 2)
-    val candidateFilter = new graft.core.SpectralBloomFilter(nc, bpc, nh, merged)
-      .toBloomFilter(minSupport)
-    val bcast = spark.sparkContext.broadcast(candidateFilter)
-    keys.filter(bloomContains(bcast, col("pk")))
+    val bcast = spark.sparkContext.broadcast(new graft.core.SpectralBloomFilter(nc, bpc, nh, merged)
+      .toBloomFilter(minSupport))
+    pk => bcast.value.mightContain(pk)
   }
 
   /** Refs arrays longer than this spill to Bloom-filter bits in the hybrid
@@ -1219,8 +1228,8 @@ object CindEngine {
   /** [[allCindsSmallToLarge]]'s evidence step: the three stages' counts.
     * The stage-internal `n == support` filters only build the next stage's
     * probe filters; the result is certified by the skeleton's decode. */
-  private def smallToLargeEvidence(enc: EncodedLines, minSupport: Int,
-      splitThreshold: Int): Evidence = {
+  private[cind] def smallToLargeEvidence(enc: EncodedLines, minSupport: Int,
+      splitThreshold: Int, sizes: PairCounts.Sizes = PairCounts.Sizes()): Evidence = {
     val (lines, dict, nDictL) = (enc.lines, enc.dict, enc.nDict)
     val spark = lines.sparkSession
     import spark.implicits._
@@ -1230,8 +1239,8 @@ object CindEngine {
     val unaryLines = lines.select(col("join_val"),
       filter(col("ids"), id => unaryBit(id) === 1L).as("ids"))
       .filter(size(col("ids")) > 1)
-    val c11 = expandCounts(pairKeys(unaryLines, splitThreshold))
-      .filter(col("n") >= minSupport) // below minSupport certifies nothing
+    // the kernel's support floor: an overlap below minSupport certifies nothing
+    val c11 = expandCounts(PairCounts(unaryLines, minSupport, splitThreshold, sizes = sizes))
       .persist()
     val nC11 = c11.count() // 1/1 output + both stage-2 probe filters read this
     val sup = dict.select(col("id").as("dep_id"), col("support"))
@@ -1278,8 +1287,8 @@ object CindEngine {
     // support-monotonicity prune on the DIRECTIONAL stage-2/3 emissions
     // (r13, see supportPruneMaxIds): both stages verify n == support(dep),
     // so a ref poorer than its dep can never certify — drop it map-side.
-    // Stage 1 (pairKeys) is unordered and stays complete: its counts also
-    // serve as the 2/1 probes' overlap relation, and an unordered pair
+    // Stage 1 (the unordered PairCounts kernel) stays complete: its counts
+    // also serve as the 2/1 probes' overlap relation, and an unordered pair
     // always has one feasible direction anyway.
     val supArr = supportArray(dict, nDictL)
     val supPred: (Column, Column) => Column =

@@ -26,23 +26,40 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 object EventSource {
 
-  /** Footer schema per events path, inferred ONCE per JVM: `events` is
-    * deliberately absent from Tables' pinned DDLs (ADVICE r13 — the ts
-    * encoding has changed across driver regenerations and [[normalize]]
-    * must keep absorbing all three), but re-running footer inference on
-    * every read costs one driver job per invocation (~40 events queries in
-    * the bench). Caching the INFERRED schema keeps the tolerance — the
-    * first read of a regenerated file infers whatever it now is — at the
-    * old zero-job cost for every read after the first. Schema metadata
-    * only; no data or results are memoized. */
-  private val inferredSchemas =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  /** Footer schema per version of an events path, inferred ONCE per JVM:
+    * `events` is deliberately absent from Tables' pinned DDLs (ADVICE r13 —
+    * the ts encoding has changed across driver regenerations and
+    * [[normalize]] must keep absorbing all three), but re-running footer
+    * inference on every read costs one driver job per invocation (~40
+    * events queries in the bench). Caching the INFERRED schema keeps the
+    * tolerance at the old zero-job cost for every read after the first.
+    * The key is (path, total length, latest mtime) of the files under the
+    * path — a file listing, no Spark job — so a file regenerated within one
+    * JVM is re-inferred instead of read with its predecessor's schema.
+    * Schema metadata only; no data or results are memoized. */
+  private val inferredSchemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long), org.apache.spark.sql.types.StructType]()
 
   def events(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    val schema = inferredSchemas.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val schema = inferredSchemas.computeIfAbsent(version(spark, path),
+      _ => spark.read.parquet(path).schema)
     normalize(spark.read.schema(schema).parquet(path))
+  }
+
+  /** (path, summed length, latest modification time) of the data files
+    * under `path` (the path itself when it is a file). */
+  private def version(spark: SparkSession, path: String): (String, Long, Long) = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    var length = 0L
+    var mtime = 0L
+    while (files.hasNext) {
+      val f = files.next()
+      length += f.getLen
+      mtime = math.max(mtime, f.getModificationTime)
+    }
+    (path, length, mtime)
   }
 
   /** Normalize a raw events relation to the canonical micros-TIMESTAMP `ts`.

@@ -79,6 +79,38 @@ object RandomizedCindProps extends Properties("graft.cind.e2e") {
       got == want
     }
 
+  // the pair-count kernel with a 5-key buffer and 7 buckets (many flushes,
+  // many buckets per partition) and hub slicing at width 3, under every
+  // strategy that counts unordered pairs, in both encode regimes
+  property("tiny pair-count kernel: count-match, two-round and small-to-large == bruteForce") =
+    forAll(triples) { ts =>
+      import spark.implicits._
+      val df = ts.toDF("subj", "pred", "obj")
+      val tiny = PairCounts.Sizes(bufferCapacity = 5, buckets = 7)
+      def run(persistLines: Boolean)(evidence: EncodedLines => Evidence) =
+        CindEngine.discover(df, 2, bloomConditions = false, bloomCaptures = false,
+          expectedFrequentKeys = 10000000L, projections = "spo", arRules = None,
+          persistLines = persistLines)(evidence).collect().map(key).toSet
+      val strategies: Seq[(String, () => Set[(Capture, Capture, Long)])] = Seq(
+        "count-match" -> (() => run(persistLines = false)(
+          CindEngine.countMatchEvidence(_, 2, 3, tiny))),
+        "two-round" -> (() => run(persistLines = true)(
+          CindEngine.twoRoundEvidence(_, 2, expectedPairs = 128, 3, tiny))),
+        "small-to-large" -> (() => run(persistLines = false)(
+          CindEngine.smallToLargeEvidence(_, 2, 3, tiny))))
+      val want = BruteForce(ts, 2)
+      val results = for (shuffleEncode <- Seq(false, true); (name, strategy) <- strategies) yield {
+        if (shuffleEncode) spark.conf.set("spark.graft.cind.dictEncodeMaxBroadcastRows", "0")
+        val got = try strategy()
+          finally spark.conf.unset("spark.graft.cind.dictEncodeMaxBroadcastRows")
+        if (got != want)
+          println(s"$name (shuffle-join encode: $shuffleEncode) triples=$ts\n" +
+            s"missing=${want -- got}\nextra=${got -- want}")
+        got == want
+      }
+      results.forall(identity)
+    }
+
   // the full option stack (AR pruning + both Bloom paths) composed onto two
   // structurally different strategies must agree on arbitrary inputs — the
   // randomized counterpart of MainSpec's fixture flag matrix

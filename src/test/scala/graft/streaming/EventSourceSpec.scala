@@ -62,6 +62,22 @@ class EventSourceSpec extends SparkSpec {
         .orderBy("event_id").collect().toSeq)
   }
 
+  test("events reader: a file rewritten with the other ts encoding reads back correctly") {
+    // one JVM, one path: the schema memo must notice the rewrite
+    val dir = java.nio.file.Files.createTempDirectory("events-rewrite").toString
+    def read() = EventSource.events(spark, dir).orderBy("event_id")
+      .select(unix_micros(col("ts"))).as[Long].collect().toSeq
+    try {
+      base.withColumn("ts", timestamp_micros(col("us"))).drop("us")
+        .write.parquet(s"$dir/events.parquet")
+      assert(read() == micros)
+      // legacy epoch-nanos LONG, with a sub-micro remainder
+      base.withColumn("ts", col("us") * 1000L + 789L).drop("us")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      assert(read() == micros)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("events reader: the real fixture yields micros TIMESTAMP ts") {
     val out = EventSource.events(spark, "/root/testdata/sf0.001")
     assert(out.schema("ts").dataType == TimestampType)
