@@ -147,7 +147,7 @@ object Main {
     * projection restriction narrows the capture fan-out at the source. */
   def discover(triples: DataFrame, c: Config): Dataset[CindRow] = {
     val rules =
-      if (c.useArs) Some(CindEngine.preparedRules(triples, c.support)) else None
+      if (c.useArs) Some(CindEngine.associationRules(triples, c.support)) else None
     val expected =
       if (c.useBloom) {
         val est = graft.rdf.TripleSource

@@ -334,14 +334,16 @@ object CindEngine {
     spark.conf.getOption("spark.graft.cind.verbose").exists(_.toBoolean)
 
   /** Dictionary size up to which the DIRECTIONAL evidence paths (hybrid
-    * round 1/2, the s2l binary extractions) broadcast a dense id→support
-    * array and drop refs with support(ref) < support(dep) MAP-SIDE, before
-    * the evidence exchange. EXACT, not approximate: dep ⊑ ref needs
-    * co-count(dep, ref) == support(dep), and co-count <= support(ref), so a
-    * ref poorer than its dep can never certify (the same monotonicity that
-    * justifies the reported-CIND support ordering above). Only DIRECTIONAL
-    * emissions can use it — an unordered pair key of the [[PairCounts]]
-    * kernel always has one feasible direction, so nothing is droppable there.
+    * round 1/2, small-to-large's stage-2/3 admit rule) broadcast a dense
+    * id→support array and drop refs with support(ref) < support(dep)
+    * MAP-SIDE, before the evidence exchange. EXACT, not approximate: dep ⊑
+    * ref needs co-count(dep, ref) == support(dep), and co-count <=
+    * support(ref), so a ref poorer than its dep can never certify (the same
+    * monotonicity that justifies the reported-CIND support ordering above).
+    * Only a directional rule can use it: an unordered pair key of the
+    * [[PairCounts]] kernel always has one feasible direction, so the floor
+    * alone drops nothing there — small-to-large's admit applies it to each
+    * direction together with that direction's probes.
     * Cost: 8 B/capture on each executor ((id >> 1)-indexed longs), hence
     * its own valve; past it the prune is skipped (pure optimization). */
   val DefaultSupportPruneMaxIds = 16000000L
@@ -351,9 +353,7 @@ object CindEngine {
       .map(_.toLong).getOrElse(DefaultSupportPruneMaxIds)
 
   /** Dense (id >>> 1)-indexed id→support array for the monotonicity prune;
-    * EMPTY (prune disabled) past [[supportPruneMaxIds]] or if any support
-    * overflows the array's Long slots (cannot happen — supports are Longs —
-    * but the empty-array convention also serves tests forcing it off). */
+    * EMPTY (prune disabled) past [[supportPruneMaxIds]]. */
   private def supportArray(dict: DataFrame, nDict: Long): Array[Long] = {
     val spark = dict.sparkSession
     if (nDict > supportPruneMaxIds(spark)) Array.emptyLongArray
@@ -628,32 +628,13 @@ object CindEngine {
     CacheOps.cacheResult(hist, enc.internal)
   }
 
-  /** Width beyond which a join line's pair emission is sliced across tasks
-    * (reference AssignJoinLineRebalancing, operators/AssignJoinLine
-    * Rebalancing.scala:16-71): hub lines otherwise serialize one task on
-    * O(w^2) work. Each slice re-emits the full ids array with a dep
-    * sub-range; the tiny replicated set is round-robined so slices of one
-    * hub land on different cores. Results are identical with or without
+  /** Width beyond which the [[PairCounts]] kernel splits a join line's pair
+    * enumeration into `ceil(w / t)` work units that are round-robined
+    * across tasks (reference AssignJoinLineRebalancing, operators/
+    * AssignJoinLineRebalancing.scala:16-71): hub lines otherwise serialize
+    * one task on O(w^2) work. Results are identical with or without
     * splitting (co-occurrence counting is emission-order-insensitive). */
   val SplitThreshold = 1024
-
-  /** The skew-split DIRECTED pair emitter of [[filteredPairCounts]]: one
-    * (dep, ref) row per ordered pair of ids co-occurring in a join line
-    * (including dep == ref). Wide lines are sliced first (see
-    * [[SplitThreshold]]), narrow lines emit directly. Unordered pair counts
-    * go through the [[PairCounts]] kernel instead. */
-  private def linePairs(lines: DataFrame, splitThreshold: Int): DataFrame = {
-    val narrow = lines.filter(size(col("ids")) <= splitThreshold)
-      .select(explode(col("ids")).as("dep"), col("ids"))
-    val wide = lines.filter(size(col("ids")) > splitThreshold)
-      .select(col("ids"), explode(sequence(lit(0),
-        floor((size(col("ids")) - 1) / lit(splitThreshold)).cast("int"))).as("slice"))
-      .repartition() // round-robin the few replicated hub slices
-      .select(explode(slice(col("ids"), col("slice") * splitThreshold + 1,
-        lit(splitThreshold))).as("dep"), col("ids"))
-    narrow.unionAll(wide)
-      .select(col("dep"), explode(col("ids")).as("ref"))
-  }
 
   /** Expand the [[PairCounts]] kernel's unordered `(pk, n)` counts to
     * directed (dep_id, ref_id, n), n = number of join lines containing
@@ -671,6 +652,15 @@ object CindEngine {
           shiftright(col("pk"), 32).as("ref_id")))).as("p"), col("n"))
       .select(col("p.dep_id"), col("p.ref_id"), col("n"))
 
+  /** The lines cut down to their unary (or binary) ids, and only those
+    * still holding a pair. The arity filter runs BEFORE the quadratic
+    * fan-out: the unary bit rides the encoded ids, so the other arity drops
+    * out of the lines map-side instead of post-aggregation at decode. */
+  private def arityLines(lines: DataFrame, unary: Boolean): DataFrame =
+    lines.select(col("join_val"),
+      filter(col("ids"), id => id.bitwiseAND(lit(1L)) === (if (unary) 1L else 0L)).as("ids"))
+      .filter(size(col("ids")) > 1)
+
   /** Unary-unary capture overlaps with their co-occurrence counts
     * (reference CreateUnaryUnaryOverlapCandidates +
     * MultiunionOverlapCandidates; the dep side carries its support so
@@ -680,12 +670,7 @@ object CindEngine {
   def unaryOverlaps(triples: DataFrame, minSupport: Int = DefaultMinSupport,
       sketch: Boolean = true, expectedPairs: Long = 4000000L): DataFrame = {
     val enc = encodedJoinLines(triples, minSupport)
-    // arity filter BEFORE the quadratic fan-out: the unary bit rides the
-    // encoded ids, so binary captures drop out of the lines map-side
-    // (roughly halving pair volume) instead of post-aggregation at decode
-    val unaryLines = enc.lines.select(col("join_val"),
-      filter(col("ids"), id => id.bitwiseAND(lit(1L)) === 1L).as("ids"))
-      .filter(size(col("ids")) > 1)
+    val unaryLines = arityLines(enc.lines, unary = true)
     val internal = Seq.newBuilder[Dataset[_]]
     // overlaps below minSupport can never certify a CIND nor survive the
     // reference's candidate filters — the kernel's support floor keeps the
@@ -873,18 +858,10 @@ object CindEngine {
     * is identical to its `allCinds` counterpart (same support). */
   def allCindsPruned(triples: DataFrame, minSupport: Int = DefaultMinSupport,
       splitThreshold: Int = SplitThreshold): Dataset[CindRow] = {
-    val rules = preparedRules(triples, minSupport)
+    val rules = associationRules(triples, minSupport)
     val out = allCinds(triples, minSupport, splitThreshold, arRules = Some(rules))
     CacheOps.cacheResult(out, Seq(rules))
   }
-
-  /** Association rules persisted for the two places every AR-pruned
-    * strategy consumes them (the fan-out anti-join and the output filter).
-    * [[associationRules]] already returns its result persisted and
-    * materialized (CacheOps contract), so this is now an alias kept for
-    * call-site clarity; the caller owns the one cached handle. */
-  def preparedRules(triples: DataFrame, minSupport: Int): DataFrame =
-    associationRules(triples, minSupport)
 
   /** Output-side AR pruning shared by all strategies: drop 1/1 CINDs
     * `proj[ante] ⊑ proj[cons]` directly implied by a confidence-1.0 rule
@@ -1000,7 +977,7 @@ object CindEngine {
       else rdd.treeReduce(mergeCells, depth = 2)
     val bcast = spark.sparkContext.broadcast(new graft.core.SpectralBloomFilter(nc, bpc, nh, merged)
       .toBloomFilter(minSupport))
-    pk => bcast.value.mightContain(pk)
+    PairCounts.taskAdmit { () => val bf = bcast.value; pk => bf.mightContain(pk) }
   }
 
   /** Refs arrays longer than this spill to Bloom-filter bits in the hybrid
@@ -1151,35 +1128,18 @@ object CindEngine {
     Evidence(exactPairs.unionByName(verifiedPairs), Seq(agged))
   }
 
-  /** Directed pair counts over encoded join lines, map-side-filtered by a
-    * candidate predicate BEFORE the shuffle: only admitted directed pairs
-    * ever reach the count aggregation. The predicate plays the role of
-    * the reference's candidate Bloom filter broadcast (plan/
-    * SmallToLargeTraversalStrategy.scala:380-407 and :450-470) — but the
-    * candidate set is never ENUMERATED: the necessary conditions are
-    * probed directly against filters built over the stage relations
-    * (see [[allCindsSmallToLarge]]). Over-admission is harmless — a pair
-    * that later passes count == support is by definition a true CIND. */
-  private def filteredPairCounts(lines: DataFrame,
-      pairPred: (Column, Column) => Column, splitThreshold: Int): DataFrame =
-    linePairs(lines, splitThreshold)
-      .filter(col("dep") =!= col("ref") && pairPred(col("dep"), col("ref")))
-      .select((shiftleft(col("dep"), 32) + col("ref")).as("dpk"))
-      .groupBy("dpk").agg(count(lit(1)).as("n"))
-      .select(shiftright(col("dpk"), 32).as("dep_id"),
-        col("dpk").bitwiseAND(lit(0xFFFFFFFFL)).as("ref_id"), col("n"))
-
   /** Small-to-large staged discovery — the reference's DEFAULT traversal
     * (strategy 1, plan/SmallToLargeTraversalStrategy.scala:38-171),
     * re-expressed relationally: instead of counting every frequent-capture
     * pair in one pass, results climb the arity ladder and each binary
-    * stage's pair emission is pruned MAP-SIDE by the previous stage's
-    * results, so the binary extractions only shuffle plausible keys:
+    * stage's pair keys are pruned MAP-SIDE by the previous stage's
+    * results, so the binary extractions only shuffle plausible keys. Every
+    * stage counts through the [[PairCounts]] kernel:
     *
     *   stage 1 — unary×unary co-occurrence counts (the reference's
     *     OverlapSet relation); 1/1 CINDs fall out as overlap == support.
     *   stage 2 — ONE mixed-arity extraction verifies 1/2 and 2/1 pairs.
-    *     The necessary conditions are probed per emitted pair instead of
+    *     The necessary conditions are probed per enumerated pair instead of
     *     ever ENUMERATING a candidate set (the first cut materialized the
     *     candidate joins: ~5.6 GB of (dep, ref) keys at sf0.1 — two
     *     orders of magnitude larger than the relations that generate
@@ -1191,30 +1151,37 @@ object CindEngine {
     *       2/1 pair (b, r): (sub_i(b), r) ∈ overlaps for BOTH subs —
     *            values(b) ⊆ values(sub_i) ∩ values(r); refs equal to b's
     *            own subs are trivially implied and skipped.
-    *     The sub-capture lookup is a broadcast dense id→sub-id array
-    *     probed by a native expression; the membership filters are Bloom
-    *     filters built from c11/cinds11 themselves — the reference's
-    *     candidate-BF broadcast (SmallToLargeTraversalStrategy
-    *     .scala:380-407), with the BF over the GENERATING relation
-    *     instead of the blown-up candidate product.
+    *     The sub-capture lookup is a broadcast dense id→sub-id array; the
+    *     membership filters are Bloom filters built from c11/cinds11
+    *     themselves — the reference's candidate-BF broadcast
+    *     (SmallToLargeTraversalStrategy.scala:380-407), with the BF over
+    *     the GENERATING relation instead of the blown-up candidate product.
     *   stage 3 — a second extraction over binary-only lines verifies 2/2
     *     pairs: (bd, br) admitted iff (bd, sub_i(br)) ∈ the VERIFIED 2/1
     *     relation (plus the always-true trivial pairs b ⊑ own-sub,
     *     reference GenerateBinaryBinaryCindCandidates.scala:20-42) —
     *     bd ⊑ br(r1,r2) requires bd ⊑ r1 AND bd ⊑ r2.
     *
+    * The probes are DIRECTIONAL but the kernel counts unordered keys: a
+    * key is counted iff either direction passes, and [[expandCounts]]
+    * emits both. A direction admitted only through its twin carries the
+    * exact co-count, so the decode's `n == support(dep)` either certifies
+    * a true CIND or drops it — the same reasoning that makes Bloom false
+    * positives harmless. The stages stay arity-disjoint (1/1, mixed, 2/2),
+    * so no directed row is emitted twice.
+    *
     * Result-identical to [[allCinds]] (spec-pinned and driver-checked
     * against the same oracle): every probe condition is NECESSARY for the
     * CINDs it feeds — nothing is missed — and verification is the exact
-    * count-match — nothing false survives; an over-admitted pair (Bloom
-    * false positive) that passes count == support is by definition a true
-    * CIND that allCinds reports too, so no exact candidate re-join is
-    * needed anywhere. What the ladder buys on hub-heavy data: the
-    * quadratic pair SHUFFLE only ever carries unary×unary keys plus
-    * probe-admitted binary keys, bounding aggregation state the way the
-    * reference's staged ladder bounded Flink combiner memory (per-line
-    * emission work is unchanged — the reference's extractors also walk
-    * all pairs and probe their candidate BF). */
+    * count-match — nothing false survives; an over-admitted pair that
+    * passes count == support is by definition a true CIND that allCinds
+    * reports too, so no exact candidate re-join is needed anywhere. What
+    * the ladder buys on hub-heavy data: the quadratic pair SHUFFLE only
+    * ever carries unary×unary keys plus probe-admitted binary keys,
+    * bounding aggregation state the way the reference's staged ladder
+    * bounded Flink combiner memory (per-line enumeration work is unchanged
+    * — the reference's extractors also walk all pairs and probe their
+    * candidate BF). */
   def allCindsSmallToLarge(triples: DataFrame, minSupport: Int = DefaultMinSupport,
       splitThreshold: Int = SplitThreshold,
       bloomConditions: Boolean = false,
@@ -1225,6 +1192,21 @@ object CindEngine {
     discover(triples, minSupport, bloomConditions, bloomCaptures,
       expectedFrequentKeys, projections, arRules)(smallToLargeEvidence(_, minSupport, splitThreshold))
 
+  /** Dictionary-indexed side tables of small-to-large's admit rules, read
+    * per enumerated pair: a binary capture's two unary sub-capture ids
+    * (dense ARRAYS indexed by (id >> 1) - 1 — dictionary ids are dense by
+    * construction, see dictWithIds; unary slots hold 0, never a valid id,
+    * and no rule reads them) and the [[supportArray]] (empty: floor off). */
+  private final case class LadderTables(sub1: Array[Long], sub2: Array[Long],
+      support: Array[Long]) {
+    def sub1Of(id: Long): Long = sub1((id >> 1).toInt - 1)
+    def sub2Of(id: Long): Long = sub2((id >> 1).toInt - 1)
+
+    /** The support-monotonicity floor (see [[supportPruneMaxIds]]). */
+    def feasible(dep: Long, ref: Long): Boolean =
+      support.isEmpty || support((ref >>> 1).toInt) >= support((dep >>> 1).toInt)
+  }
+
   /** [[allCindsSmallToLarge]]'s evidence step: the three stages' counts.
     * The stage-internal `n == support` filters only build the next stage's
     * probe filters; the result is certified by the skeleton's decode. */
@@ -1233,23 +1215,20 @@ object CindEngine {
     val (lines, dict, nDictL) = (enc.lines, enc.dict, enc.nDict)
     val spark = lines.sparkSession
     import spark.implicits._
-    val unaryBit = (id: Column) => id.bitwiseAND(lit(1L))
     def pk(a: Column, b: Column) = shiftleft(a, 32) + b
-    // ---- stage 1: unary×unary overlaps (arity bit filters lines map-side)
-    val unaryLines = lines.select(col("join_val"),
-      filter(col("ids"), id => unaryBit(id) === 1L).as("ids"))
-      .filter(size(col("ids")) > 1)
-    // the kernel's support floor: an overlap below minSupport certifies nothing
-    val c11 = expandCounts(PairCounts(unaryLines, minSupport, splitThreshold, sizes = sizes))
-      .persist()
+    // the kernel's support floor: a count below minSupport certifies nothing
+    def counts(stageLines: DataFrame, admit: Long => Boolean) = expandCounts(
+      PairCounts(stageLines, minSupport, splitThreshold, admit = admit, sizes = sizes))
+    // ---- stage 1: unary×unary overlaps
+    val c11 = counts(arityLines(lines, unary = true), admit = null).persist()
     val nC11 = c11.count() // 1/1 output + both stage-2 probe filters read this
     val sup = dict.select(col("id").as("dep_id"), col("support"))
     val cinds11 = c11.join(sup, "dep_id")
       .filter(col("n") === col("support"))
       .select(col("dep_id"), col("ref_id"))
     // binary capture -> its two unary sub-capture ids; dictionary-sized,
-    // collected once and folded into the plans as literal maps (the same
-    // move the encode step makes with the capture dictionary)
+    // collected once and shipped per EXECUTOR through a broadcast (a plan
+    // literal would re-serialize the |dict|-sized arrays into every task)
     val unaryDict = dict.filter(col("v2") === "")
     val subsArr: Array[(Long, Long, Long)] = dict.filter(col("v2") =!= "")
       .join(unaryDict.select(col("id").as("sub1_id"), col("code").as("s1c"),
@@ -1260,44 +1239,13 @@ object CindEngine {
         secondSubCode(col("code")) === col("s2c") && col("v2") === col("s2v"))
       .select(col("id"), col("sub1_id"), col("sub2_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    // dense ARRAYS indexed by (id >> 1) - 1: dictionary ids are dense by
-    // construction (dictWithIds), so the lookup is O(1) — a MAP would be
-    // an O(|dict|) linear scan per probe, which at 4 lookups per emitted
-    // pair dominated the whole extraction. Unary slots hold 0 (never a
-    // valid id); every probe using them is already vetoed by the arity
-    // conjunct. Shipped per EXECUTOR through a Broadcast read by the
-    // native bcast_array_get expression, NOT folded into the plan as
-    // lit(Array[Long]): a literal re-serializes the whole |dict|-sized
-    // array into every task's plan for both probing stages — megabytes
-    // per task once the dictionary reaches cluster-scale cardinality.
     val nDict = nDictL.toInt
     val sub1Arr = new Array[Long](nDict)
     val sub2Arr = new Array[Long](nDict)
     subsArr.foreach { case (b, s1, s2) =>
       sub1Arr((b >> 1).toInt - 1) = s1; sub2Arr((b >> 1).toInt - 1) = s2 }
-    val bcSub1 = spark.sparkContext.broadcast(sub1Arr)
-    val bcSub2 = spark.sparkContext.broadcast(sub2Arr)
-    def arrGet(bc: org.apache.spark.broadcast.Broadcast[Array[Long]],
-        idx: Column): Column =
-      org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.functions.BroadcastArrayGet(
-          org.apache.spark.sql.graft.ColumnBridge.expression(idx), bc))
-    def sub1Of(id: Column) = arrGet(bcSub1, shiftright(id, 1) - 1)
-    def sub2Of(id: Column) = arrGet(bcSub2, shiftright(id, 1) - 1)
-    // support-monotonicity prune on the DIRECTIONAL stage-2/3 emissions
-    // (r13, see supportPruneMaxIds): both stages verify n == support(dep),
-    // so a ref poorer than its dep can never certify — drop it map-side.
-    // Stage 1 (the unordered PairCounts kernel) stays complete: its counts
-    // also serve as the 2/1 probes' overlap relation, and an unordered pair
-    // always has one feasible direction anyway.
-    val supArr = supportArray(dict, nDictL)
-    val supPred: (Column, Column) => Column =
-      if (supArr.isEmpty) (_, _) => lit(true)
-      else {
-        val bcSupA = spark.sparkContext.broadcast(supArr)
-        (dep, ref) =>
-          arrGet(bcSupA, shiftright(ref, 1)) >= arrGet(bcSupA, shiftright(dep, 1))
-      }
+    val bcTables = spark.sparkContext.broadcast(
+      LadderTables(sub1Arr, sub2Arr, supportArray(dict, nDictL)))
     // ---- stage 2: one mixed-arity extraction, probe-filtered map-side
     val bfC11 = spark.sparkContext.broadcast(buildBloomLongs(
       c11.select(pk(col("dep_id"), col("ref_id")).as("k")).as[Long],
@@ -1307,42 +1255,42 @@ object CindEngine {
         // vacuous identity u ⊑ u, for 1/2 refs sharing the dep's condition
         .union(unaryDict.select(pk(col("id"), col("id")).as("k")).as[Long]),
       math.max(nC11, 1024L), 0.01))
-    val mixedPred = (dep: Column, ref: Column) => {
-      val s1r = sub1Of(ref); val s2r = sub2Of(ref)
-      val s1d = sub1Of(dep); val s2d = sub2Of(dep)
-      val p12 = unaryBit(dep) === 1L && unaryBit(ref) === 0L &&
-        bloomContains(bf11, pk(dep, s1r)) && bloomContains(bf11, pk(dep, s2r))
-      val p21 = unaryBit(dep) === 0L && unaryBit(ref) === 1L &&
-        ref =!= s1d && ref =!= s2d && // own-sub refs are trivially implied
-        bloomContains(bfC11, pk(s1d, ref)) && bloomContains(bfC11, pk(s2d, ref))
-      p12 || p21
+    val mixedAdmit = PairCounts.taskAdmit { () =>
+      val (t, cinds, overlaps) = (bcTables.value, bf11.value, bfC11.value)
+      PairCounts.eitherWay { (dep, ref) =>
+        t.feasible(dep, ref) && (
+          if ((dep & 1L) == 1L) // 1/2
+            (ref & 1L) == 0L &&
+              cinds.mightContain(dep << 32 | t.sub1Of(ref)) &&
+              cinds.mightContain(dep << 32 | t.sub2Of(ref))
+          else // 2/1; own-sub refs are trivially implied
+            (ref & 1L) == 1L && ref != t.sub1Of(dep) && ref != t.sub2Of(dep) &&
+              overlaps.mightContain(t.sub1Of(dep) << 32 | ref) &&
+              overlaps.mightContain(t.sub2Of(dep) << 32 | ref))
+      }
     }
     val mixedLines = lines.filter(
-      exists(col("ids"), id => unaryBit(id) === 1L) &&
-        exists(col("ids"), id => unaryBit(id) === 0L))
-    val countsA = filteredPairCounts(mixedLines,
-      (d, r) => mixedPred(d, r) && supPred(d, r), splitThreshold)
-      .persist()
+      exists(col("ids"), id => id.bitwiseAND(lit(1L)) === 1L) &&
+        exists(col("ids"), id => id.bitwiseAND(lit(1L)) === 0L))
+    val countsA = counts(mixedLines, mixedAdmit).persist()
     val nCountsA = countsA.count() // feeds the output AND the stage-3 probe filter
     // ---- stage 3: binary-binary extraction probed against verified 2/1s
     val v21 = countsA.join(sup, "dep_id")
-      .filter(col("n") === col("support") && unaryBit(col("dep_id")) === 0L)
+      .filter(col("n") === col("support") && col("dep_id").bitwiseAND(lit(1L)) === 0L)
       .select(pk(col("dep_id"), col("ref_id")).as("k")).as[Long]
     val trivial21 = spark.createDataset(
       subsArr.toSeq.flatMap(t => Seq((t._1 << 32) + t._2, (t._1 << 32) + t._3)))
     val bfV21 = spark.sparkContext.broadcast(buildBloomLongs(
-      v21.union(trivial21),
-      // nCountsA reuses the eager count above — the old countsA.count()
-      // here was a second driver barrier over the same cached relation
-      math.max(nCountsA + 2L * subsArr.length, 1024L), 0.01))
-    val binPred = (dep: Column, ref: Column) =>
-      bloomContains(bfV21, pk(dep, sub1Of(ref))) &&
-        bloomContains(bfV21, pk(dep, sub2Of(ref)))
-    val binaryLines = lines.select(col("join_val"),
-      filter(col("ids"), id => unaryBit(id) === 0L).as("ids"))
-      .filter(size(col("ids")) > 1)
-    val countsB = filteredPairCounts(binaryLines,
-      (d, r) => binPred(d, r) && supPred(d, r), splitThreshold)
+      v21.union(trivial21), math.max(nCountsA + 2L * subsArr.length, 1024L), 0.01))
+    val binaryAdmit = PairCounts.taskAdmit { () =>
+      val (t, verified) = (bcTables.value, bfV21.value)
+      PairCounts.eitherWay { (dep, ref) =>
+        t.feasible(dep, ref) &&
+          verified.mightContain(dep << 32 | t.sub1Of(ref)) &&
+          verified.mightContain(dep << 32 | t.sub2Of(ref))
+      }
+    }
+    val countsB = counts(arityLines(lines, unary = false), binaryAdmit)
     // ---- assemble: the skeleton's one decode applies count==support and
     // the trivial-ref filter, then releases c11/countsA
     Evidence(c11.unionByName(countsA).unionByName(countsB), Seq(c11, countsA))
@@ -1380,7 +1328,10 @@ object CindEngine {
     * count(A) >= minSupport. Expressed as a broadcast join of the binary
     * condition counts against the unary counts — conf==1.0 is exactly
     * `count(A AND B) == count(A)`.
-    * Output: (ante_code, ante_val, cons_code, cons_val, support). */
+    * Output: (ante_code, ante_val, cons_code, cons_val, support), returned
+    * persisted and materialized (CacheOps contract) for the two places an
+    * AR-pruned strategy reads it (the fan-out anti-join and the output
+    * filter); the caller owns the one cached handle. */
   def associationRules(triples: DataFrame, minSupport: Int = DefaultMinSupport): DataFrame = {
     // consumed twice (unary and binary splits) — persist + materialize so
     // the broadcast build sides read the cache instead of re-aggregating

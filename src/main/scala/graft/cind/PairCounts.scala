@@ -59,7 +59,7 @@ private[cind] object PairCounts {
     * ids, kept iff `n >= minSupport`. `lines` carries an `ids ARRAY<LONG>`
     * column of duplicate-free ids below 2^32. `admit` (null: all) filters
     * keys before they are buffered — the two-round strategies pass their
-    * sketch's candidate filter. */
+    * sketch's candidate filter, small-to-large its stage probes. */
   def apply(lines: DataFrame, minSupport: Int, splitThreshold: Int,
       admit: Long => Boolean = null, sizes: Sizes = Sizes()): DataFrame = {
     val spark = lines.sparkSession
@@ -84,6 +84,27 @@ private[cind] object PairCounts {
       .as[(Int, Array[Byte])]
       .mapPartitions(it => new BucketMerge(it.buffered, minSupport))
       .toDF("pk", "n")
+  }
+
+  /** An admit predicate built on the executor, once per task: `build`
+    * reads its broadcasts there and returns the per-key test. Reading a
+    * broadcast per key would take `TorrentBroadcast.value`'s lock once per
+    * pair. */
+  def taskAdmit(build: () => Long => Boolean): Long => Boolean = new TaskAdmit(build)
+
+  private final class TaskAdmit(build: () => Long => Boolean)
+      extends (Long => Boolean) with Serializable {
+    @transient private lazy val test = build()
+    def apply(pk: Long): Boolean = test(pk)
+  }
+
+  /** Admits an unordered key `a << 32 | b` iff `dir` accepts `(a, b)` or
+    * `(b, a)`: the admit of a directional rule, whose counts
+    * [[CindEngine]]'s `expandCounts` restores in both directions. */
+  def eitherWay(dir: (Long, Long) => Boolean): Long => Boolean = { pk =>
+    val a = pk >>> 32
+    val b = pk & 0xFFFFFFFFL
+    dir(a, b) || dir(b, a)
   }
 
   /** The pair enumerator as a partition-wise function, for consumers that

@@ -5,9 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Generic skew utilities — the salting patterns the CIND engine applies
-  * in specialized form (join-line slicing, CindEngine.SplitThreshold)
-  * exposed for arbitrary relations. Both are result-identical to their
-  * naive counterparts (spec-pinned); what they change is the WORK SHAPE:
+  * in specialized form (the pair-count kernel's hub-line work units,
+  * CindEngine.SplitThreshold) exposed for arbitrary relations. Both are
+  * result-identical to their naive counterparts (spec-pinned); what they
+  * change is the WORK SHAPE:
   * a hub key's rows spread over `salts` tasks instead of serializing one.
   */
 object Skew {

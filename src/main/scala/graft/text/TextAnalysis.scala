@@ -240,10 +240,10 @@ object TextAnalysis {
     * expression at any corpus size). Weights here are the deterministic
     * hash-derived stand-in w(f) = (md5-bucket of f) - 500 ∈ [-500, 500]
     * — this container has no trained model to load; a real deployment
-    * swaps `weight` for a broadcast-array probe of the learned weight
-    * vector (the [[graft.functions.BroadcastArrayGet]] pattern) and the
-    * plumbing is identical. Integer space end-to-end, so the SQL oracle
-    * reproduces the score bit-for-bit.
+    * swaps `weight` for a native expression probing the learned weight
+    * vector through a broadcast (the [[graft.functions.DictEncodeIds]]
+    * pattern) and the plumbing is identical. Integer space end-to-end, so
+    * the SQL oracle reproduces the score bit-for-bit.
     * Output: (doc_id, n_features, score, keep = score >= 0). */
   def classifierScore(docs: DataFrame): DataFrame = {
     // the md5 prefix let-binds ONCE per feature (same repeated-

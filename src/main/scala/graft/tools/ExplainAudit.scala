@@ -36,8 +36,9 @@ object ExplainAudit {
       showFinal("cind_all", graft.cind.CindEngine.allCinds(
         graft.rdf.TripleSource.derive(spark, dir)).toDF())
     if (which == "all" || which == "s2l")
-      // stage jobs (overlap counts, candidate generation) run during
-      // construction; the printed plan is the final assembly/decode
+      // stages 1-2 (persisted pair counts) and the probe filter builds run
+      // during construction; the printed plan is the stage-3 count plus
+      // the assembly/decode
       showFinal("cind_all_s2l", graft.cind.CindEngine.allCindsSmallToLarge(
         graft.rdf.TripleSource.derive(spark, dir)).toDF())
     if (which == "all" || which == "hybrid")

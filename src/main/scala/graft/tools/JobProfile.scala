@@ -5,9 +5,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Job-level timeline of one declared query: per-job wall, the GAPS between
   * jobs (driver-side planning / collects-in-flight / broadcast builds show
-  * up there), and the heaviest stages. Complements [[StageProfile]] — stages
-  * only account for executor time; at small scale the driver-side slices
-  * between jobs are where fixed per-query cost hides. Usage:
+  * up there), and the heaviest stages (wall, shuffle read/write, tasks).
+  * Stages only account for executor time; at small scale the driver-side
+  * slices between jobs are where fixed per-query cost hides. Usage:
   *   tools/run_main.sh graft.tools.JobProfile <query> [sfDir] [reps]
   * The profiled rep is the LAST one (warm JIT / warm pages); earlier reps
   * print totals only. Env: SPARK_GRAFT_CPUS (default 32).

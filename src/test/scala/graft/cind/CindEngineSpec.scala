@@ -28,10 +28,18 @@ class CindEngineSpec extends SparkSpec {
     ts.toDF("subj", "pred", "obj")
   }
 
+  /** A strategy's rows as a set, after checking that no row repeats: a set
+    * comparison alone would not see a CIND emitted twice. */
+  def distinctKeys(rows: Array[CindRow]): Set[(Capture, Capture, Long)] = {
+    val keys = rows.map(r => (Capture(r.dep_code, r.dep_v1, r.dep_v2),
+      Capture(r.ref_code, r.ref_v1, r.ref_v2), r.support))
+    val repeated = keys.diff(keys.distinct)
+    assert(repeated.isEmpty, s"duplicate rows: ${repeated.mkString(", ")}")
+    keys.toSet
+  }
+
   test("allCinds matches the brute-force oracle on cind_tiny (support 2)") {
-    val got = CindEngine.allCinds(toDF(tiny), minSupport = 2).collect()
-      .map(r => (Capture(r.dep_code, r.dep_v1, r.dep_v2),
-        Capture(r.ref_code, r.ref_v1, r.ref_v2), r.support)).toSet
+    val got = distinctKeys(CindEngine.allCinds(toDF(tiny), minSupport = 2).collect())
     val want = bruteForce(tiny, 2)
     assert(got == want, s"\nmissing=${want -- got}\nextra=${got -- want}")
     assert(got.nonEmpty)
@@ -48,27 +56,21 @@ class CindEngineSpec extends SparkSpec {
     // dictEncodeMaxBroadcastRows = 0 forces the scale valve: no driver-side
     // dict collect, encode via shuffle equi-join — results must be
     // bit-identical on both the exact and the bloomCaptures line shapes
-    def run() = CindEngine.allCinds(toDF(tiny), minSupport = 2).collect()
-      .map(r => (Capture(r.dep_code, r.dep_v1, r.dep_v2),
-        Capture(r.ref_code, r.ref_v1, r.ref_v2), r.support)).toSet
-    def runBloom() = CindEngine.allCinds(toDF(tiny), minSupport = 2,
-        bloomCaptures = true).collect()
-      .map(r => (Capture(r.dep_code, r.dep_v1, r.dep_v2),
-        Capture(r.ref_code, r.ref_v1, r.ref_v2), r.support)).toSet
+    def run() = distinctKeys(CindEngine.allCinds(toDF(tiny), minSupport = 2).collect())
+    def runBloom() = distinctKeys(CindEngine.allCinds(toDF(tiny), minSupport = 2,
+        bloomCaptures = true).collect())
     val (bExact, bBloom) = (run(), runBloom())
     // the regime where the strategy skeleton persists the encoded lines:
     // every strategy's evidence step must read them there too
-    def key(r: CindRow) = (Capture(r.dep_code, r.dep_v1, r.dep_v2),
-      Capture(r.ref_code, r.ref_v1, r.ref_v2), r.support)
     val strategies: Seq[(String, () => Set[(Capture, Capture, Long)])] = Seq(
-      "tworound" -> (() => CindEngine.allCindsTwoRound(toDF(tiny), minSupport = 2)
-        .collect().map(key).toSet),
-      "hybrid" -> (() => CindEngine.allCindsHybrid(toDF(tiny), minSupport = 2,
-        spillThreshold = 2).collect().map(key).toSet),
-      "small-to-large" -> (() => CindEngine.allCindsSmallToLarge(toDF(tiny),
-        minSupport = 2).collect().map(key).toSet),
-      "intersect" -> (() => CindEngine.allCindsIntersect(toDF(tiny), minSupport = 2)
-        .collect().map(key).toSet))
+      "tworound" -> (() => distinctKeys(
+        CindEngine.allCindsTwoRound(toDF(tiny), minSupport = 2).collect())),
+      "hybrid" -> (() => distinctKeys(CindEngine.allCindsHybrid(toDF(tiny),
+        minSupport = 2, spillThreshold = 2).collect())),
+      "small-to-large" -> (() => distinctKeys(
+        CindEngine.allCindsSmallToLarge(toDF(tiny), minSupport = 2).collect())),
+      "intersect" -> (() => distinctKeys(
+        CindEngine.allCindsIntersect(toDF(tiny), minSupport = 2).collect())))
     spark.conf.set("spark.graft.cind.dictEncodeMaxBroadcastRows", "0")
     try {
       assert(run() == bExact)
@@ -176,10 +178,8 @@ class CindEngineSpec extends SparkSpec {
   }
 
   test("count-match and intersect strategies agree (cross-strategy invariant)") {
-    def key(r: CindRow) = (Capture(r.dep_code, r.dep_v1, r.dep_v2),
-      Capture(r.ref_code, r.ref_v1, r.ref_v2), r.support)
-    val a = CindEngine.allCinds(toDF(tiny), minSupport = 2).collect().map(key).toSet
-    val b = CindEngine.allCindsIntersect(toDF(tiny), minSupport = 2).collect().map(key).toSet
+    val a = distinctKeys(CindEngine.allCinds(toDF(tiny), minSupport = 2).collect())
+    val b = distinctKeys(CindEngine.allCindsIntersect(toDF(tiny), minSupport = 2).collect())
     assert(a == b)
   }
 
@@ -232,38 +232,32 @@ class CindEngineSpec extends SparkSpec {
   }
 
   test("two-round sketch-pruned strategy equals the exact CIND set") {
-    def key(r: CindRow) = (Capture(r.dep_code, r.dep_v1, r.dep_v2),
-      Capture(r.ref_code, r.ref_v1, r.ref_v2), r.support)
     // deliberately tiny sketch: heavy collisions weaken pruning but must
     // never change the result
-    val t = CindEngine.allCindsTwoRound(toDF(tiny), minSupport = 2, expectedPairs = 64)
-      .collect().map(key).toSet
+    val t = distinctKeys(CindEngine.allCindsTwoRound(toDF(tiny), minSupport = 2,
+      expectedPairs = 64).collect())
     assert(t == bruteForce(tiny, 2))
   }
 
   test("small-to-large staged strategy equals the exact CIND set") {
-    def key(r: CindRow) = (Capture(r.dep_code, r.dep_v1, r.dep_v2),
-      Capture(r.ref_code, r.ref_v1, r.ref_v2), r.support)
     // the fixture has witnesses in all four arity classes, so every ladder
     // stage (1/1 overlaps, 1/2 + 2/1 extraction, 2/2 extraction) is live
-    val got = CindEngine.allCindsSmallToLarge(toDF(tiny), minSupport = 2)
-      .collect().map(key).toSet
+    val got = distinctKeys(CindEngine.allCindsSmallToLarge(toDF(tiny), minSupport = 2)
+      .collect())
     val want = bruteForce(tiny, 2)
     assert(got == want, s"\nmissing=${want -- got}\nextra=${got -- want}")
     assert(got.exists { case (d, r, _) => d.v2 != "" && r.v2 != "" }) // a 2/2 survived
   }
 
   test("hybrid single-pass strategy equals the exact CIND set at every spill threshold") {
-    def key(r: CindRow) = (Capture(r.dep_code, r.dep_v1, r.dep_v2),
-      Capture(r.ref_code, r.ref_v1, r.ref_v2), r.support)
     val want = bruteForce(tiny, 2)
     // spill 1: essentially every line spills to Bloom bits (the all-approx
     // extreme — every dep resolves through the round-2 refinement);
     // spill 4: mixed exact + Bloom evidence per dep (the hybrid buffer's
     // reason to exist); spill 1024: nothing spills (pure-exact path)
     for (spill <- Seq(1, 4, 1024)) {
-      val got = CindEngine.allCindsHybrid(toDF(tiny), minSupport = 2,
-        spillThreshold = spill).collect().map(key).toSet
+      val got = distinctKeys(CindEngine.allCindsHybrid(toDF(tiny), minSupport = 2,
+        spillThreshold = spill).collect())
       assert(got == want,
         s"spill=$spill\nmissing=${want -- got}\nextra=${got -- want}")
     }

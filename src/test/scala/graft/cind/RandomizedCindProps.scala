@@ -27,41 +27,45 @@ object RandomizedCindProps extends Properties("graft.cind.e2e") {
   private def key(r: CindRow) = (Capture(r.dep_code, r.dep_v1, r.dep_v2),
     Capture(r.ref_code, r.ref_v1, r.ref_v2), r.support)
 
+  // every strategy check compares sets, which alone would not see a CIND
+  // emitted twice: each also requires the rows to be distinct
+  private def distinct(rows: Array[CindRow]) = rows.length == rows.distinct.length
+
   property("allCinds == bruteForce on random triple multisets") =
     forAll(triples) { ts =>
       import spark.implicits._
       val df = ts.toDF("subj", "pred", "obj")
-      val got = CindEngine.allCinds(df, minSupport = 2).collect().map(key).toSet
+      val rows = CindEngine.allCinds(df, minSupport = 2).collect()
       // strategy 0's k-way intersection over the same encoded lines
-      val gotIntersect = CindEngine.allCindsIntersect(df, minSupport = 2)
-        .collect().map(key).toSet
+      val rowsIntersect = CindEngine.allCindsIntersect(df, minSupport = 2).collect()
+      val (got, gotIntersect) = (rows.map(key).toSet, rowsIntersect.map(key).toSet)
       val want = BruteForce(ts, 2)
       for ((name, g) <- Seq("count-match" -> got, "intersect" -> gotIntersect)
            if g != want)
         println(s"$name triples=$ts\nmissing=${want -- g}\nextra=${g -- want}")
-      got == want && gotIntersect == want
+      got == want && gotIntersect == want && distinct(rows) && distinct(rowsIntersect)
     }
 
   property("two-round strategy matches brute force on random multisets") =
     forAll(triples) { ts =>
       import spark.implicits._
       val df = ts.toDF("subj", "pred", "obj")
-      val got = CindEngine.allCindsTwoRound(df, minSupport = 2, expectedPairs = 128)
-        .collect().map(key).toSet
-      got == BruteForce(ts, 2)
+      val rows = CindEngine.allCindsTwoRound(df, minSupport = 2, expectedPairs = 128)
+        .collect()
+      rows.map(key).toSet == BruteForce(ts, 2) && distinct(rows)
     }
 
   property("small-to-large strategy matches brute force on random multisets") =
     forAll(triples) { ts =>
       import spark.implicits._
       val df = ts.toDF("subj", "pred", "obj")
-      val got = CindEngine.allCindsSmallToLarge(df, minSupport = 2)
-        .collect().map(key).toSet
+      val rows = CindEngine.allCindsSmallToLarge(df, minSupport = 2).collect()
+      val got = rows.map(key).toSet
       val want = BruteForce(ts, 2)
       if (got != want) {
         println(s"triples=$ts\nmissing=${want -- got}\nextra=${got -- want}")
       }
-      got == want
+      got == want && distinct(rows)
     }
 
   property("hybrid strategy matches brute force on random multisets") =
@@ -70,13 +74,14 @@ object RandomizedCindProps extends Properties("graft.cind.e2e") {
       val df = ts.toDF("subj", "pred", "obj")
       // spill 2 forces a dense mix of exact and Bloom evidences on these
       // small lines — both halves of the hybrid buffer stay live
-      val got = CindEngine.allCindsHybrid(df, minSupport = 2, spillThreshold = 2)
-        .collect().map(key).toSet
+      val rows = CindEngine.allCindsHybrid(df, minSupport = 2, spillThreshold = 2)
+        .collect()
+      val got = rows.map(key).toSet
       val want = BruteForce(ts, 2)
       if (got != want) {
         println(s"triples=$ts\nmissing=${want -- got}\nextra=${got -- want}")
       }
-      got == want
+      got == want && distinct(rows)
     }
 
   // the pair-count kernel with a 5-key buffer and 7 buckets (many flushes,
@@ -90,8 +95,8 @@ object RandomizedCindProps extends Properties("graft.cind.e2e") {
       def run(persistLines: Boolean)(evidence: EncodedLines => Evidence) =
         CindEngine.discover(df, 2, bloomConditions = false, bloomCaptures = false,
           expectedFrequentKeys = 10000000L, projections = "spo", arRules = None,
-          persistLines = persistLines)(evidence).collect().map(key).toSet
-      val strategies: Seq[(String, () => Set[(Capture, Capture, Long)])] = Seq(
+          persistLines = persistLines)(evidence).collect()
+      val strategies: Seq[(String, () => Array[CindRow])] = Seq(
         "count-match" -> (() => run(persistLines = false)(
           CindEngine.countMatchEvidence(_, 2, 3, tiny))),
         "two-round" -> (() => run(persistLines = true)(
@@ -101,12 +106,13 @@ object RandomizedCindProps extends Properties("graft.cind.e2e") {
       val want = BruteForce(ts, 2)
       val results = for (shuffleEncode <- Seq(false, true); (name, strategy) <- strategies) yield {
         if (shuffleEncode) spark.conf.set("spark.graft.cind.dictEncodeMaxBroadcastRows", "0")
-        val got = try strategy()
+        val rows = try strategy()
           finally spark.conf.unset("spark.graft.cind.dictEncodeMaxBroadcastRows")
-        if (got != want)
+        val got = rows.map(key).toSet
+        if (got != want || !distinct(rows))
           println(s"$name (shuffle-join encode: $shuffleEncode) triples=$ts\n" +
-            s"missing=${want -- got}\nextra=${got -- want}")
-        got == want
+            s"missing=${want -- got}\nextra=${got -- want}\nrows=${rows.length}")
+        got == want && distinct(rows)
       }
       results.forall(identity)
     }
@@ -118,14 +124,13 @@ object RandomizedCindProps extends Properties("graft.cind.e2e") {
     forAll(triples) { ts =>
       import spark.implicits._
       val df = ts.toDF("subj", "pred", "obj")
-      val rules = CindEngine.preparedRules(df, 2)
-      val a = CindEngine.allCinds(df, minSupport = 2,
-        bloomConditions = true, bloomCaptures = true, arRules = Some(rules))
-        .collect().map(key).toSet
-      val b = CindEngine.allCindsSmallToLarge(df, minSupport = 2,
-        bloomConditions = true, bloomCaptures = true, arRules = Some(rules))
-        .collect().map(key).toSet
+      val rules = CindEngine.associationRules(df, 2)
+      val rowsA = CindEngine.allCinds(df, minSupport = 2,
+        bloomConditions = true, bloomCaptures = true, arRules = Some(rules)).collect()
+      val rowsB = CindEngine.allCindsSmallToLarge(df, minSupport = 2,
+        bloomConditions = true, bloomCaptures = true, arRules = Some(rules)).collect()
+      val (a, b) = (rowsA.map(key).toSet, rowsB.map(key).toSet)
       if (a != b) println(s"triples=$ts\nonly-cm=${a -- b}\nonly-s2l=${b -- a}")
-      a == b
+      a == b && distinct(rowsA) && distinct(rowsB)
     }
 }
