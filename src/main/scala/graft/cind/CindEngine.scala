@@ -73,7 +73,9 @@ private[cind] final case class Evidence(counts: DataFrame,
   *                                          ref: FrequentConditionPlanner BFs)
   *     -> dedup + capture dictionary       (persisted; dense int IDs; support
   *                                          filter; ref: RDFind.scala:348-400)
-  *     -> join lines: groupBy(value)       (collect_list of ids; ref: UnionJoinCandidates)
+  *     -> join lines by value              (JoinLines kernel: sorted, deduplicated
+  *                                          capture runs per value, merged at the
+  *                                          reduce side; ref: UnionJoinCandidates)
   *     -> pair co-occurrence counts        (PairCounts kernel: sorted runs,
   *                                          delta-coded blocks, support floor
   *                                          at the merge; ref: overlap sets)
@@ -446,34 +448,18 @@ object CindEngine {
     import spark.implicits._
     // 2. The cached upstream both the capture supports and the encode read.
     //    Exact shape: ONE full-data shuffle groups instances by join value
-    //    directly, with a partial-aggregating collect_set — the map side
-    //    dedups (capture, join value) duplicates while it combines. Caveat
-    //    at scale: each aggregation buffer holds one join value's distinct
-    //    condition-frequent captures; for adversarial hub values use
-    //    bloomCaptures=true — the reference's `--find-frequent-captures`
-    //    valve (programs/RDFind.scala:376-399), whose two-pass shape never
-    //    materializes a per-value capture SET before the frequency filter,
-    //    so hub join values stay row-shaped (pass 1: dedup shuffle +
-    //    capture supports; pass 2: encode + regroup below).
+    //    through the [[JoinLines]] kernel — map-side sorted, deduplicated
+    //    runs per value, merged on the reduce side. Caveat at scale: the
+    //    merge holds one join value's distinct condition-frequent captures;
+    //    for adversarial hub values use bloomCaptures=true — the
+    //    reference's `--find-frequent-captures` valve
+    //    (programs/RDFind.scala:376-399), whose two-pass shape never
+    //    materializes a per-value capture array before the frequency
+    //    filter, so hub join values stay row-shaped (pass 1: dedup shuffle
+    //    + capture supports; pass 2: encode + regroup below).
     val (upstream, grouped) =
       if (!bloomCaptures) {
-        // grouped by (xxhash64(join_val), join_val): grouping-identical —
-        // the hash is functionally dependent on the value — but the
-        // ObjectHashAggregate ALWAYS falls back to sort-based merge past
-        // 128 groups, and its sort's 8-byte prefix then reads the leading
-        // hash column instead of the first 8 chars of join_val. The
-        // fixture's values share long prefixes ("order:", "lineitem:"), so
-        // the string prefix discriminates nothing and every comparison fell
-        // through to a full string compare; the hash prefix resolves almost
-        // all of them (r13 A/B: the isolated line-formation subquery reads
-        // ~13% less CPU, BASELINE.md "Retired experiment mains"). This is
-        // the measured max stage of every CIND strategy at sf5/sf10, where
-        // the same sort dominates.
-        val lines0 = pruned.withColumn("jh", xxhash64(col("join_val")))
-          .groupBy("jh", "join_val")
-          .agg(collect_set(struct(col("code"), col("v1"), col("v2"))).as("caps"))
-          .drop("jh")
-          .persist()
+        val lines0 = JoinLines(pruned).persist()
         // no eager count: the next consumer is dictWithIds' partition-size
         // job, which fills this cache on the way; every later reader
         // (dictionary collect, encode, fallback explode) runs after that

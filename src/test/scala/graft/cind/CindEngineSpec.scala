@@ -306,6 +306,83 @@ class CindEngineSpec extends SparkSpec {
     assert(got == bruteForce(tiny, 2))
   }
 
+  test("line kernel: lines and dictionary match a collect_set brute force across scattered partitions") {
+    import spark.implicits._
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.functions.{col, collect_set, max, spark_partition_id, struct}
+    type Cap = (Int, String, String)
+    def caps(rows: Seq[Row]): Seq[Cap] = rows.map(r => (r.getInt(0), r.getString(1), r.getString(2)))
+    def bruteLines(instances: DataFrame): Map[String, Set[Cap]] = instances.groupBy("join_val")
+      .agg(collect_set(struct(col("code"), col("v1"), col("v2"))).as("caps"))
+      .collect().map(r => r.getString(0) -> caps(r.getSeq[Row](1)).toSet).toMap
+    /** `lines` holds one row per join value, its captures distinct, sorted
+      * in Spark's order and equal to the brute force over `instances`. */
+    def checkLines(lines: DataFrame, instances: DataFrame, ctx: String): Unit = {
+      val got = lines.collect().map(r => r.getString(0) -> caps(r.getSeq[Row](1)))
+      assert(got.map(_._1).distinct.length == got.length, ctx)
+      for ((jv, cs) <- got) {
+        assert(cs.distinct == cs, s"$ctx: $jv repeats a capture")
+        val asCaptures = cs.map { case (c, v1, v2) => Capture(c, v1, v2) }
+        assert(asCaptures == asCaptures.sorted(JoinLines.CaptureOrder), s"$ctx: $jv unsorted")
+      }
+      assert(got.map { case (jv, cs) => jv -> cs.toSet }.toMap == bruteLines(instances), ctx)
+    }
+    // one input partition per entry: the type/Person instance of p1 repeats
+    // inside partition 0 and again in partitions 2 and 5; the join values
+    // "Person" and "type" are spread over four partitions; 1, 3 and 6 are
+    // empty
+    val layout: Seq[Seq[(String, String, String)]] = Seq(
+      tiny :+ ("p1", "type", "Person"), Nil,
+      Seq(("p1", "type", "Person"), ("p5", "type", "Person")), Nil,
+      Seq(("p6", "type", "Person"), ("p5", "worksFor", "a1")),
+      Seq(("p1", "type", "Person"), ("a1", "employs", "p5")), Nil)
+    val scattered = spark.sparkContext.parallelize(layout, layout.size)
+      .flatMap(identity).toDF("subj", "pred", "obj")
+    // and every join value round-robined over five partitions, each triple twice
+    val repartitioned = toDF(tiny ++ tiny).repartition(5)
+    for ((name, triples) <- Seq("scattered" -> scattered, "repartitioned" -> repartitioned)) {
+      // the kernel itself, on the layout as given: the fan-out is a map,
+      // while the prune's semi-join below may re-shuffle a stats-less input
+      val instances = CindEngine.captureInstances(triples)
+      val spread = instances.select(col("join_val"), spark_partition_id().as("pid")).distinct()
+        .groupBy("join_val").count().agg(max("count")).head().getLong(0)
+      assert(spread >= 4, s"$name: a join value must span several input partitions")
+      checkLines(JoinLines(instances), instances, name)
+    }
+    for ((name, triples, rows) <- Seq(("scattered", scattered, layout.flatten.distinct),
+         ("repartitioned", repartitioned, tiny));
+         fallback <- Seq(false, true)) {
+      val ctx = s"$name (shuffle-join encode: $fallback)"
+      if (fallback) spark.conf.set("spark.graft.cind.dictEncodeMaxBroadcastRows", "0")
+      try {
+        val pruned = CindEngine.prunedCaptureInstances(triples, 2)
+        val wantLines = bruteLines(pruned)
+        val wantDict: Map[Cap, Long] = wantLines.values.toSeq.flatten
+          .groupBy(identity).map { case (c, seen) => c -> seen.size.toLong }
+          .filter(_._2 >= 2)
+        val enc = CindEngine.encodedJoinLines(triples, minSupport = 2)
+        try {
+          checkLines(enc.internal.head.toDF(), pruned, ctx) // the cached kernel lines
+          val dict = enc.dict.select("code", "v1", "v2", "support", "id").collect()
+          assert(dict.map(r => (r.getInt(0), r.getString(1), r.getString(2)) -> r.getLong(3))
+            .toMap == wantDict, ctx)
+          assert(enc.nDict == wantDict.size, ctx)
+          val capOf = dict.map(r => r.getLong(4) -> (r.getInt(0), r.getString(1), r.getString(2))).toMap
+          val lines = enc.lines.select(col("join_val"), col("ids")).collect()
+            .map(r => r.getString(0) -> r.getSeq[Long](1))
+          lines.foreach { case (jv, ids) => assert(ids.distinct == ids, s"$ctx: $jv") }
+          val gotLines = lines.groupBy(_._1).map { case (jv, parts) =>
+            jv -> parts.flatMap(_._2).map(capOf).toSet }
+          val wantEncoded = wantLines.map { case (jv, cs) => jv -> cs.filter(wantDict.contains) }
+            .filter(_._2.nonEmpty)
+          assert(gotLines == wantEncoded, ctx)
+        } finally enc.internal.foreach(_.unpersist())
+        assert(distinctKeys(CindEngine.allCinds(triples, minSupport = 2).collect()) ==
+          bruteForce(rows, 2), ctx)
+      } finally spark.conf.unset("spark.graft.cind.dictEncodeMaxBroadcastRows")
+    }
+  }
+
   test("fallback regroup salts hot join values: one synthetic mega-value, identical lines") {
     // VERDICT r12 #2 done-criterion: a join value co-occurring with >= 1e5
     // captures must pass the shuffle-encode fallback under SMALL shuffle
