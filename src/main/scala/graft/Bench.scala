@@ -124,7 +124,9 @@ object Bench {
     // ("parsed": null in BENCH_r0{5..8}). The marker is a complete JSON
     // object well under the window, carrying the totals, the 5 slowest
     // queries, error NAMES, and the path of the on-disk full result.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "tools/bench_last.json")
+    // default under the untracked build directory: a local run must not
+    // rewrite a committed file
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_last.json")
     val slowest = results.sortBy(-_._2).take(5)
       .map { case (k, v, _) => s"\"${esc(k)}\":" + sec(v) }.mkString("{", ",", "}")
     val errNames = results.collect { case (k, _, Some(_)) => s"\"${esc(k)}\"" }

@@ -69,8 +69,10 @@ private[cind] final case class Evidence(counts: DataFrame,
   *
   *   triples
   *     -> 9-way capture-instance fan-out   (explode; ref: CreateJoinPartners.scala:23-198)
-  *     -> frequent-condition pruning       (broadcast semi-join or Bloom filter;
-  *                                          ref: FrequentConditionPlanner BFs)
+  *     -> frequent-condition pruning       (unary counts, then binary counts over
+  *                                          frequent members only; a broadcast
+  *                                          semi-join or Bloom filter on the union;
+  *                                          ref: FrequentConditionPlanner BFs, E14)
   *     -> dedup + capture dictionary       (persisted; dense int IDs; support
   *                                          filter; ref: RDFind.scala:348-400)
   *     -> join lines by value              (JoinLines kernel: sorted, deduplicated
@@ -197,37 +199,104 @@ object CindEngine {
   }
 
   /** 64-bit key of a condition, for shuffle-cheap frequency pruning: the
-    * count shuffle and the broadcast set carry 8-byte hashes instead of
+    * count shuffles and the frequent-key set carry 8-byte hashes instead of
     * string pairs (binary conditions are mostly distinct, so their partial
     * aggregation barely reduces — hashing is what shrinks the bytes). A
-    * collision can only MERGE counts, i.e. over-count, i.e. ADMIT an
+    * collision can only MERGE counts or pass a member test, i.e. ADMIT an
     * infrequent condition — and every admitted instance still faces the
     * exact capture-support filter downstream, so results are identical
     * (same argument as the Bloom paths, which over-admit by design). */
   private def condHash(code: Column, v1: Column, v2: Column): Column =
     xxhash64(code, v1, v2)
 
+  /** Bytes the planner charges per row of a one-LONG-column local relation
+    * (8 B row overhead + 8 B value): converts autoBroadcastJoinThreshold
+    * into a frequent-key count. */
+  private val LocalKeyBytes = 16L
+
   /** Hashes of conditions matched by >= minSupport triples (over-approximate
-    * only through xxhash64 collisions — see [[condHash]]). */
+    * only through xxhash64 collisions — see [[condHash]]), counted in two
+    * levels like the reference (E14, CreatedReducedDoubleConditionCounts
+    * .scala:22-95):
+    *
+    *   unary  — count the three unary conditions of every triple; the
+    *            frequent ones are U;
+    *   binary — count a binary condition only on triples whose two member
+    *            hashes pass a Bloom filter of U; the frequent ones are B.
+    *
+    * U ∪ B is exactly the one-pass frequent set: cnt(binary) <=
+    * cnt(member), so a binary condition with an infrequent member stays
+    * infrequent however often the filter's false positives count it, and
+    * one with two frequent members is counted on all of its triples. The
+    * binary exchange then carries only conditions over frequent values,
+    * not the mostly-singleton binary vocabulary.
+    *
+    * Each level's aggregate runs once: its keys are read back from the
+    * finished shuffle, never recounted. The regime is decided on their
+    * real sizes. A level is collected while it fits the room
+    * autoBroadcastJoinThreshold leaves (taking at most one key more, so the
+    * driver stays bounded). While U ∪ B fits, the result is a local
+    * relation of known size, which the planner broadcasts; past it (or
+    * with broadcasts disabled) the levels that did not fit enter as scans
+    * of their aggregates' shuffle output, which carry no size estimate, so
+    * a semi-join on the result plans as a shuffle join. Nothing is cached. */
   private def frequentConditionHashes(triples: DataFrame, minSupport: Int): DataFrame = {
+    val spark = triples.sparkSession
+    import spark.implicits._
     val s = col("subj"); val p = col("pred"); val o = col("obj")
     val e = lit("")
-    triples.select(explode(array(
-      condHash(lit(S), s, e), condHash(lit(P), p, e), condHash(lit(O), o, e),
-      condHash(lit(S | P), s, p), condHash(lit(S | O), s, o), condHash(lit(P | O), p, o))).as("h"))
-      .groupBy("h").agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= minSupport)
-      .select("h")
+    val (hs, hp, ho) = (condHash(lit(S), s, e), condHash(lit(P), p, e), condHash(lit(O), o, e))
+    val (hsp, hso, hpo) =
+      (condHash(lit(S | P), s, p), condHash(lit(S | O), s, o), condHash(lit(P | O), p, o))
+    // collected keys as a relation of known size, in one partition: the
+    // jobs that read it back (the broadcast, U's member filter, the Bloom
+    // prune's filter) run one task, not one per core
+    def local(keys: Array[Long]): DataFrame = keys.toSeq.toDF("h").coalesce(1)
+    // one level's frequent keys as a relation: the keys themselves if no
+    // more than `room` of them, else a scan of the finished aggregate's
+    // shuffle output (the map stage runs here, once)
+    def level(rows: DataFrame, room: Long, hashes: Column*): (DataFrame, Option[Array[Long]]) = {
+      val keys = rows.select(explode(array(hashes: _*)).as("h"))
+        .filter(col("h").isNotNull)
+        .groupBy("h").agg(count(lit(1)).as("cnt"))
+        .filter(col("cnt") >= minSupport)
+        .select("h").as[Long].rdd
+      val head =
+        if (room <= 0) None
+        else Some(keys.take(math.min(room + 1, Int.MaxValue.toLong).toInt)).filter(_.length <= room)
+      (head.fold(keys.toDF("h"))(local), head)
+    }
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").trim
+    val room = // a negative threshold disables broadcasts
+      if (threshold.startsWith("-")) 0L
+      else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(threshold) / LocalKeyBytes
+    val (unary, u) = level(triples, room, hs, hp, ho)
+    val nU = u.fold(unary.count())(_.length.toLong)
+    val isU = spark.sparkContext.broadcast(buildBloomLongs(unary.as[Long], math.max(nU, 1L), 0.001))
+    val flagged = triples.select(s, p, o, bloomContains(isU, hs).as("fs"),
+      bloomContains(isU, hp).as("fp"), bloomContains(isU, ho).as("fo"))
+    val (fs, fp, fo) = (col("fs"), col("fp"), col("fo"))
+    val (binary, b) = level(flagged, if (u.isEmpty) 0L else room - nU,
+      when(fs && fp, hsp), when(fs && fo, hso), when(fp && fo, hpo))
+    val collected = for (uk <- u; bk <- b) yield uk ++ bk
+    if (cindVerbose(spark))
+      System.err.println(s"graft.cind: frequent conditions unary=$nU binary=" +
+        b.fold("?")(_.length.toString) +
+        (if (collected.isDefined) ", keys=collected" else ", keys=shuffle output"))
+    collected.fold(unary.unionAll(binary))(local)
   }
 
-  /** Capture instances that survive frequent-condition pruning. */
+  /** Capture instances that survive frequent-condition pruning. Runs the
+    * frequency jobs eagerly (see [[frequentConditionHashes]]); the
+    * instances themselves stay lazy. */
   def prunedCaptureInstances(triples: DataFrame, minSupport: Int,
       projections: String = "spo"): DataFrame = {
-    // the hash set is ~8 bytes/condition but its cardinality scales with
-    // vocabulary, so no forced broadcast — AQE decides from the runtime size
-    val freq = frequentConditionHashes(triples, minSupport)
+    // no forced broadcast: the frequent set is a local relation of known
+    // size while it fits autoBroadcastJoinThreshold (the planner broadcasts
+    // it), and a scan without a size estimate past it — its cardinality
+    // scales with vocabulary, so the semi-join then degrades to a shuffle join
     captureInstances(triples, projections)
-      .join(freq,
+      .join(frequentConditionHashes(triples, minSupport),
         condHash(col("cond_code"), col("v1"), col("v2")) === col("h"), "left_semi")
   }
 

@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructType}
 
 /** Native Catalyst expression encoding an ARRAY<STRUCT<code INT, v1 STRING,
@@ -24,6 +24,15 @@ case class DictEncodeIds(child: Expression,
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "dict_encode_ids"
+
+  /** Declared non-deterministic only so the optimizer cannot copy the call
+    * (the `asNondeterministic` UDF idiom): as a deterministic expression it
+    * was inlined into every filter pushed below its projection — the
+    * lines' `size(ids) > 0` and both [[graft.cind.PairCounts]] branches'
+    * width filters — and a line was encoded six times. A non-deterministic
+    * projection is evaluated once per row, with the filters kept above it.
+    * The encode itself is a pure function of the line and the dictionary. */
+  override lazy val deterministic: Boolean = false
 
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -73,6 +82,7 @@ object DictEncodeIds {
       if (id != null) { out(k) = id.longValue(); k += 1 }
       i += 1
     }
-    new GenericArrayData(java.util.Arrays.copyOf(out, k))
+    // unsafe, not generic: GenericArrayData boxes every id of a long[]
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(out, k))
   }
 }

@@ -458,4 +458,165 @@ class CindEngineSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       CindEngine.captureInstances(toDF(tiny), "xyz"))
   }
+
+  // Two-level condition counting at support 3. Counted per triple ROW, so
+  // the duplicates count: ("g", "hates", "w") x3 makes every condition of
+  // that triple frequent through duplicates alone.
+  val twoLevel: Seq[(String, String, String)] = Seq(
+    ("a", "knows", "x"), ("b", "knows", "x"), ("c", "knows", "x"), // frequent binary (knows, x)
+    ("a", "likes", "y"), ("d", "likes", "y"), ("e", "likes", "y"), // a and y frequent, (a, y) not
+    ("a", "owns", "z"),
+    ("f", "rare", "x"), // (rare, x): its member "rare" is infrequent
+    ("b", "knows", "x"),
+    ("g", "hates", "w"), ("g", "hates", "w"), ("g", "hates", "w"))
+
+  /** The six condition counts of `ts`, string-exact, one per triple row. */
+  def conditionCountsOf(ts: Seq[(String, String, String)]): Map[(Int, String, String), Int] =
+    ts.flatMap { case (s, p, o) =>
+      Seq((S, s, ""), (P, p, ""), (O, o, ""), (S | P, s, p), (S | O, s, o), (P | O, p, o))
+    }.groupBy(identity).map { case (c, seen) => c -> seen.size }
+
+  /** Capture instances `(code, v1, v2, join_val, cond_code)` of `ts` whose
+    * condition is matched by >= minSupport triples: the exact prune. */
+  def prunedBruteForce(ts: Seq[(String, String, String)], minSupport: Int)
+      : Seq[(Int, String, String, String, Int)] = {
+    val cnt = conditionCountsOf(ts)
+    ts.flatMap { case (s, p, o) =>
+      Seq((P, S, p, "", s), (O, S, o, "", s), (P | O, S, p, o, s),
+        (S, P, s, "", p), (O, P, o, "", p), (S | O, P, s, o, p),
+        (S, O, s, "", o), (P, O, p, "", o), (S | P, O, s, p, o))
+    }.filter { case (cond, _, v1, v2, _) => cnt((cond, v1, v2)) >= minSupport }
+      .map { case (cond, proj, v1, v2, jv) => (ConditionCodes.capture(cond, proj), v1, v2, jv, cond) }
+      .sorted
+  }
+
+  /** `ts` as a stats-less RDD source: the planner cannot size aggregates
+    * over it, as with a large input. */
+  def rddTriples(ts: Seq[(String, String, String)]) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructType}
+    val schema = new StructType().add("subj", StringType).add("pred", StringType)
+      .add("obj", StringType)
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      ts.map { case (s, p, o) => Row(s, p, o) }, 3), schema)
+  }
+
+  test("two-level condition counts: the prune equals a string-exact brute force in both regimes") {
+    val cnt = conditionCountsOf(twoLevel)
+    val binary = cnt.filter { case ((c, _, _), _) => Integer.bitCount(c) == 2 }
+    def frequentMembers(c: (Int, String, String)) = {
+      val (code, v1, v2) = c
+      val first = Integer.lowestOneBit(code)
+      Seq((first, v1, ""), (code & ~first, v2, "")).count(cnt(_) >= 3)
+    }
+    // the fixture holds every class the binary level distinguishes
+    assert(binary.exists { case (c, n) => n >= 3 && frequentMembers(c) == 2 })
+    assert(binary.exists { case (c, n) => n < 3 && frequentMembers(c) == 2 })
+    assert(binary.exists { case (c, _) => frequentMembers(c) == 1 })
+    assert(twoLevel.diff(twoLevel.distinct).nonEmpty)
+    import org.apache.spark.sql.graft.CacheProbe
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    val want = prunedBruteForce(twoLevel, 3)
+    val cinds = bruteForce(twoLevel, 3)
+    assert(cinds.exists { case (dep, ref, _) => dep.v2.nonEmpty || ref.v2.nonEmpty })
+    // room for U alone: U is collected, B is read back from its shuffle
+    val nU = cnt.count { case ((c, _, _), n) => Integer.bitCount(c) == 1 && n >= 3 }
+    for (threshold <- Seq("10MB", (16 * nU).toString, "-1")) {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      try {
+        for (triples <- Seq(toDF(twoLevel), rddTriples(twoLevel))) {
+          val (n0, rdds0) = (CacheProbe.entries(spark), spark.sparkContext.getPersistentRDDs.size)
+          val pruned = CindEngine.prunedCaptureInstances(triples, 3)
+          val got = pruned.select("code", "v1", "v2", "join_val", "cond_code").collect()
+            .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getInt(4)))
+            .toSeq.sorted
+          assert(got == want, s"threshold $threshold")
+          // each level is counted once, before the prune: whether it was
+          // collected or is read back from its shuffle, the prune's own
+          // plan recounts nothing
+          val plan = nodes(pruned.queryExecution.executedPlan)
+          assert(!plan.exists(_.isInstanceOf[HashAggregateExec]), s"threshold $threshold: $plan")
+          if (threshold == "-1") {
+            assert(!plan.exists(_.isInstanceOf[BroadcastHashJoinExec]), plan)
+            assert(plan.exists {
+              case j: SortMergeJoinExec => j.joinType == LeftSemi
+              case _ => false
+            }, plan)
+          }
+          CindEngine.bloomPrunedCaptureInstances(triples, 3).count()
+          // the prune entry points leave nothing cached
+          assert(CacheProbe.entries(spark) == n0, s"threshold $threshold")
+          assert(spark.sparkContext.getPersistentRDDs.size == rdds0, s"threshold $threshold")
+          for (bloom <- Seq(false, true))
+            assert(distinctKeys(CindEngine.allCinds(triples, minSupport = 3,
+              bloomConditions = bloom).collect()) == cinds, s"threshold $threshold, bloom $bloom")
+        }
+      } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+  }
+
+  test("the condition prune is a map-side broadcast semi-join feeding the line kernel") {
+    import org.apache.spark.sql.execution.{GenerateExec, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }
+    // root-to-node paths of every node `hit` matches
+    def paths(p: SparkPlan, hit: SparkPlan => Boolean): Seq[List[SparkPlan]] =
+      (if (hit(p)) Seq(List(p)) else Nil) ++ kids(p).flatMap(paths(_, hit).map(p :: _))
+    // a stats-less source: an unhinted aggregate of it would plan as a
+    // shuffle join and shuffle the whole instance stream first
+    val lines = JoinLines(CindEngine.prunedCaptureInstances(rddTriples(twoLevel), 3))
+    lines.collect()
+    val plan = lines.queryExecution.executedPlan
+    val fanOut = paths(plan, _.isInstanceOf[GenerateExec])
+    assert(fanOut.size == 1, plan)
+    // from the capture fan-out up to the kernel's map-side sort
+    val segment = fanOut.head.reverse.takeWhile(!_.isInstanceOf[SortExec])
+    assert(segment.size < fanOut.head.size, plan)
+    assert(!segment.exists(n => n.isInstanceOf[ShuffleExchangeLike] ||
+      n.isInstanceOf[ShuffleQueryStageExec]), plan)
+    val semi = segment.collect {
+      case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j
+    }
+    assert(semi.size == 1, plan)
+    // the collected keys sit in one partition: the broadcast reads them
+    // back in one task, not one per core
+    def built(p: SparkPlan): SparkPlan = p match {
+      case b: BroadcastExchangeLike => b.child
+      case other => built(kids(other).head)
+    }
+    assert(built(semi.head.right).execute().getNumPartitions == 1, plan)
+  }
+
+  test("the dictionary encode runs once per line in each consumer branch") {
+    import graft.functions.DictEncodeIds
+    def encodes(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case node =>
+        node.expressions.map(_.collect { case d: DictEncodeIds => d }.size).sum
+      }.sum
+    val enc = CindEngine.encodedJoinLines(toDF(tiny), minSupport = 2)
+    try {
+      assert(enc.linesMapOnly)
+      assert(encodes(enc.lines) == 1)
+      // the kernel reads the lines in a narrow and a wide branch
+      assert(encodes(PairCounts(enc.lines, 2, CindEngine.SplitThreshold)) == 2)
+    } finally enc.internal.foreach(_.unpersist())
+    assert(distinctKeys(CindEngine.allCinds(toDF(tiny), minSupport = 2).collect()) ==
+      bruteForce(tiny, 2))
+  }
 }
