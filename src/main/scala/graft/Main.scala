@@ -17,29 +17,25 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *   --ar-output PATH      write association rules as text
   *   --support N           minimum support (default 10)
   *   --strategy S          count-match | intersect | tworound | small-to-large
-  *                         | hybrid | auto (default count-match; reference
-  *                         traversal strategies 0 / 1 / 2-3 analogs —
-  *                         small-to-large is the reference default's staged
-  *                         arity ladder, hybrid the single-pass exact/Bloom
-  *                         merge of IntersectHalfApproximateCindCandidates,
-  *                         auto picks count-match or small-to-large by the
-  *                         sampled input-size estimate: the measured sf1
-  *                         crossover, BASELINE.md "10x scale soak")
-  *   --hybrid-spill N      hybrid only: refs-per-evidence above which an
-  *                         evidence spills to Bloom bits (default 64)
+  *                         | hybrid | auto, accepted for reference-CLI
+  *                         compatibility (traversal strategies 0 / 1 / 2-3
+  *                         and the hybrid merge). Every value runs
+  *                         count-match: on the PairCounts kernel the other
+  *                         evidence steps were slower or tied at every
+  *                         measured width and scale (BASELINE.md "One
+  *                         evidence step")
   *   --merge-window-size N accepted for reference-CLI compatibility
   *                         (BulkMergeDependencies' memory-adaptive merge
-  *                         window). Subsumed: Spark's ObjectHashAggregate
-  *                         spills partial buffers to disk itself, so there
-  *                         is no window to size — the value is ignored
-  *   --use-ars             association-rule pruning (reference --use-ars);
-  *                         composes with every strategy
+  *                         window) and ignored: the PairCounts kernel sorts
+  *                         a fixed-size key buffer per map task and merges
+  *                         under Spark's external sort, so there is no
+  *                         window to size
+  *   --use-ars             association-rule pruning (reference --use-ars)
   *   --use-bloom           Bloom-filtered frequency pruning, filters sized by
   *                         a sampled triple-count estimate (reference
-  *                         --use-fis sizing rule; results identical);
-  *                         composes with every strategy
+  *                         --use-fis sizing rule; results identical)
   *   --projection ATTRS    which of s/p/o to project (reference --projection,
-  *                         default spo); composes with every strategy
+  *                         default spo)
   *   --clean-implied       minimality pruning (reference --clean-implied)
   *   --debug-counts        print per-stage row counters (reference
   *                         accumulator counters, operators/CountItems.scala)
@@ -58,7 +54,6 @@ object Main {
       arOutput: Option[String] = None,
       support: Int = CindEngine.DefaultMinSupport,
       strategy: String = "count-match",
-      hybridSpill: Int = CindEngine.HybridSpillThreshold,
       mergeWindowSize: Option[Int] = None,
       useArs: Boolean = false,
       useBloom: Boolean = false,
@@ -79,7 +74,6 @@ object Main {
       case "--ar-output" :: v :: t    => loop(t, c.copy(arOutput = Some(v)))
       case "--support" :: v :: t      => loop(t, c.copy(support = v.toInt))
       case "--strategy" :: v :: t     => loop(t, c.copy(strategy = v))
-      case "--hybrid-spill" :: v :: t => loop(t, c.copy(hybridSpill = v.toInt))
       case "--merge-window-size" :: v :: t =>
         loop(t, c.copy(mergeWindowSize = Some(v.toInt)))
       case "--use-ars" :: t           => loop(t, c.copy(useArs = true))
@@ -100,7 +94,6 @@ object Main {
     require(c.inputs.nonEmpty, "at least one input path is required")
     require(Set("count-match", "intersect", "tworound", "small-to-large", "hybrid",
       "auto")(c.strategy), s"unknown strategy ${c.strategy}")
-    require(c.hybridSpill > 0, s"--hybrid-spill must be positive, got ${c.hybridSpill}")
     require(c.projections.nonEmpty && c.projections.forall("spo".contains(_)),
       s"--projection must be a non-empty subset of spo, got ${c.projections}")
     c
@@ -138,11 +131,11 @@ object Main {
     triples
   }
 
-  /** Discovery per configured strategy. `--projection`, `--use-ars` and
-    * `--use-bloom` compose freely with every strategy (the reference
-    * composes them the same way, programs/RDFind.scala:639-721): AR rules
-    * feed the shared fan-out anti-join + output filter, the Bloom filters
-    * are sized from a sampled triple-count estimate (estTriples /
+  /** Discovery, whatever `--strategy` names (see the CLI doc).
+    * `--projection`, `--use-ars` and `--use-bloom` compose freely (the
+    * reference composes them the same way, programs/RDFind.scala:639-721):
+    * AR rules feed the shared fan-out anti-join + output filter, the Bloom
+    * filters are sized from a sampled triple-count estimate (estTriples /
     * minSupport, reference FrequentConditionPlanner.scala:34-38), and the
     * projection restriction narrows the capture fan-out at the source. */
   def discover(triples: DataFrame, c: Config): Dataset[CindRow] = {
@@ -154,67 +147,14 @@ object Main {
           .estimateTripleCount(triples.sparkSession, c.inputs)
         math.max(1000L, est / math.max(1, c.support))
       } else 10000000L
-    val strategy =
-      if (c.strategy == "auto") chooseStrategy(triples.sparkSession, c)
-      else c.strategy
-    val cinds = strategy match {
-      case "count-match" =>
-        CindEngine.allCinds(triples, c.support,
-          bloomConditions = c.useBloom, bloomCaptures = c.useBloom,
-          expectedFrequentKeys = expected, projections = c.projections,
-          arRules = rules)
-      case "intersect" =>
-        CindEngine.allCindsIntersect(triples, c.support,
-          bloomConditions = c.useBloom, expectedFrequentKeys = expected,
-          projections = c.projections, arRules = rules)
-      case "tworound" =>
-        CindEngine.allCindsTwoRound(triples, c.support,
-          bloomConditions = c.useBloom, bloomCaptures = c.useBloom,
-          expectedFrequentKeys = expected, projections = c.projections,
-          arRules = rules)
-      case "small-to-large" =>
-        CindEngine.allCindsSmallToLarge(triples, c.support,
-          bloomConditions = c.useBloom, bloomCaptures = c.useBloom,
-          expectedFrequentKeys = expected, projections = c.projections,
-          arRules = rules)
-      case "hybrid" =>
-        CindEngine.allCindsHybrid(triples, c.support,
-          spillThreshold = c.hybridSpill,
-          bloomConditions = c.useBloom, bloomCaptures = c.useBloom,
-          expectedFrequentKeys = expected, projections = c.projections,
-          arRules = rules)
-    }
+    val cinds = CindEngine.allCinds(triples, c.support,
+      bloomConditions = c.useBloom, bloomCaptures = c.useBloom,
+      expectedFrequentKeys = expected, projections = c.projections,
+      arRules = rules)
     if (c.cleanImplied) {
       import triples.sparkSession.implicits._
       CindEngine.minimalCinds(cinds.toDF()).as[CindRow]
     } else cinds
-  }
-
-  /** Inputs above which `--strategy auto` switches from count-match to the
-    * single-pass hybrid merge. The crossover was measured (BASELINE.md "10x
-    * scale soak") when count-match still counted pairs with a hash
-    * aggregate: count-match won below ~sf1 (its single pair-count shuffle
-    * beat everything on small dictionaries), but that exchange shuffled a
-    * row per distinct co-occurring pair per map task — at 23M triples the
-    * hybrid was 10.4x faster with 15x less shuffle, because its
-    * combiner-side intersection collapses each dependent's evidence to ONE
-    * bounded buffer per map task before the shuffle (exactly why the
-    * reference built its hybrid buffers), with small-to-large (2.9x,
-    * probe-pruned) the runner-up. The sort-based PairCounts kernel now
-    * ships a few bytes per distinct pair instead (hub_lines: 23.8 → 2.6 MB
-    * of evidence shuffle, BASELINE.md), so the crossover may have moved;
-    * it is not re-measured at scale, and 10M stays until that soak is
-    * re-run. */
-  val AutoStrategyTriplesCutoff = 10000000L
-
-  /** `--strategy auto`: count-match for small inputs, hybrid at scale,
-    * decided by the same sampled size estimate that sizes the Bloom
-    * filters (reference RDFind.scala:109-136 — the reference likewise uses
-    * its input-size estimate to pick plan parameters up front). */
-  def chooseStrategy(spark: SparkSession, c: Config,
-      cutoff: Long = AutoStrategyTriplesCutoff): String = {
-    val est = graft.rdf.TripleSource.estimateTripleCount(spark, c.inputs)
-    if (est > cutoff) "hybrid" else "count-match"
   }
 
   /** Per-stage row counters behind `--debug-counts` (reference S9 — the

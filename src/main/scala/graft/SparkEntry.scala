@@ -666,19 +666,19 @@ object SparkEntry {
     "cind_minimal" -> ((s, dir) =>
       CindEngine.minimalCinds(CindEngine.allCinds(triples(s, dir), MS).toDF())
         .orderBy(cindCols.map(col): _*)),
-    "cind_all_tworound" -> ((s, dir) => // strategy 2/3 analog: exact result
+    // the reference's other traversal strategies: each runs allCinds
+    // (CindEngine.allCindsIntersect), so each plan equals cind_all's
+    "cind_all_tworound" -> ((s, dir) => // strategies 2/3
       CindEngine.allCindsTwoRound(triples(s, dir), MS).toDF()
         .orderBy(cindCols.map(col): _*)),
-    "cind_all_intersect" -> ((s, dir) => // strategy 0: typed-Aggregator k-way
+    "cind_all_intersect" -> ((s, dir) => // strategy 0
       CindEngine.allCindsIntersect(triples(s, dir), MS).toDF()
         .orderBy(cindCols.map(col): _*)),
-    "cind_all_s2l" -> ((s, dir) => // reference default: staged arity ladder
+    "cind_all_s2l" -> ((s, dir) => // strategy 1, the reference default
       CindEngine.allCindsSmallToLarge(triples(s, dir), MS).toDF()
         .orderBy(cindCols.map(col): _*)),
-    "cind_all_hybrid" -> ((s, dir) => // single-pass exact/Bloom merge (A3)
-      // spill LOW so the fixture genuinely exercises all three result
-      // paths (exact deps, mixed deps, BF-only deps), not just the exact one
-      CindEngine.allCindsHybrid(triples(s, dir), MS, spillThreshold = 8).toDF()
+    "cind_all_hybrid" -> ((s, dir) => // the hybrid exact/Bloom merge (A3)
+      CindEngine.allCindsHybrid(triples(s, dir), MS).toDF()
         .orderBy(cindCols.map(col): _*)),
     "cind_all_bloom" -> ((s, dir) => // 100 TB valves: both Bloom paths ON
       CindEngine.allCinds(triples(s, dir), MS,

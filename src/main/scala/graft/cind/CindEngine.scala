@@ -1,8 +1,7 @@
 package graft.cind
 
-import graft.core.{CacheOps, ConditionCodes, SortedOps}
+import graft.core.{CacheOps, ConditionCodes}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** A discovered CIND row (final output shape). */
@@ -11,37 +10,8 @@ final case class CindRow(
     ref_code: Int, ref_v1: String, ref_v2: String,
     support: Long)
 
-/** One hybrid evidence over encoded ids: a dependent capture plus its
-  * co-occurring refs from ONE join line — exact (`bits` empty) for narrow
-  * lines, Bloom bits (`refs` empty) for wide ones (reference
-  * CreateHalfApproximateCindCandidates semantics). */
-final case class HybridEvidence(dep: Long, refs: Array[Long], bits: Array[Long])
-
-/** Hybrid aggregation buffer: exact sorted-intersection ∧ bitwise-AND'd
-  * Bloom bits, with flags for which halves have been fed (reference
-  * HalfApproximateCindSet's (refConditions, approximateRefConditions,
-  * isExact) triple). `count == 0` marks the zero buffer. `refs` is the
-  * intersected sorted id set, PLAIN longs — delta+varint packing these
-  * buffers was built and MEASURED NEGATIVE at sf5 (r13, BASELINE.md):
-  * reduce() pays an unpack+repack per evidence in the hot sort-based
-  * aggregation (623 → 2890 s wall) while the wire bytes it aimed at are
-  * NOT the max stage (that is the shared line-formation instance
-  * exchange, invariant to evidence payload — proven by the prune run's
-  * bit-identical 23,848 MB). */
-final case class HybridCindSet(count: Long, refs: Array[Long], hasExact: Boolean,
-    bits: Array[Long], hasBits: Boolean)
-
-/** Exact evidence over encoded ids: one dependent capture and its sorted
-  * co-occurring refs from ONE join line (strategy 0), or those refs
-  * pre-filtered by round-1 state (the hybrid's second round). */
-final case class LongRefsEvidence(dep: Long, refs: Array[Long])
-
-/** Exact intersection state: lines seen and the refs in all of them (the
-  * exchange carries one buffer per dep per map partition). */
-final case class LongRefsSet(count: Long, refs: Array[Long])
-
 /** [[CindEngine.encodedJoinLines]]' result: the persisted capture
-  * dictionary, the encoded lines relation (not persisted — the strategy
+  * dictionary, the encoded lines relation (not persisted — the discovery
   * skeleton decides), the dictionary's counted size, the ONE
   * broadcast-vs-shuffle regime decision every downstream join hint reads
   * (`broadcast`), whether the lines are a pure map over a cached upstream
@@ -55,13 +25,6 @@ private[cind] final case class EncodedLines(
     broadcast: Boolean,
     linesMapOnly: Boolean,
     internal: Seq[Dataset[_]])
-
-/** A strategy's evidence step output: directed (dep_id, ref_id, n) rows —
-  * `n == support(dep)` exactly when dep ⊑ ref — plus the internal caches
-  * the step persisted, released by the skeleton after the result is
-  * materialized. */
-private[cind] final case class Evidence(counts: DataFrame,
-    internal: Seq[Dataset[_]] = Nil)
 
 /** The CIND discovery pipeline, re-expressed Spark-first.
   *
@@ -83,14 +46,11 @@ private[cind] final case class Evidence(counts: DataFrame,
   *                                          at the merge; ref: overlap sets)
   *     -> CINDs: co-count == dep support   (ref: SmallToLargeTraversalStrategy.scala:63-105)
   *
-  * Every strategy runs on one skeleton ([[discover]], the reference's
-  * plan/TraversalStrategy.scala base) and differs only in its evidence
-  * step over the encoded lines; all are result-identical (spec-pinned):
-  * `allCindsIntersect` (reference strategy 0: k-way sorted-set
-  * intersection), `allCindsTwoRound` (reference strategies 2/3:
-  * spectral-sketch candidate pruning + exact second round),
-  * `allCindsSmallToLarge` (strategy 1's arity ladder) and
-  * `allCindsHybrid` (the half-approximate exact/Bloom merge). The
+  * Discovery runs on one skeleton ([[discover]], the reference's
+  * plan/TraversalStrategy.scala base) with one evidence step, the pair
+  * counts. The reference's other traversal strategies keep their names
+  * (`allCindsIntersect`, `allCindsTwoRound`, `allCindsSmallToLarge`,
+  * `allCindsHybrid`) but run [[allCinds]]: see [[allCindsIntersect]]. The
   * `bloomConditions` flag swaps in frequency Bloom filters for the exact
   * broadcast sets.
   *
@@ -404,40 +364,6 @@ object CindEngine {
   private[cind] def cindVerbose(spark: SparkSession): Boolean =
     spark.conf.getOption("spark.graft.cind.verbose").exists(_.toBoolean)
 
-  /** Dictionary size up to which the DIRECTIONAL evidence paths (hybrid
-    * round 1/2, small-to-large's stage-2/3 admit rule) broadcast a dense
-    * id→support array and drop refs with support(ref) < support(dep)
-    * MAP-SIDE, before the evidence exchange. EXACT, not approximate: dep ⊑
-    * ref needs co-count(dep, ref) == support(dep), and co-count <=
-    * support(ref), so a ref poorer than its dep can never certify (the same
-    * monotonicity that justifies the reported-CIND support ordering above).
-    * Only a directional rule can use it: an unordered pair key of the
-    * [[PairCounts]] kernel always has one feasible direction, so the floor
-    * alone drops nothing there — small-to-large's admit applies it to each
-    * direction together with that direction's probes.
-    * Cost: 8 B/capture on each executor ((id >> 1)-indexed longs), hence
-    * its own valve; past it the prune is skipped (pure optimization). */
-  val DefaultSupportPruneMaxIds = 16000000L
-
-  private[cind] def supportPruneMaxIds(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.cind.supportPruneMaxIds")
-      .map(_.toLong).getOrElse(DefaultSupportPruneMaxIds)
-
-  /** Dense (id >>> 1)-indexed id→support array for the monotonicity prune;
-    * EMPTY (prune disabled) past [[supportPruneMaxIds]]. */
-  private def supportArray(dict: DataFrame, nDict: Long): Array[Long] = {
-    val spark = dict.sparkSession
-    if (nDict > supportPruneMaxIds(spark)) Array.emptyLongArray
-    else {
-      // ids are ((i+1) << 1) | unaryBit with i < nDict (dictWithIds), so
-      // (id >>> 1) ranges over [1, nDict] — slot 0 stays unused
-      val arr = new Array[Long](nDict.toInt + 1)
-      dict.select(col("id"), col("support")).collect()
-        .foreach(r => arr((r.getLong(0) >>> 1).toInt) = r.getLong(1))
-      arr
-    }
-  }
-
   /** Salted two-phase regroup of (join_val, id, nsalt) rows into
     * (join_val, ids): phase 1 groups by (join_val, salt) with every
     * aggregation buffer bounded ≈ the salt threshold; phase 2 concatenates
@@ -470,8 +396,8 @@ object CindEngine {
         (floor((col("n_") - 1) / lit(hot)) + 1).cast("int").as("nsalt")))
   }
 
-  /** The pruned, dictionary-encoded join lines shared by every strategy,
-    * the join-line histogram and the unary overlaps: the persisted
+  /** The pruned, dictionary-encoded join lines shared by discovery, the
+    * join-line histogram and the unary overlaps: the persisted
     * frequent-capture dictionary (code, v1, v2, support, id), the lines
     * (join_val, ids ARRAY<LONG>), and the dictionary's counted size. The
     * broadcast-vs-shuffle regime is decided HERE, once, and carried in
@@ -491,14 +417,14 @@ object CindEngine {
       bloomConditions: Boolean = false,
       arRules: Option[DataFrame] = None,
       bloomCaptures: Boolean = false,
-      expectedCaptures: Long = 10000000L,
+      expectedConditions: Long = 10000000L,
       projections: String = "spo"): EncodedLines = {
     // 1. Condition-frequency pruning first (reference FrequentConditionPlanner
     //    order): a cheap map-side-combinable count that typically halves the
     //    instance stream before anything expensive runs. Bloom mode swaps
     //    the exact broadcast set for a fixed-size filter (100 TB path).
     val pruned0 =
-      if (bloomConditions) bloomPrunedCaptureInstances(triples, minSupport, expectedCaptures, projections)
+      if (bloomConditions) bloomPrunedCaptureInstances(triples, minSupport, expectedConditions, projections)
       else prunedCaptureInstances(triples, minSupport, projections)
     // 1b. Association-rule fan-out pruning (reference CreateJoinPartners
     //     .scala:100,117,134 + :183-196): a binary condition that merges a
@@ -569,7 +495,8 @@ object CindEngine {
           spark.sparkContext.broadcast(dictMap)))
     }
     // frequent-capture membership BF over [[condHash]] keys, built at
-    // dictionary scale: the shuffle paths probe it MAP-SIDE so infrequent
+    // dictionary scale and sized by it (the filter holds exactly the nDict
+    // dictionary keys): the shuffle paths probe it MAP-SIDE so infrequent
     // captures never reach an encode exchange (VERDICT r12 #3). False
     // positives only ADMIT extra rows; the dictionary join or map miss
     // drops them.
@@ -577,7 +504,7 @@ object CindEngine {
       rows.filter(bloomContains(
         spark.sparkContext.broadcast(buildBloomLongs(
           grouped.select(condHash(col("code"), col("v1"), col("v2")).as("k")).as[Long],
-          expectedCaptures, 0.01)),
+          math.max(nDict, 1L), 0.01)),
         condHash(col("code"), col("v1"), col("v2"))))
     val idCols = dict.select("code", "v1", "v2", "id")
     val lines =
@@ -641,7 +568,7 @@ object CindEngine {
     * Persisted: downstream plans reference the dict from several broadcast
     * exchanges, which Spark computes eagerly on parallel threads — with a
     * lazy cache each would recompute the whole lineage; the first consumer
-    * (the encode collect in the broadcast regime, the strategy's lines job
+    * (the encode collect in the broadcast regime, the kernel's lines job
     * past it) fills the cache.
     *
     * Returns (dict, nDict): the ONE partition-size job both numbers the ids
@@ -760,9 +687,56 @@ object CindEngine {
     CacheOps.cacheResult(out, internal.result() ++ enc.internal)
   }
 
+  /** Spectral-sketch candidate filter over the unordered pair keys of
+    * `lines` (the reference's half-approximate round 1: E4/E5 extract, A4
+    * merge, G6 `EvaluateHalfApproximateOverlapSets` collapse), returned as
+    * the kernel's admit predicate:
+    *
+    *   - per-partition SPECTRAL Bloom filters count the kernel's enumerated
+    *     keys map-side (no shuffle; cell width derived from minSupport as
+    *     in the reference),
+    *   - cells tree-merge on executors,
+    *   - the sketch collapses to a membership filter of keys with count >=
+    *     minSupport (`toBloomFilter`, the reference's G6 move), broadcast.
+    *
+    * Saturating counters never under-count, so every key with true count >=
+    * minSupport is admitted — downstream exact filters see no change; the
+    * shuffle just carries plausible candidates instead of every
+    * co-occurrence. Undersizing `expectedPairs` only weakens pruning. */
+  private def sketchAdmit(lines: DataFrame, minSupport: Int,
+      expectedPairs: Long, splitThreshold: Int): Long => Boolean = {
+    val spark = lines.sparkSession
+    val proto = graft.core.SpectralBloomFilter.create(expectedPairs, 0.1, minSupport)
+    val (nc, bpc, nh, words) = (proto.numCells, proto.bitsPerCell, proto.numHashes, proto.cells.length)
+    val cellArrays = PairCounts.foldPartitions(lines, splitThreshold) { pairs =>
+      val s = new graft.core.SpectralBloomFilter(nc, bpc, nh, new Array[Long](words))
+      val buf = new Array[Long](4096)
+      var len = pairs.fill(buf, 0)
+      while (len > 0) {
+        var k = 0; while (k < len) { s.add(buf(k)); k += 1 }
+        len = pairs.fill(buf, 0)
+      }
+      s.cells
+    }(spark.implicits.newLongArrayEncoder)
+    // executor-side tree merge (see buildBloomLongs): cell arrays are MBs each,
+    // funnelling them all through the driver is the scale bottleneck; and
+    // treeReduce (not treeAggregate) so the MB-sized zero array is not
+    // serialized into every task closure
+    val mergeCells = (a: Array[Long], b: Array[Long]) =>
+      new graft.core.SpectralBloomFilter(nc, bpc, nh, a)
+        .mergeInPlace(new graft.core.SpectralBloomFilter(nc, bpc, nh, b)).cells
+    val rdd = cellArrays.rdd
+    val merged =
+      if (rdd.getNumPartitions == 0) new Array[Long](words)
+      else rdd.treeReduce(mergeCells, depth = 2)
+    val bcast = spark.sparkContext.broadcast(new graft.core.SpectralBloomFilter(nc, bpc, nh, merged)
+      .toBloomFilter(minSupport))
+    PairCounts.taskAdmit { () => val bf = bcast.value; pk => bf.mightContain(pk) }
+  }
+
   /** Decode directed counts into CIND rows: keep pairs whose co-count
-    * equals the dep's support — the ONE place every strategy's result is
-    * certified — drop trivially-implied refs, resolve IDs.
+    * equals the dep's support — the ONE place a result is certified —
+    * drop trivially-implied refs, resolve IDs.
     *
     * SIZE-CONDITIONAL shape (the encode valve's twin, both regimes
     * measured at the r12 sf5 soak): below dictEncodeMaxBroadcastRows the
@@ -814,43 +788,43 @@ object CindEngine {
       .as[CindRow]
   }
 
-  /** The one strategy skeleton (the reference's plan/TraversalStrategy
-    * .scala base): encode the join lines, apply the persist rule, run the
-    * strategy's evidence step, decode, apply the AR output filter, and
-    * materialize the compact result while releasing every internal cache.
-    * Strategies differ ONLY in `evidence`.
+  /** The discovery skeleton (the reference's plan/TraversalStrategy
+    * .scala base): encode the join lines, apply the persist rule, count
+    * their pairs through the [[PairCounts]] kernel, decode, apply the AR
+    * output filter, and materialize the compact result while releasing
+    * every internal cache. `sizes` only shrinks in tests.
     *
     * Persist rule: the encoded lines are persisted (and counted, so the
-    * evidence step's parallel stage materializations read a filled cache)
-    * iff recomputing them shuffles — the salted regroup shapes — or the
-    * strategy asks for it (`persistLines`, two-round). Pair fan-outs read
-    * the lines once per union arm (the narrow and wide skew-split branches'
-    * differing pushed-down projections defeat exchange reuse): the r13 job
-    * profile showed the whole regroup subtree EXECUTING 4x there. In the
-    * broadcast-map regime the lines are a pure map over the cached lines0,
-    * and re-running that map per consumer measured CHEAPER than writing +
-    * count-barriering a second full copy (r14 A/B, OPTIMIZATION_r14.md). */
-  private[cind] def discover(triples: DataFrame, minSupport: Int,
+    * kernel's parallel stage materializations read a filled cache) iff
+    * recomputing them shuffles — the salted regroup shapes. The kernel
+    * reads the lines once per union arm (the narrow and wide skew-split
+    * branches' differing pushed-down projections defeat exchange reuse):
+    * the r13 job profile showed the whole regroup subtree EXECUTING 4x
+    * there. In the broadcast-map regime the lines are a pure map over the
+    * cached lines0, and re-running that map per consumer measured CHEAPER
+    * than writing + count-barriering a second full copy (r14 A/B,
+    * OPTIMIZATION_r14.md). */
+  private[cind] def discover(triples: DataFrame, minSupport: Int, splitThreshold: Int,
       bloomConditions: Boolean, bloomCaptures: Boolean,
       expectedFrequentKeys: Long, projections: String,
-      arRules: Option[DataFrame], persistLines: Boolean = false)(
-      evidence: EncodedLines => Evidence): Dataset[CindRow] = {
-    // expectedFrequentKeys sizes BOTH Bloom paths (reference rule:
+      arRules: Option[DataFrame],
+      sizes: PairCounts.Sizes = PairCounts.Sizes()): Dataset[CindRow] = {
+    // expectedFrequentKeys sizes the condition Bloom path (reference rule:
     // estimated triples / minSupport, FrequentConditionPlanner.scala:34-38)
     val enc0 = encodedJoinLines(triples, minSupport, bloomConditions,
       arRules = arRules, bloomCaptures = bloomCaptures,
-      expectedCaptures = expectedFrequentKeys, projections = projections)
+      expectedConditions = expectedFrequentKeys, projections = projections)
     val enc =
-      if (!persistLines && enc0.linesMapOnly) enc0
+      if (enc0.linesMapOnly) enc0
       else {
         val lines = enc0.lines.persist()
         lines.count()
         enc0.copy(lines = lines, internal = lines +: enc0.internal)
       }
-    val ev = evidence(enc)
-    val cinds = decodeCinds(enc, ev.counts, minSupport)
+    val counts = expandCounts(PairCounts(enc.lines, minSupport, splitThreshold, sizes = sizes))
+    val cinds = decodeCinds(enc, counts, minSupport)
     val out = arRules.fold(cinds)(rules => arImpliedCindFilter(cinds.toDF(), rules))
-    CacheOps.cacheResult(out, ev.internal ++ enc.internal)
+    CacheOps.cacheResult(out, enc.internal)
   }
 
   /** All CINDs (trivial implications excluded) with support >= minSupport.
@@ -865,12 +839,11 @@ object CindEngine {
     * ships run-length counted, delta-varint coded blocks; the reduce side
     * merges them per hash bucket and drops every count below minSupport
     * before [[expandCounts]] restores both directions. State is a fixed
-    * buffer per map task and one bucket's blocks per reduce task; the
-    * intersect strategy's buffer instead holds a ref ARRAY whose size is
-    * unbounded on hub-heavy data. Frequent-capture pruning (support >=
-    * minSupport on BOTH sides — sound because a reported ref's value set
-    * contains its dep's, so its support is >= dep's) is what keeps hub
-    * join lines narrow and the pair fan-out quadratic-safe. */
+    * buffer per map task and one bucket's blocks per reduce task, whatever
+    * the line width. Frequent-capture pruning (support >= minSupport on
+    * BOTH sides — sound because a reported ref's value set contains its
+    * dep's, so its support is >= dep's) is what keeps hub join lines narrow
+    * and the pair fan-out quadratic-safe. */
   def allCinds(triples: DataFrame, minSupport: Int = DefaultMinSupport,
       splitThreshold: Int = SplitThreshold,
       bloomConditions: Boolean = false,
@@ -878,13 +851,32 @@ object CindEngine {
       expectedFrequentKeys: Long = 10000000L,
       projections: String = "spo",
       arRules: Option[DataFrame] = None): Dataset[CindRow] =
-    discover(triples, minSupport, bloomConditions, bloomCaptures,
-      expectedFrequentKeys, projections, arRules)(countMatchEvidence(_, minSupport, splitThreshold))
+    discover(triples, minSupport, splitThreshold, bloomConditions, bloomCaptures,
+      expectedFrequentKeys, projections, arRules)
 
-  /** [[allCinds]]' evidence step: the kernel's floored pair counts. */
-  private[cind] def countMatchEvidence(enc: EncodedLines, minSupport: Int,
-      splitThreshold: Int, sizes: PairCounts.Sizes = PairCounts.Sizes()): Evidence =
-    Evidence(expandCounts(PairCounts(enc.lines, minSupport, splitThreshold, sizes = sizes)))
+  /** The reference's other traversal strategies under their own names, for
+    * their oracle queries and `--strategy` values: AllAtOnce k-way
+    * intersection (strategy 0), the small-to-large arity ladder (1), the
+    * two-round spectral sketch (2/3) and the hybrid exact/Bloom merge of
+    * IntersectHalfApproximateCindCandidates. Each bounded per-dependent
+    * evidence state, which the [[PairCounts]] kernel bounds by
+    * construction, and each was slower than count-match on the kernel or
+    * tied with it at every measured line width and input scale (BASELINE.md
+    * "One evidence step"), so each runs [[allCinds]]. */
+  def allCindsIntersect(triples: DataFrame, minSupport: Int = DefaultMinSupport): Dataset[CindRow] =
+    allCinds(triples, minSupport)
+
+  /** Runs [[allCinds]]: see [[allCindsIntersect]]. */
+  def allCindsSmallToLarge(triples: DataFrame, minSupport: Int = DefaultMinSupport): Dataset[CindRow] =
+    allCinds(triples, minSupport)
+
+  /** Runs [[allCinds]]: see [[allCindsIntersect]]. */
+  def allCindsTwoRound(triples: DataFrame, minSupport: Int = DefaultMinSupport): Dataset[CindRow] =
+    allCinds(triples, minSupport)
+
+  /** Runs [[allCinds]]: see [[allCindsIntersect]]. */
+  def allCindsHybrid(triples: DataFrame, minSupport: Int = DefaultMinSupport): Dataset[CindRow] =
+    allCinds(triples, minSupport)
 
   /** A rule's merged binary condition as (cond_code, v1, v2), values ordered
     * by attribute code (reference CreateJoinPartners.scala:183-196). */
@@ -918,7 +910,7 @@ object CindEngine {
     CacheOps.cacheResult(out, Seq(rules))
   }
 
-  /** Output-side AR pruning shared by all strategies: drop 1/1 CINDs
+  /** Output-side AR pruning: drop 1/1 CINDs
     * `proj[ante] ⊑ proj[cons]` directly implied by a confidence-1.0 rule
     * (reference operators/FilterAssociationRuleImpliedCinds.scala:17-58:
     * the projection attribute is the one attribute neither side conditions
@@ -936,447 +928,6 @@ object CindEngine {
       "left_anti").as[CindRow]
   }
 
-  /** Two-round half-approximate discovery (reference strategies 2/3,
-    * plan/ApproximateAllAtOnceTraversalStrategy.scala:27-114 +
-    * LateBBTraversalStrategy.scala:24-123, re-expressed for the count-match
-    * plan):
-    *
-    *   round 1 — stream the [[PairCounts]] kernel's pair enumerator
-    *     through per-partition SPECTRAL Bloom filters (saturating counting
-    *     sketch, cell width from minSupport as in the reference), merge
-    *     cell-wise, collapse with `toBloomFilter(minSupport)` (the
-    *     reference's own G6 move) and broadcast. No shuffle: the sketch
-    *     rides the map side.
-    *   round 2 — the exact kernel count, with the filter as its admit
-    *     predicate: only admitted keys are buffered and shuffled.
-    *
-    * A CIND pair co-occurs >= minSupport times and the sketch never
-    * under-counts (cell saturation caps at >= minSupport by construction),
-    * so pruning admits every true pair: the result is EXACTLY allCinds
-    * (spec-pinned). What the sketch buys at scale: the round-2 shuffle
-    * carries only plausible candidates instead of every co-occurrence —
-    * the same memory/volume bound the reference bought with its
-    * half-approximate CindSets, paid with a second map pass instead of a
-    * second extraction job.
-    *
-    * `expectedPairs` sizes the sketch (fixed-size broadcast); undersizing
-    * only weakens pruning, never correctness.
-    */
-  def allCindsTwoRound(triples: DataFrame, minSupport: Int = DefaultMinSupport,
-      expectedPairs: Long = 4000000L,
-      splitThreshold: Int = SplitThreshold,
-      bloomConditions: Boolean = false,
-      bloomCaptures: Boolean = false,
-      expectedFrequentKeys: Long = 10000000L,
-      projections: String = "spo",
-      arRules: Option[DataFrame] = None): Dataset[CindRow] =
-    // both rounds re-run the FULL O(w^2) pair enumeration over the lines
-    // (sketch build + exact recount), so unlike the other strategies the
-    // persist pays for itself even in the map-only broadcast regime —
-    // r14 interleaved A/B: persisted 11.28 s / 127 cpu-s vs recomputed
-    // 12.90 s / 228 cpu-s (OPTIMIZATION_r14.md)
-    discover(triples, minSupport, bloomConditions, bloomCaptures,
-        expectedFrequentKeys, projections, arRules, persistLines = true)(
-      twoRoundEvidence(_, minSupport, expectedPairs, splitThreshold))
-
-  /** [[allCindsTwoRound]]'s evidence step: sketch round, then the exact
-    * kernel count over the admitted keys. */
-  private[cind] def twoRoundEvidence(enc: EncodedLines, minSupport: Int,
-      expectedPairs: Long, splitThreshold: Int,
-      sizes: PairCounts.Sizes = PairCounts.Sizes()): Evidence =
-    Evidence(expandCounts(PairCounts(enc.lines, minSupport, splitThreshold,
-      admit = sketchAdmit(enc.lines, minSupport, expectedPairs, splitThreshold),
-      sizes = sizes)))
-
-  /** Spectral-sketch candidate filter over the unordered pair keys of
-    * `lines` (the shared round 1 of the half-approximate strategies;
-    * reference E4/E5 extract, A4 merge, G6 `EvaluateHalfApproximateOverlap
-    * Sets` collapse), returned as the kernel's admit predicate:
-    *
-    *   - per-partition SPECTRAL Bloom filters count the kernel's enumerated
-    *     keys map-side (no shuffle; cell width derived from minSupport as
-    *     in the reference),
-    *   - cells tree-merge on executors,
-    *   - the sketch collapses to a membership filter of keys with count >=
-    *     minSupport (`toBloomFilter`, the reference's G6 move), broadcast.
-    *
-    * Saturating counters never under-count, so every key with true count >=
-    * minSupport is admitted — downstream exact filters see no change; the
-    * shuffle just carries plausible candidates instead of every
-    * co-occurrence. Undersizing `expectedPairs` only weakens pruning. */
-  private def sketchAdmit(lines: DataFrame, minSupport: Int,
-      expectedPairs: Long, splitThreshold: Int): Long => Boolean = {
-    val spark = lines.sparkSession
-    val proto = graft.core.SpectralBloomFilter.create(expectedPairs, 0.1, minSupport)
-    val (nc, bpc, nh, words) = (proto.numCells, proto.bitsPerCell, proto.numHashes, proto.cells.length)
-    val cellArrays = PairCounts.foldPartitions(lines, splitThreshold) { pairs =>
-      val s = new graft.core.SpectralBloomFilter(nc, bpc, nh, new Array[Long](words))
-      val buf = new Array[Long](4096)
-      var len = pairs.fill(buf, 0)
-      while (len > 0) {
-        var k = 0; while (k < len) { s.add(buf(k)); k += 1 }
-        len = pairs.fill(buf, 0)
-      }
-      s.cells
-    }(spark.implicits.newLongArrayEncoder)
-    // executor-side tree merge (see buildBloomLongs): cell arrays are MBs each,
-    // funnelling them all through the driver is the scale bottleneck; and
-    // treeReduce (not treeAggregate) so the MB-sized zero array is not
-    // serialized into every task closure
-    val mergeCells = (a: Array[Long], b: Array[Long]) =>
-      new graft.core.SpectralBloomFilter(nc, bpc, nh, a)
-        .mergeInPlace(new graft.core.SpectralBloomFilter(nc, bpc, nh, b)).cells
-    val rdd = cellArrays.rdd
-    val merged =
-      if (rdd.getNumPartitions == 0) new Array[Long](words)
-      else rdd.treeReduce(mergeCells, depth = 2)
-    val bcast = spark.sparkContext.broadcast(new graft.core.SpectralBloomFilter(nc, bpc, nh, merged)
-      .toBloomFilter(minSupport))
-    PairCounts.taskAdmit { () => val bf = bcast.value; pk => bf.mightContain(pk) }
-  }
-
-  /** Refs arrays longer than this spill to Bloom-filter bits in the hybrid
-    * strategy (reference `--merge-window-size` territory: the explicit
-    * threshold at which exact per-evidence state becomes sketch state). */
-  val HybridSpillThreshold = 64
-
-  /** Single-pass hybrid exact/Bloom intersection — the literal shape of the
-    * reference's half-approximate merge (candidate_merging/
-    * IntersectHalfApproximateCindCandidates.scala:16-109 over
-    * CreateHalfApproximateCindCandidates): each join line contributes, per
-    * dependent capture, either its EXACT co-occurring refs (narrow lines)
-    * or a Bloom filter of them (wide lines, refs > spillThreshold — the
-    * explicit-threshold spill bounding aggregation state the way the
-    * reference bounded Flink combiner memory); ONE typed aggregation then
-    * intersects exact arrays exactly and BF bits bitwise, in the same
-    * buffer.
-    *
-    * Exactness recovery (the reference refines `!isExact` results in its
-    * next round; same move here, restricted to the unsure deps):
-    *   - deps whose every evidence was exact emit directly;
-    *   - deps that saw any BF evidence get a SECOND exact pass over their
-    *     lines with refs pre-filtered by the round-1 state (exact-part
-    *     refs ∩ BF bits — a superset of the truth, so the exact
-    *     re-intersection returns exactly the truth; Bloom false positives
-    *     only widen the filtered arrays, never the result).
-    *
-    * Result-identical to [[allCinds]] (spec-pinned + driver oracle). Versus
-    * [[allCindsTwoRound]] (sketch round + exact round over ALL deps), the
-    * hybrid resolves narrow-line deps in round 1 and re-touches only deps
-    * that met a hub line — the trade the reference's one-pass hybrid buffer
-    * made. Round-2 driver state is dictionary-scale (the dictionary is
-    * already collected for the encode broadcast), never data-scale. */
-  def allCindsHybrid(triples: DataFrame, minSupport: Int = DefaultMinSupport,
-      spillThreshold: Int = HybridSpillThreshold,
-      bloomConditions: Boolean = false,
-      bloomCaptures: Boolean = false,
-      expectedFrequentKeys: Long = 10000000L,
-      projections: String = "spo",
-      arRules: Option[DataFrame] = None): Dataset[CindRow] = {
-    require(spillThreshold > 0, "spillThreshold must be positive")
-    discover(triples, minSupport, bloomConditions, bloomCaptures,
-      expectedFrequentKeys, projections, arRules)(hybridEvidence(_, minSupport, spillThreshold))
-  }
-
-  /** [[allCindsHybrid]]'s evidence step: both rounds, n = the dep's line
-    * count. */
-  private def hybridEvidence(enc: EncodedLines, minSupport: Int, spill: Int): Evidence = {
-    val lines = enc.lines
-    val spark = lines.sparkSession
-    import spark.implicits._
-    // ONE shared BF geometry: bitwise AND of filters is only meaningful
-    // when every evidence uses the same (numBits, numHashes). Sized from
-    // the spill threshold, not the data: a hub line saturates its filter
-    // (admits everything) and degrades to the exact round-2 path for its
-    // deps — graceful, never wrong.
-    val proto = graft.core.Bloom.create(math.max(1024L, spill * 8L), 0.05)
-    val (nb, nh) = (proto.numBits, proto.numHashes)
-    val words = (nb + 63) >>> 6
-    // support-monotonicity evidence prune (r13, see supportPruneMaxIds):
-    // the narrow arm drops refs poorer than their dep BEFORE the evidence
-    // exchange. A dep whose whole line prunes away still EMITS an
-    // empty-refs exact evidence — reduce() treats it as an exact arm and
-    // zeroes the intersection, which is the truth (no ref survives a line
-    // where none is feasible... and none is, by monotonicity).
-    val bcSup = spark.sparkContext.broadcast(supportArray(enc.dict, enc.nDict))
-    val evid = lines.select(col("ids")).as[Array[Long]].flatMap { ids0 =>
-      val ids = ids0.sorted
-      val sup = bcSup.value
-      if (ids.length - 1 <= spill) {
-        // narrow: exact refs per dep (sorted by construction)
-        Iterator.range(0, ids.length).map { d =>
-          val sd = if (sup.length == 0) 0L else sup((ids(d) >>> 1).toInt)
-          val refs = new Array[Long](ids.length - 1)
-          var i = 0; var k = 0
-          while (i < ids.length) {
-            if (i != d && (sup.length == 0 || sup((ids(i) >>> 1).toInt) >= sd)) {
-              refs(k) = ids(i); k += 1
-            }
-            i += 1
-          }
-          HybridEvidence(ids(d),
-            if (k == refs.length) refs else java.util.Arrays.copyOf(refs, k),
-            Array.emptyLongArray)
-        }
-      } else {
-        // wide: ONE filter over the whole line, shared by all its deps —
-        // O(w) insertions, not O(w^2). It admits dep itself as a ref; the
-        // round-2 `r != dep` guard removes the only effect.
-        val bf = graft.core.Bloom.wrap(nb, nh, new Array[Long](words))
-        var i = 0; while (i < ids.length) { bf.put(ids(i)); i += 1 }
-        ids.iterator.map(dep => HybridEvidence(dep, Array.emptyLongArray, bf.bits))
-      }
-    }
-    val agged = evid.groupByKey(_.dep).agg(IntersectHybridCandidates.toColumn)
-      .filter(_._2.count >= minSupport) // belt: dict deps satisfy this anyway
-      .persist()
-    agged.count() // exact split + unsure collect both read this
-    // n = lines holding dep, i.e. its support: every surviving pair of an
-    // intersection over ALL of dep's lines is at full support
-    val exactPairs = agged.flatMap { case (dep, s) =>
-      if (!s.hasBits) s.refs.iterator.map(r => (dep, r, s.count))
-      else Iterator.empty
-    }.toDF("dep_id", "ref_id", "n")
-    // unsure deps -> driver: per dep either the BF-filtered exact candidate
-    // array or (dep seen ONLY in wide lines) the intersected bits
-    val exactCands = new java.util.HashMap[java.lang.Long, Array[Long]]()
-    val bitsCands = new java.util.HashMap[java.lang.Long, Array[Long]]()
-    agged.filter(_._2.hasBits).collect().foreach { case (dep, s) =>
-      if (s.hasExact) {
-        val bf = graft.core.Bloom.wrap(nb, nh, s.bits)
-        exactCands.put(dep, s.refs.filter(bf.mightContain))
-      } else bitsCands.put(dep, s.bits)
-    }
-    val bcExact = spark.sparkContext.broadcast(exactCands)
-    val bcBits = spark.sparkContext.broadcast(bitsCands)
-    val round2 = lines.select(col("ids")).as[Array[Long]].flatMap { ids0 =>
-      val ids = ids0.sorted
-      val exactM = bcExact.value
-      val bitsM = bcBits.value
-      val sup = bcSup.value
-      ids.iterator.flatMap { dep =>
-        val cand = exactM.get(dep)
-        if (cand != null) {
-          // cand came from round-1 intersections of already-pruned narrow
-          // evidence, so the monotonicity prune is baked in — probe as-is
-          Iterator.single(LongRefsEvidence(dep,
-            ids.filter(r => r != dep && java.util.Arrays.binarySearch(cand, r) >= 0)))
-        } else {
-          val bits = bitsM.get(dep)
-          if (bits != null) {
-            // BF-only deps saw no exact arm: apply the monotonicity prune
-            // here (the shared per-line filter could not — one filter
-            // serves every dep of the line, each with a different floor)
-            val sd = if (sup.length == 0) 0L else sup((dep >>> 1).toInt)
-            val bf = graft.core.Bloom.wrap(nb, nh, bits)
-            Iterator.single(LongRefsEvidence(dep,
-              ids.filter(r => r != dep && bf.mightContain(r) &&
-                (sup.length == 0 || sup((r >>> 1).toInt) >= sd))))
-          } else Iterator.empty
-        }
-      }
-    }
-    val verifiedPairs = round2.groupByKey(_.dep).agg(IntersectLongRefs.toColumn)
-      .flatMap { case (dep, s) =>
-        s.refs.iterator.map(r => (dep, r, s.count)) }
-      .toDF("dep_id", "ref_id", "n")
-    Evidence(exactPairs.unionByName(verifiedPairs), Seq(agged))
-  }
-
-  /** Small-to-large staged discovery — the reference's DEFAULT traversal
-    * (strategy 1, plan/SmallToLargeTraversalStrategy.scala:38-171),
-    * re-expressed relationally: instead of counting every frequent-capture
-    * pair in one pass, results climb the arity ladder and each binary
-    * stage's pair keys are pruned MAP-SIDE by the previous stage's
-    * results, so the binary extractions only shuffle plausible keys. Every
-    * stage counts through the [[PairCounts]] kernel:
-    *
-    *   stage 1 — unary×unary co-occurrence counts (the reference's
-    *     OverlapSet relation); 1/1 CINDs fall out as overlap == support.
-    *   stage 2 — ONE mixed-arity extraction verifies 1/2 and 2/1 pairs.
-    *     The necessary conditions are probed per enumerated pair instead of
-    *     ever ENUMERATING a candidate set (the first cut materialized the
-    *     candidate joins: ~5.6 GB of (dep, ref) keys at sf0.1 — two
-    *     orders of magnitude larger than the relations that generate
-    *     them; probing those relations directly prunes identically):
-    *       1/2 pair (u, b): (u, sub_i(b)) ∈ 1/1-CINDs for BOTH subs —
-    *            u ⊑ b(r1,r2) requires u ⊑ r1 AND u ⊑ r2 (identity u ⊑ u
-    *            included, reference
-    *            GenerateUnaryBinaryCindCandidates.scala:17-45);
-    *       2/1 pair (b, r): (sub_i(b), r) ∈ overlaps for BOTH subs —
-    *            values(b) ⊆ values(sub_i) ∩ values(r); refs equal to b's
-    *            own subs are trivially implied and skipped.
-    *     The sub-capture lookup is a broadcast dense id→sub-id array; the
-    *     membership filters are Bloom filters built from c11/cinds11
-    *     themselves — the reference's candidate-BF broadcast
-    *     (SmallToLargeTraversalStrategy.scala:380-407), with the BF over
-    *     the GENERATING relation instead of the blown-up candidate product.
-    *   stage 3 — a second extraction over binary-only lines verifies 2/2
-    *     pairs: (bd, br) admitted iff (bd, sub_i(br)) ∈ the VERIFIED 2/1
-    *     relation (plus the always-true trivial pairs b ⊑ own-sub,
-    *     reference GenerateBinaryBinaryCindCandidates.scala:20-42) —
-    *     bd ⊑ br(r1,r2) requires bd ⊑ r1 AND bd ⊑ r2.
-    *
-    * The probes are DIRECTIONAL but the kernel counts unordered keys: a
-    * key is counted iff either direction passes, and [[expandCounts]]
-    * emits both. A direction admitted only through its twin carries the
-    * exact co-count, so the decode's `n == support(dep)` either certifies
-    * a true CIND or drops it — the same reasoning that makes Bloom false
-    * positives harmless. The stages stay arity-disjoint (1/1, mixed, 2/2),
-    * so no directed row is emitted twice.
-    *
-    * Result-identical to [[allCinds]] (spec-pinned and driver-checked
-    * against the same oracle): every probe condition is NECESSARY for the
-    * CINDs it feeds — nothing is missed — and verification is the exact
-    * count-match — nothing false survives; an over-admitted pair that
-    * passes count == support is by definition a true CIND that allCinds
-    * reports too, so no exact candidate re-join is needed anywhere. What
-    * the ladder buys on hub-heavy data: the quadratic pair SHUFFLE only
-    * ever carries unary×unary keys plus probe-admitted binary keys,
-    * bounding aggregation state the way the reference's staged ladder
-    * bounded Flink combiner memory (per-line enumeration work is unchanged
-    * — the reference's extractors also walk all pairs and probe their
-    * candidate BF). */
-  def allCindsSmallToLarge(triples: DataFrame, minSupport: Int = DefaultMinSupport,
-      splitThreshold: Int = SplitThreshold,
-      bloomConditions: Boolean = false,
-      bloomCaptures: Boolean = false,
-      expectedFrequentKeys: Long = 10000000L,
-      projections: String = "spo",
-      arRules: Option[DataFrame] = None): Dataset[CindRow] =
-    discover(triples, minSupport, bloomConditions, bloomCaptures,
-      expectedFrequentKeys, projections, arRules)(smallToLargeEvidence(_, minSupport, splitThreshold))
-
-  /** Dictionary-indexed side tables of small-to-large's admit rules, read
-    * per enumerated pair: a binary capture's two unary sub-capture ids
-    * (dense ARRAYS indexed by (id >> 1) - 1 — dictionary ids are dense by
-    * construction, see dictWithIds; unary slots hold 0, never a valid id,
-    * and no rule reads them) and the [[supportArray]] (empty: floor off). */
-  private final case class LadderTables(sub1: Array[Long], sub2: Array[Long],
-      support: Array[Long]) {
-    def sub1Of(id: Long): Long = sub1((id >> 1).toInt - 1)
-    def sub2Of(id: Long): Long = sub2((id >> 1).toInt - 1)
-
-    /** The support-monotonicity floor (see [[supportPruneMaxIds]]). */
-    def feasible(dep: Long, ref: Long): Boolean =
-      support.isEmpty || support((ref >>> 1).toInt) >= support((dep >>> 1).toInt)
-  }
-
-  /** [[allCindsSmallToLarge]]'s evidence step: the three stages' counts.
-    * The stage-internal `n == support` filters only build the next stage's
-    * probe filters; the result is certified by the skeleton's decode. */
-  private[cind] def smallToLargeEvidence(enc: EncodedLines, minSupport: Int,
-      splitThreshold: Int, sizes: PairCounts.Sizes = PairCounts.Sizes()): Evidence = {
-    val (lines, dict, nDictL) = (enc.lines, enc.dict, enc.nDict)
-    val spark = lines.sparkSession
-    import spark.implicits._
-    def pk(a: Column, b: Column) = shiftleft(a, 32) + b
-    // the kernel's support floor: a count below minSupport certifies nothing
-    def counts(stageLines: DataFrame, admit: Long => Boolean) = expandCounts(
-      PairCounts(stageLines, minSupport, splitThreshold, admit = admit, sizes = sizes))
-    // ---- stage 1: unary×unary overlaps
-    val c11 = counts(arityLines(lines, unary = true), admit = null).persist()
-    val nC11 = c11.count() // 1/1 output + both stage-2 probe filters read this
-    val sup = dict.select(col("id").as("dep_id"), col("support"))
-    val cinds11 = c11.join(sup, "dep_id")
-      .filter(col("n") === col("support"))
-      .select(col("dep_id"), col("ref_id"))
-    // binary capture -> its two unary sub-capture ids; dictionary-sized,
-    // collected once and shipped per EXECUTOR through a broadcast (a plan
-    // literal would re-serialize the |dict|-sized arrays into every task)
-    val unaryDict = dict.filter(col("v2") === "")
-    val subsArr: Array[(Long, Long, Long)] = dict.filter(col("v2") =!= "")
-      .join(unaryDict.select(col("id").as("sub1_id"), col("code").as("s1c"),
-        col("v1").as("s1v")),
-        firstSubCode(col("code")) === col("s1c") && col("v1") === col("s1v"))
-      .join(unaryDict.select(col("id").as("sub2_id"), col("code").as("s2c"),
-        col("v1").as("s2v")),
-        secondSubCode(col("code")) === col("s2c") && col("v2") === col("s2v"))
-      .select(col("id"), col("sub1_id"), col("sub2_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val nDict = nDictL.toInt
-    val sub1Arr = new Array[Long](nDict)
-    val sub2Arr = new Array[Long](nDict)
-    subsArr.foreach { case (b, s1, s2) =>
-      sub1Arr((b >> 1).toInt - 1) = s1; sub2Arr((b >> 1).toInt - 1) = s2 }
-    val bcTables = spark.sparkContext.broadcast(
-      LadderTables(sub1Arr, sub2Arr, supportArray(dict, nDictL)))
-    // ---- stage 2: one mixed-arity extraction, probe-filtered map-side
-    val bfC11 = spark.sparkContext.broadcast(buildBloomLongs(
-      c11.select(pk(col("dep_id"), col("ref_id")).as("k")).as[Long],
-      math.max(nC11, 1024L), 0.01))
-    val bf11 = spark.sparkContext.broadcast(buildBloomLongs(
-      cinds11.select(pk(col("dep_id"), col("ref_id")).as("k")).as[Long]
-        // vacuous identity u ⊑ u, for 1/2 refs sharing the dep's condition
-        .union(unaryDict.select(pk(col("id"), col("id")).as("k")).as[Long]),
-      math.max(nC11, 1024L), 0.01))
-    val mixedAdmit = PairCounts.taskAdmit { () =>
-      val (t, cinds, overlaps) = (bcTables.value, bf11.value, bfC11.value)
-      PairCounts.eitherWay { (dep, ref) =>
-        t.feasible(dep, ref) && (
-          if ((dep & 1L) == 1L) // 1/2
-            (ref & 1L) == 0L &&
-              cinds.mightContain(dep << 32 | t.sub1Of(ref)) &&
-              cinds.mightContain(dep << 32 | t.sub2Of(ref))
-          else // 2/1; own-sub refs are trivially implied
-            (ref & 1L) == 1L && ref != t.sub1Of(dep) && ref != t.sub2Of(dep) &&
-              overlaps.mightContain(t.sub1Of(dep) << 32 | ref) &&
-              overlaps.mightContain(t.sub2Of(dep) << 32 | ref))
-      }
-    }
-    val mixedLines = lines.filter(
-      exists(col("ids"), id => id.bitwiseAND(lit(1L)) === 1L) &&
-        exists(col("ids"), id => id.bitwiseAND(lit(1L)) === 0L))
-    val countsA = counts(mixedLines, mixedAdmit).persist()
-    val nCountsA = countsA.count() // feeds the output AND the stage-3 probe filter
-    // ---- stage 3: binary-binary extraction probed against verified 2/1s
-    val v21 = countsA.join(sup, "dep_id")
-      .filter(col("n") === col("support") && col("dep_id").bitwiseAND(lit(1L)) === 0L)
-      .select(pk(col("dep_id"), col("ref_id")).as("k")).as[Long]
-    val trivial21 = spark.createDataset(
-      subsArr.toSeq.flatMap(t => Seq((t._1 << 32) + t._2, (t._1 << 32) + t._3)))
-    val bfV21 = spark.sparkContext.broadcast(buildBloomLongs(
-      v21.union(trivial21), math.max(nCountsA + 2L * subsArr.length, 1024L), 0.01))
-    val binaryAdmit = PairCounts.taskAdmit { () =>
-      val (t, verified) = (bcTables.value, bfV21.value)
-      PairCounts.eitherWay { (dep, ref) =>
-        t.feasible(dep, ref) &&
-          verified.mightContain(dep << 32 | t.sub1Of(ref)) &&
-          verified.mightContain(dep << 32 | t.sub2Of(ref))
-      }
-    }
-    val countsB = counts(arityLines(lines, unary = false), binaryAdmit)
-    // ---- assemble: the skeleton's one decode applies count==support and
-    // the trivial-ref filter, then releases c11/countsA
-    Evidence(c11.unionByName(countsA).unionByName(countsB), Seq(c11, countsA))
-  }
-
-  /** Strategy 0 (AllAtOnce, reference plan/AllAtOnceTraversalStrategy
-    * .scala:33-85): per join line, one evidence per member capture — its
-    * sorted co-occurring ids — and a k-way sorted-set intersection per
-    * dependent capture via the [[IntersectLongRefs]] Aggregator; n is the
-    * dep's line count. Runs on the shared encoded lines (ids, not string
-    * captures), result-identical to `allCinds` (cross-checked in
-    * CindEngineSpec); trivially implied refs drop at decode. Preferable
-    * when join lines are wide but evidence arrays stay short. */
-  def allCindsIntersect(triples: DataFrame, minSupport: Int = DefaultMinSupport,
-      bloomConditions: Boolean = false,
-      expectedFrequentKeys: Long = 10000000L,
-      projections: String = "spo",
-      arRules: Option[DataFrame] = None): Dataset[CindRow] = {
-    import triples.sparkSession.implicits._
-    discover(triples, minSupport, bloomConditions, bloomCaptures = false,
-        expectedFrequentKeys, projections, arRules) { enc =>
-      val evid = enc.lines.select(col("ids")).as[Array[Long]].flatMap { ids0 =>
-        val ids = ids0.sorted
-        ids.iterator.map(dep => LongRefsEvidence(dep, ids.filter(_ != dep)))
-      }
-      Evidence(evid.groupByKey(_.dep).agg(IntersectLongRefs.toColumn)
-        .flatMap { case (dep, s) => s.refs.iterator.map(r => (dep, r, s.count)) }
-        .toDF("dep_id", "ref_id", "n"))
-    }
-  }
-
   /** Association rules with confidence 1.0 between unary conditions
     * (reference plan/FrequentConditionPlanner.scala:147-191): `A -> B` iff
     * every triple matching condition A also matches B, with
@@ -1385,7 +936,7 @@ object CindEngine {
     * `count(A AND B) == count(A)`.
     * Output: (ante_code, ante_val, cons_code, cons_val, support), returned
     * persisted and materialized (CacheOps contract) for the two places an
-    * AR-pruned strategy reads it (the fan-out anti-join and the output
+    * AR-pruned discovery reads it (the fan-out anti-join and the output
     * filter); the caller owns the one cached handle. */
   def associationRules(triples: DataFrame, minSupport: Int = DefaultMinSupport): DataFrame = {
     // consumed twice (unary and binary splits) — persist + materialize so
@@ -1482,82 +1033,4 @@ object CindEngine {
     // release the input cache once the pruned (still-compact) result holds
     graft.core.CacheOps.cacheResult(out, Seq(c))
   }
-}
-
-/** Single-pass hybrid merge (reference candidate_merging/
-  * IntersectHalfApproximateCindCandidates.scala:16-109): exact ref arrays
-  * intersect via the sorted two-pointer walk, Bloom halves intersect by
-  * bitwise AND (`BloomFilter.intersect` in the reference), both inside ONE
-  * buffer. Arrays share one (numBits, numHashes) geometry by construction
-  * (the caller builds every evidence filter from the same prototype). */
-object IntersectHybridCandidates
-    extends Aggregator[HybridEvidence, HybridCindSet, HybridCindSet] {
-  override def zero: HybridCindSet =
-    HybridCindSet(0L, Array.empty, hasExact = false, Array.empty,
-      hasBits = false)
-
-  private def andBits(a: Array[Long], b: Array[Long]): Array[Long] = {
-    val out = new Array[Long](a.length)
-    var i = 0
-    while (i < a.length) { out(i) = a(i) & b(i); i += 1 }
-    out
-  }
-
-  override def reduce(b: HybridCindSet, e: HybridEvidence): HybridCindSet =
-    if (e.bits.isEmpty)
-      HybridCindSet(b.count + 1L,
-        if (b.hasExact) SortedOps.intersect(b.refs, e.refs) else e.refs,
-        hasExact = true, b.bits, b.hasBits)
-    else
-      HybridCindSet(b.count + 1L, b.refs, b.hasExact,
-        if (b.hasBits) andBits(b.bits, e.bits) else e.bits, hasBits = true)
-
-  override def merge(a: HybridCindSet, b: HybridCindSet): HybridCindSet =
-    if (a.count == 0L) b
-    else if (b.count == 0L) a
-    else HybridCindSet(a.count + b.count,
-      if (a.hasExact && b.hasExact) SortedOps.intersect(a.refs, b.refs)
-      else if (a.hasExact) a.refs else b.refs,
-      a.hasExact || b.hasExact,
-      if (a.hasBits && b.hasBits) andBits(a.bits, b.bits)
-      else if (a.hasBits) a.bits else b.bits,
-      a.hasBits || b.hasBits)
-
-  override def finish(r: HybridCindSet): HybridCindSet = r
-
-  override def bufferEncoder: org.apache.spark.sql.Encoder[HybridCindSet] =
-    org.apache.spark.sql.Encoders.product[HybridCindSet]
-  override def outputEncoder: org.apache.spark.sql.Encoder[HybridCindSet] =
-    org.apache.spark.sql.Encoders.product[HybridCindSet]
-}
-
-/** Per-dependent-capture k-way intersection of sorted id arrays, counting
-  * evidences — strategy 0's merge (reference candidate_merging/
-  * IntersectCindCandidates.scala:13-52 over BulkMergeDependencies
-  * .scala:21-168: the memory-adaptive window merge collapses to pairwise
-  * sorted intersection, which Spark runs as partial+final aggregation) and
-  * the hybrid's refinement round (the reference refines `!isExact`
-  * CindSets in its follow-up round the same way). `count == 0` marks the
-  * zero buffer; an evidence with EMPTY refs still counts (it must zero the
-  * intersection — a line containing dep with no surviving candidate kills
-  * every ref). */
-object IntersectLongRefs
-    extends Aggregator[LongRefsEvidence, LongRefsSet, LongRefsSet] {
-  override def zero: LongRefsSet = LongRefsSet(0L, Array.empty)
-
-  override def reduce(b: LongRefsSet, e: LongRefsEvidence): LongRefsSet =
-    if (b.count == 0L) LongRefsSet(1L, e.refs)
-    else LongRefsSet(b.count + 1L, SortedOps.intersect(b.refs, e.refs))
-
-  override def merge(a: LongRefsSet, b: LongRefsSet): LongRefsSet =
-    if (a.count == 0L) b
-    else if (b.count == 0L) a
-    else LongRefsSet(a.count + b.count, SortedOps.intersect(a.refs, b.refs))
-
-  override def finish(r: LongRefsSet): LongRefsSet = r
-
-  override def bufferEncoder: org.apache.spark.sql.Encoder[LongRefsSet] =
-    org.apache.spark.sql.Encoders.product[LongRefsSet]
-  override def outputEncoder: org.apache.spark.sql.Encoder[LongRefsSet] =
-    org.apache.spark.sql.Encoders.product[LongRefsSet]
 }

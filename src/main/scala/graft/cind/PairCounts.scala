@@ -58,8 +58,8 @@ private[cind] object PairCounts {
     * (dep < ref) that `admit` accepts, `n` the number of lines holding both
     * ids, kept iff `n >= minSupport`. `lines` carries an `ids ARRAY<LONG>`
     * column of duplicate-free ids below 2^32. `admit` (null: all) filters
-    * keys before they are buffered — the two-round strategies pass their
-    * sketch's candidate filter, small-to-large its stage probes. */
+    * keys before they are buffered — [[CindEngine.unaryOverlaps]] passes
+    * its sketch's candidate filter. */
   def apply(lines: DataFrame, minSupport: Int, splitThreshold: Int,
       admit: Long => Boolean = null, sizes: Sizes = Sizes()): DataFrame = {
     val spark = lines.sparkSession
@@ -98,17 +98,8 @@ private[cind] object PairCounts {
     def apply(pk: Long): Boolean = test(pk)
   }
 
-  /** Admits an unordered key `a << 32 | b` iff `dir` accepts `(a, b)` or
-    * `(b, a)`: the admit of a directional rule, whose counts
-    * [[CindEngine]]'s `expandCounts` restores in both directions. */
-  def eitherWay(dir: (Long, Long) => Boolean): Long => Boolean = { pk =>
-    val a = pk >>> 32
-    val b = pk & 0xFFFFFFFFL
-    dir(a, b) || dir(b, a)
-  }
-
   /** The pair enumerator as a partition-wise function, for consumers that
-    * fold every key themselves (the two-round sketch): `f` gets a cursor
+    * fold every key themselves (the overlap sketch): `f` gets a cursor
     * over the partition's pair keys and returns the partition's result. */
   def foldPartitions[T: Encoder](lines: DataFrame,
       splitThreshold: Int)(f: PairCursor => T): Dataset[T] =

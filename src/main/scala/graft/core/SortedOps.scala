@@ -2,26 +2,12 @@ package graft.core
 
 import scala.reflect.ClassTag
 
-/** Two-pointer merge operations over sorted, duplicate-free arrays — the
-  * buffer algebra behind the set-intersection / set-union aggregates
-  * (reference rdfind-util/.../CollectionUtils.java:118-225 semantics).
-  * All inputs and outputs are sorted ascending and duplicate-free.
+/** Two-pointer merge over sorted, duplicate-free arrays — the buffer
+  * algebra behind the join-line run merge (reference
+  * rdfind-util/.../CollectionUtils.java:118-225 semantics). Inputs and
+  * output are sorted ascending and duplicate-free.
   */
 object SortedOps {
-
-  /** Intersection of two sorted arrays. */
-  def intersect[T: ClassTag](a: Array[T], b: Array[T])(implicit ord: Ordering[T]): Array[T] = {
-    val out = Array.newBuilder[T]
-    var i = 0
-    var j = 0
-    while (i < a.length && j < b.length) {
-      val c = ord.compare(a(i), b(j))
-      if (c == 0) { out += a(i); i += 1; j += 1 }
-      else if (c < 0) i += 1
-      else j += 1
-    }
-    out.result()
-  }
 
   /** Union of two sorted arrays. */
   def union[T: ClassTag](a: Array[T], b: Array[T])(implicit ord: Ordering[T]): Array[T] = {
@@ -39,49 +25,4 @@ object SortedOps {
     while (j < b.length) { out += b(j); j += 1 }
     out.result()
   }
-
-  /** Union of two sorted (key -> count) sequences, summing counts of equal
-    * keys — the overlap-counting merge (reference
-    * candidate_merging/MultiunionOverlapCandidates.scala:14-50 semantics). */
-  def unionSumCounts[T: ClassTag](
-      a: Array[T], ac: Array[Long],
-      b: Array[T], bc: Array[Long])(implicit ord: Ordering[T]): (Array[T], Array[Long]) = {
-    val keys = Array.newBuilder[T]
-    val counts = Array.newBuilder[Long]
-    var i = 0
-    var j = 0
-    while (i < a.length && j < b.length) {
-      val c = ord.compare(a(i), b(j))
-      if (c == 0) { keys += a(i); counts += ac(i) + bc(j); i += 1; j += 1 }
-      else if (c < 0) { keys += a(i); counts += ac(i); i += 1 }
-      else { keys += b(j); counts += bc(j); j += 1 }
-    }
-    while (i < a.length) { keys += a(i); counts += ac(i); i += 1 }
-    while (j < b.length) { keys += b(j); counts += bc(j); j += 1 }
-    (keys.result(), counts.result())
-  }
-
-  /** Size of the intersection without materializing it. */
-  def intersectionSize[T](a: Array[T], b: Array[T])(implicit ord: Ordering[T]): Int = {
-    var i = 0
-    var j = 0
-    var n = 0
-    while (i < a.length && j < b.length) {
-      val c = ord.compare(a(i), b(j))
-      if (c == 0) { n += 1; i += 1; j += 1 }
-      else if (c < 0) i += 1
-      else j += 1
-    }
-    n
-  }
-
-  def isSorted[T](a: Array[T])(implicit ord: Ordering[T]): Boolean = {
-    var i = 1
-    while (i < a.length) {
-      if (ord.compare(a(i - 1), a(i)) >= 0) return false
-      i += 1
-    }
-    true
-  }
-
 }

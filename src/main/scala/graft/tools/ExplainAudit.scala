@@ -42,17 +42,6 @@ object ExplainAudit {
     if (which == "all" || which == "cind")
       showFinal("cind_all", graft.cind.CindEngine.allCinds(
         graft.rdf.TripleSource.derive(spark, sf)).toDF())
-    if (which == "all" || which == "s2l")
-      // stages 1-2 (persisted pair counts) and the probe filter builds run
-      // during construction; the printed plan is the stage-3 count plus
-      // the assembly/decode
-      showFinal("cind_all_s2l", graft.cind.CindEngine.allCindsSmallToLarge(
-        graft.rdf.TripleSource.derive(spark, sf)).toDF())
-    if (which == "all" || which == "hybrid")
-      // round-1 aggregation + round-2 refinement run during construction;
-      // the printed plan is the pair union + decode assembly
-      showFinal("cind_all_hybrid", graft.cind.CindEngine.allCindsHybrid(
-        graft.rdf.TripleSource.derive(spark, sf), spillThreshold = 8).toDF())
     if (which == "all" || which == "dedup")
       showFinal("dedup_jaccard", graft.dedup.Dedup.jaccardPairs(
         spark.read.parquet(s"$sf/documents.parquet"), 50))

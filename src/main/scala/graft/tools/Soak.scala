@@ -86,26 +86,10 @@ object Soak {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val shards = args.lift(1).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // sf10 lesson (BASELINE.md round-11): Spark's ObjectHashAggregate
-    // falls back to SORT-BASED aggregation after only 128 distinct keys
-    // per partition (spark.sql.objectHashAggregate.sortBased
-    // .fallbackThreshold default). For typed-Aggregator pipelines with
-    // CAP-BOUNDED buffers (the CIND hybrid) that external sort wrote
-    // ~60 GB of spill at 232M triples and blew the box's disk budget —
-    // raising the threshold keeps the agg in the hash regime (~700k
-    // dependents x ~200 B per partition = GBs of heap). But it is a
-    // SCALPEL, not a default: applied globally it also pins the
-    // UNBOUNDED join-line array buffers of the count-match path in
-    // memory, which OOM'd a 96 GB heap at 74M triples (both failure
-    // modes measured this round). Opt-in per family via
-    // SPARK_GRAFT_OBJ_AGG_FALLBACK; unset keeps Spark's default.
-    val objAggThreshold = sys.env.get("SPARK_GRAFT_OBJ_AGG_FALLBACK")
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-soak")
       .config("spark.sql.shuffle.partitions", cpus.toInt)
-    objAggThreshold.foreach(v => builder.config(
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", v))
     // opt-in shuffle codec swap (SPARK_GRAFT_SHUFFLE_CODEC=zstd): the
     // sf10 CIND attempts die on SCRATCH DISK, not CPU — zstd's better
     // ratio over lz4 trades compression cycles for the binding resource
@@ -114,16 +98,9 @@ object Soak {
     // encode-regime selector for the CIND families (see CindEngine
     // .dictEncodeMaxBroadcastRows): 0 forces the shuffle-join encode
     // (no driver dict collect), a large value pins the broadcast
-    // hash-map encode. CAUTION measured r12: the fallback's
-    // collect_list regroup has UNBOUNDED array buffers — combining it
-    // with SPARK_GRAFT_OBJ_AGG_FALLBACK pins those in heap and OOMs
-    // exactly like the count-match path the r11 scaladoc warns about.
+    // hash-map encode
     sys.env.get("SPARK_GRAFT_DICT_MAX_BCAST").foreach(v =>
       builder.config("spark.graft.cind.dictEncodeMaxBroadcastRows", v))
-    // A/B valve for the support-monotonicity evidence prune (r13): 0
-    // disables, large forces — the lever's sign is measured, not assumed
-    sys.env.get("SPARK_GRAFT_SUPPORT_PRUNE_MAX").foreach(v =>
-      builder.config("spark.graft.cind.supportPruneMaxIds", v))
     val spark = builder
       .config("spark.ui.enabled", "false")
       // soak logs want the CIND encode-regime decision (library default: quiet)
@@ -173,7 +150,7 @@ object Soak {
     // cosine-1.0 duplicates — the dedup-shaped load an ANN/near-dup pass
     // sees on a web-scale corpus (vec_id offsets are multiples of 100, so
     // the `% 100 === 0` query predicate keeps its per-shard meaning)
-    // lazy: the default selection (count-match, s2l, minhash) and every
+    // lazy: the default selection (count-match, minhash) and every
     // non-embedding run otherwise pays the 10x embeddings materialization
     // up front for nothing — built and counted only when an embedding
     // query (neardup/ivf) is actually selected
@@ -230,7 +207,7 @@ object Soak {
 
     val which: Set[String] =
       sys.env.get("SPARK_GRAFT_SOAK_ONLY").map(_.split(",").toSet)
-        .getOrElse(Set("count-match", "s2l", "minhash"))
+        .getOrElse(Set("count-match", "minhash"))
     if (which("count-match"))
       run("cind_all_sf1", CindEngine.allCinds(triples1).toDF())
     if (which("count-match-bloomcaps"))
@@ -240,20 +217,6 @@ object Soak {
       // scale A/B against the string-struct formation above
       run("cind_all_bloomcaps_sf1",
         CindEngine.allCinds(triples1, bloomCaptures = true).toDF())
-    if (which("s2l"))
-      run("cind_all_s2l_sf1", CindEngine.allCindsSmallToLarge(triples1).toDF())
-    if (which("tworound"))
-      // the pair-count sketch must be SIZED to the run's pair vocabulary
-      // (shard-suffixed values make cross-shard captures distinct, so the
-      // vocabulary grows ~linearly in shards): a 4M-capacity spectral
-      // filter at sf10's ~tens-of-millions of pairs saturates its counting
-      // cells and admits everything — still exact (round 2 recounts), but
-      // it measures count-match + sketch overhead, not the tworound prune
-      run("cind_all_tworound_sf1", CindEngine.allCindsTwoRound(triples1,
-        expectedPairs = sys.env.get("SPARK_GRAFT_TWOROUND_EXPECTED_PAIRS")
-          .map(_.toLong).getOrElse(4000000L)).toDF())
-    if (which("hybrid"))
-      run("cind_all_hybrid_sf1", CindEngine.allCindsHybrid(triples1).toDF())
     if (which("minhash"))
       run("dedup_minhash_pairs_sf1", Dedup.minhashLshPairs(docs1, 50))
     // ---- LLM-pipeline heavies at 10x (SPARK_GRAFT_SOAK_ONLY selects):

@@ -33,15 +33,13 @@ class MainSpec extends SparkSpec {
     assert(c.output.contains("/tmp/x") && c.inputs == Vector("in1.nt", "in2.nq.gz"))
     intercept[IllegalArgumentException](Main.parseArgs(Seq("--nope", "x.nt")))
     intercept[IllegalArgumentException](Main.parseArgs(Seq("--support", "2")))
-    // hybrid knobs: --hybrid-spill feeds the strategy, --merge-window-size
-    // is accepted for reference-CLI compatibility (Spark's spilling
-    // aggregation subsumes the reference's memory-adaptive merge window)
-    val h = Main.parseArgs(Seq("--strategy", "hybrid", "--hybrid-spill", "16",
-      "--merge-window-size", "1000", "in.nt"))
-    assert(h.strategy == "hybrid" && h.hybridSpill == 16 &&
-      h.mergeWindowSize.contains(1000))
+    // --merge-window-size is accepted for reference-CLI compatibility (the
+    // kernel's sorted runs subsume the reference's memory-adaptive merge
+    // window); an unknown strategy is refused
+    val h = Main.parseArgs(Seq("--strategy", "hybrid", "--merge-window-size", "1000", "in.nt"))
+    assert(h.strategy == "hybrid" && h.mergeWindowSize.contains(1000))
     intercept[IllegalArgumentException](
-      Main.parseArgs(Seq("--hybrid-spill", "0", "in.nt")))
+      Main.parseArgs(Seq("--strategy", "nope", "in.nt")))
   }
 
   test("readTriples reads plain, gzip'd, and N-Quads files uniformly") {
@@ -171,20 +169,21 @@ class MainSpec extends SparkSpec {
     }
   }
 
-  test("--strategy auto picks by the sampled size estimate and runs end-to-end") {
+  test("--strategy auto runs count-match end-to-end") {
     val dir = tmpDir
     Files.write(Paths.get(s"$dir/in.nt"), ntLines.mkString("\n").getBytes)
-    val c = Main.parseArgs(Seq("--strategy", "auto", "--support", "2",
-      "--output", s"$dir/out_auto", s"$dir/in.nt"))
-    // tiny fixture -> count-match; a cutoff of 0 forces the scale branch
-    assert(Main.chooseStrategy(spark, c) == "count-match")
-    assert(Main.chooseStrategy(spark, c, cutoff = 0L) == "hybrid")
-    Main.run(spark, c) // e2e through discover's auto dispatch
-    import scala.jdk.CollectionConverters._
-    val lines = Files.list(Paths.get(s"$dir/out_auto")).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".txt"))
-      .flatMap(f => Files.readAllLines(f).asScala).toSet
-    assert(lines.nonEmpty)
+    def lines(strategy: String): Set[String] = {
+      val out = s"$dir/out_$strategy"
+      Main.run(spark, Main.parseArgs(Seq("--strategy", strategy, "--support", "2",
+        "--output", out, s"$dir/in.nt")))
+      import scala.jdk.CollectionConverters._
+      Files.list(Paths.get(out)).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".txt"))
+        .flatMap(f => Files.readAllLines(f).asScala).toSet
+    }
+    val auto = lines("auto")
+    assert(auto.nonEmpty)
+    assert(auto == lines("count-match"))
   }
 
   test("--debug-counts prints per-stage row counters") {

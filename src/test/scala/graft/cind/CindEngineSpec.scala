@@ -60,23 +60,10 @@ class CindEngineSpec extends SparkSpec {
     def runBloom() = distinctKeys(CindEngine.allCinds(toDF(tiny), minSupport = 2,
         bloomCaptures = true).collect())
     val (bExact, bBloom) = (run(), runBloom())
-    // the regime where the strategy skeleton persists the encoded lines:
-    // every strategy's evidence step must read them there too
-    val strategies: Seq[(String, () => Set[(Capture, Capture, Long)])] = Seq(
-      "tworound" -> (() => distinctKeys(
-        CindEngine.allCindsTwoRound(toDF(tiny), minSupport = 2).collect())),
-      "hybrid" -> (() => distinctKeys(CindEngine.allCindsHybrid(toDF(tiny),
-        minSupport = 2, spillThreshold = 2).collect())),
-      "small-to-large" -> (() => distinctKeys(
-        CindEngine.allCindsSmallToLarge(toDF(tiny), minSupport = 2).collect())),
-      "intersect" -> (() => distinctKeys(
-        CindEngine.allCindsIntersect(toDF(tiny), minSupport = 2).collect())))
     spark.conf.set("spark.graft.cind.dictEncodeMaxBroadcastRows", "0")
     try {
       assert(run() == bExact)
       assert(runBloom() == bBloom)
-      for ((name, strategy) <- strategies)
-        assert(strategy() == bruteForce(tiny, 2), name)
     } finally spark.conf.unset("spark.graft.cind.dictEncodeMaxBroadcastRows")
     assert(bExact == bruteForce(tiny, 2))
   }
@@ -90,8 +77,7 @@ class CindEngineSpec extends SparkSpec {
     val calls: Seq[(String, () => org.apache.spark.sql.Dataset[_])] = Seq(
       "count-match" -> (() => CindEngine.allCinds(toDF(tiny), minSupport = 2)),
       "tworound" -> (() => CindEngine.allCindsTwoRound(toDF(tiny), minSupport = 2)),
-      "hybrid" -> (() => CindEngine.allCindsHybrid(toDF(tiny), minSupport = 2,
-        spillThreshold = 2)),
+      "hybrid" -> (() => CindEngine.allCindsHybrid(toDF(tiny), minSupport = 2)),
       "small-to-large" -> (() => CindEngine.allCindsSmallToLarge(toDF(tiny), minSupport = 2)),
       "intersect" -> (() => CindEngine.allCindsIntersect(toDF(tiny), minSupport = 2)),
       "joinLineHistogram" -> (() => CindEngine.joinLineHistogram(toDF(tiny), minSupport = 2)),
@@ -112,31 +98,6 @@ class CindEngineSpec extends SparkSpec {
         assert((rdds2 -- rdds0).isEmpty, ctx)
       } finally spark.conf.unset("spark.graft.cind.dictEncodeMaxBroadcastRows")
     }
-  }
-
-  test("support-monotonicity prune is result-identical on hybrid and s2l") {
-    // supportPruneMaxIds = 0 disables the map-side ref prune; the default
-    // enables it. Both regimes must match each other AND the brute force —
-    // the prune is exact (a ref poorer than its dep can never reach
-    // co-count == support(dep)), so it may only shrink the evidence
-    // exchange, never the result.
-    def runH() = CindEngine.allCindsHybrid(toDF(tiny), minSupport = 2,
-        spillThreshold = 2).collect() // tiny spill: force the wide/BF arm too
-      .map(r => (Capture(r.dep_code, r.dep_v1, r.dep_v2),
-        Capture(r.ref_code, r.ref_v1, r.ref_v2), r.support)).toSet
-    def runS2l() = CindEngine.allCindsSmallToLarge(toDF(tiny), minSupport = 2)
-      .collect()
-      .map(r => (Capture(r.dep_code, r.dep_v1, r.dep_v2),
-        Capture(r.ref_code, r.ref_v1, r.ref_v2), r.support)).toSet
-    val (prunedH, prunedS) = (runH(), runS2l())
-    spark.conf.set("spark.graft.cind.supportPruneMaxIds", "0")
-    try {
-      assert(runH() == prunedH)
-      assert(runS2l() == prunedS)
-    } finally spark.conf.unset("spark.graft.cind.supportPruneMaxIds")
-    val want = bruteForce(tiny, 2)
-    assert(prunedH == want)
-    assert(prunedS == want)
   }
 
   test("allCinds respects the support threshold") {
@@ -232,35 +193,19 @@ class CindEngineSpec extends SparkSpec {
   }
 
   test("two-round sketch-pruned strategy equals the exact CIND set") {
-    // deliberately tiny sketch: heavy collisions weaken pruning but must
-    // never change the result
-    val t = distinctKeys(CindEngine.allCindsTwoRound(toDF(tiny), minSupport = 2,
-      expectedPairs = 64).collect())
+    // the strategy's name runs count-match (CindEngine.allCindsIntersect)
+    val t = distinctKeys(CindEngine.allCindsTwoRound(toDF(tiny), minSupport = 2).collect())
     assert(t == bruteForce(tiny, 2))
   }
 
   test("small-to-large staged strategy equals the exact CIND set") {
-    // the fixture has witnesses in all four arity classes, so every ladder
-    // stage (1/1 overlaps, 1/2 + 2/1 extraction, 2/2 extraction) is live
+    // the strategy's name runs count-match; the fixture has witnesses in
+    // all four arity classes
     val got = distinctKeys(CindEngine.allCindsSmallToLarge(toDF(tiny), minSupport = 2)
       .collect())
     val want = bruteForce(tiny, 2)
     assert(got == want, s"\nmissing=${want -- got}\nextra=${got -- want}")
     assert(got.exists { case (d, r, _) => d.v2 != "" && r.v2 != "" }) // a 2/2 survived
-  }
-
-  test("hybrid single-pass strategy equals the exact CIND set at every spill threshold") {
-    val want = bruteForce(tiny, 2)
-    // spill 1: essentially every line spills to Bloom bits (the all-approx
-    // extreme — every dep resolves through the round-2 refinement);
-    // spill 4: mixed exact + Bloom evidence per dep (the hybrid buffer's
-    // reason to exist); spill 1024: nothing spills (pure-exact path)
-    for (spill <- Seq(1, 4, 1024)) {
-      val got = distinctKeys(CindEngine.allCindsHybrid(toDF(tiny), minSupport = 2,
-        spillThreshold = spill).collect())
-      assert(got == want,
-        s"spill=$spill\nmissing=${want -- got}\nextra=${got -- want}")
-    }
   }
 
   test("allCindsPruned drops AR-implied binary captures and implied 1/1 CINDs") {
@@ -429,22 +374,43 @@ class CindEngineSpec extends SparkSpec {
   }
 
   test("salted regroup is result-identical on the standard fixture (extreme salting)") {
-    // hotLineSaltThreshold = 1 makes EVERY value hot (nsalt = line width):
-    // maximum split pressure through both fallback regroups (exact and
-    // bloomCaptures shapes) must leave the CIND set bit-identical
-    def key(r: CindRow) = (Capture(r.dep_code, r.dep_v1, r.dep_v2),
-      Capture(r.ref_code, r.ref_v1, r.ref_v2), r.support)
-    def run(bloomCaps: Boolean) = CindEngine.allCinds(toDF(tiny), minSupport = 2,
-      bloomCaptures = bloomCaps).collect().map(key).toSet
-    spark.conf.set("spark.graft.cind.dictEncodeMaxBroadcastRows", "0")
-    spark.conf.set("spark.graft.cind.hotLineSaltThreshold", "1")
-    try {
-      assert(run(bloomCaps = false) == bruteForce(tiny, 2))
-      assert(run(bloomCaps = true) == bruteForce(tiny, 2))
-    } finally {
-      spark.conf.unset("spark.graft.cind.dictEncodeMaxBroadcastRows")
-      spark.conf.unset("spark.graft.cind.hotLineSaltThreshold")
+    // in the shuffle-join encode, a line wider than the salt threshold is
+    // regrouped from ceil(w / threshold) salted parts, which the concat
+    // branch joins back into one line: at thresholds 1 and 2 the fixture's
+    // lines take both that branch and the narrow one, in both line shapes
+    // (exact and bloomCaptures), and the lines and the CIND set must not
+    // change
+    import org.apache.spark.sql.functions.{col, explode}
+    def decodedLines(bloomCaps: Boolean): Map[String, Set[(Int, String, String)]] = {
+      val enc = CindEngine.encodedJoinLines(toDF(tiny), minSupport = 2, bloomCaptures = bloomCaps)
+      try {
+        val perLine = enc.lines.select(col("join_val"), col("ids")).collect()
+          .map(r => r.getString(0) -> r.getSeq[Long](1))
+        assert(perLine.map(_._1).distinct.length == perLine.length, "a value split into parts")
+        perLine.foreach { case (jv, ids) => assert(ids.distinct == ids, jv) }
+        enc.lines.select(col("join_val"), explode(col("ids")).as("id"))
+          .join(enc.dict, "id").collect()
+          .groupBy(_.getAs[String]("join_val"))
+          .map { case (jv, rs) => jv -> rs.map(r =>
+            (r.getAs[Int]("code"), r.getAs[String]("v1"), r.getAs[String]("v2"))).toSet }
+      } finally enc.internal.foreach(_.unpersist())
     }
+    spark.conf.set("spark.graft.cind.dictEncodeMaxBroadcastRows", "0")
+    try {
+      for (bloomCaps <- Seq(false, true)) {
+        val whole = decodedLines(bloomCaps)
+        assert(whole.values.map(_.size).max > 2, "no line wider than both thresholds")
+        for (threshold <- Seq(1, 2)) {
+          val ctx = s"threshold $threshold, bloomCaptures $bloomCaps"
+          spark.conf.set("spark.graft.cind.hotLineSaltThreshold", threshold.toString)
+          try {
+            assert(decodedLines(bloomCaps) == whole, ctx)
+            assert(distinctKeys(CindEngine.allCinds(toDF(tiny), minSupport = 2,
+              bloomCaptures = bloomCaps).collect()) == bruteForce(tiny, 2), ctx)
+          } finally spark.conf.unset("spark.graft.cind.hotLineSaltThreshold")
+        }
+      }
+    } finally spark.conf.unset("spark.graft.cind.dictEncodeMaxBroadcastRows")
   }
 
   test("projection restriction equals full discovery filtered to those projections") {

@@ -36,15 +36,6 @@ object PropertySpec extends Properties("graft.core") {
   val sortedArr: Gen[Array[Capture]] = Gen.listOf(Gen.chooseNum(0, 50))
     .map(_.distinct.sorted.map(i => Capture(10, f"v$i%03d", "")).toArray)
 
-  property("intersect is commutative, associative, and Set-correct") =
-    forAll(sortedArr, sortedArr, sortedArr) { (a, b, c) =>
-      def s(x: Array[Capture]) = x.toSet
-      SortedOps.intersect(a, b).toSet == (s(a) & s(b)) &&
-        SortedOps.intersect(a, b).toSeq == SortedOps.intersect(b, a).toSeq &&
-        SortedOps.intersect(SortedOps.intersect(a, b), c).toSeq ==
-          SortedOps.intersect(a, SortedOps.intersect(b, c)).toSeq
-    }
-
   property("union is Set-correct and keeps sorted order") =
     forAll(sortedArr, sortedArr) { (a, b) =>
       val u = SortedOps.union(a, b)

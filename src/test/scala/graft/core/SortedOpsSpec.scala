@@ -13,52 +13,18 @@ class SortedOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("intersect matches Set semantics") {
-    for ((a, b) <- cases(1, 200)) {
-      assert(SortedOps.intersect(a, b).toSet == a.toSet.intersect(b.toSet))
-      assert(SortedOps.isSorted(SortedOps.intersect(a, b)))
-    }
-  }
-
   test("union matches Set semantics") {
     for ((a, b) <- cases(2, 200)) {
-      assert(SortedOps.union(a, b).toSet == a.toSet.union(b.toSet))
-      assert(SortedOps.isSorted(SortedOps.union(a, b)))
+      val u = SortedOps.union(a, b)
+      assert(u.toSet == a.toSet.union(b.toSet))
+      assert(u.toSeq == u.toSeq.distinct.sorted)
     }
-  }
-
-  test("intersect is associative and commutative") {
-    val rnd = new Random(3)
-    for (_ <- 0 until 200) {
-      def arr = Array.fill(rnd.nextInt(40))(rnd.nextInt(100)).distinct.sorted
-      val (a, b, c) = (arr, arr, arr)
-      val ab_c = SortedOps.intersect(SortedOps.intersect(a, b), c)
-      val a_bc = SortedOps.intersect(a, SortedOps.intersect(b, c))
-      assert(ab_c.sameElements(a_bc))
-      assert(SortedOps.intersect(a, b).sameElements(SortedOps.intersect(b, a)))
-    }
-  }
-
-  test("intersectionSize agrees with intersect") {
-    for ((a, b) <- cases(4, 200))
-      assert(SortedOps.intersectionSize(a, b) == SortedOps.intersect(a, b).length)
-  }
-
-  test("unionSumCounts sums counts of shared keys") {
-    val (keys, counts) = SortedOps.unionSumCounts(
-      Array(1, 3, 5), Array(10L, 30L, 50L),
-      Array(3, 4, 5), Array(1L, 2L, 3L))
-    assert(keys.toSeq == Seq(1, 3, 4, 5))
-    assert(counts.toSeq == Seq(10L, 31L, 2L, 53L))
-    val (k2, c2) = SortedOps.unionSumCounts(
-      Array.empty[Int], Array.empty[Long], Array(7), Array(2L))
-    assert(k2.toSeq == Seq(7) && c2.toSeq == Seq(2L))
   }
 
   test("works with Capture ordering") {
     val a = Array(Capture(10, "a", ""), Capture(10, "b", ""), Capture(14, "a", "b")).sorted
     val b = Array(Capture(10, "b", ""), Capture(12, "z", ""), Capture(14, "a", "b")).sorted
-    assert(SortedOps.intersect(a, b).toSeq ==
-      Seq(Capture(10, "b", ""), Capture(14, "a", "b")))
+    assert(SortedOps.union(a, b).toSeq ==
+      Seq(Capture(10, "a", ""), Capture(10, "b", ""), Capture(12, "z", ""), Capture(14, "a", "b")))
   }
 }

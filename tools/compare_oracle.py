@@ -2,10 +2,12 @@
 """Local stand-in for the driver's correctness gate: run each oracle_sql.json
 entry in DuckDB against the sf tables, compare row/schema/values with the
 Verify parquet dump (columns sorted by name, values compared as sorted rows).
+Each query runs on its own DuckDB connection, which spills into a temporary
+directory under <verify_out_dir> that is removed after the query.
 
 Usage: compare_oracle.py <sfdir> <verify_out_dir>
 """
-import sys, os, json, glob, math
+import sys, os, json, glob, math, shutil
 import duckdb
 
 # Exact by default — the driver hashes materialized values exactly, so a
@@ -15,10 +17,23 @@ import duckdb
 LOOSE = os.environ.get("GRAFT_COMPARE_LOOSE") == "1"
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
-con = duckdb.connect()
-for t in ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split():
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
+
+
+def query(name, sql, files):
+    """(spark rows, oracle rows) on a fresh connection spilling under outdir."""
+    tmp = os.path.abspath(os.path.join(outdir, "duckdb.tmp", name))
+    os.makedirs(tmp, exist_ok=True)
+    con = duckdb.connect(config={"temp_directory": tmp})
+    try:
+        for t in ("region nation customer supplier part orders lineitem events "
+                  "documents embeddings").split():
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
+        return (con.execute(f"SELECT * FROM read_parquet({files!r})").fetchdf(),
+                con.execute(sql).fetchdf())
+    finally:
+        con.close()
+        shutil.rmtree(tmp, ignore_errors=True)
+
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 fail = 0
@@ -29,9 +44,7 @@ for name, sql in sorted(oracle.items()):
         fail += 1
         continue
     try:
-        got = con.execute(
-            f"SELECT * FROM read_parquet({files!r})").fetchdf()
-        want = con.execute(sql).fetchdf()
+        got, want = query(name, sql, files)
     except Exception as e:
         print(f"FAIL {name}: {e}")
         fail += 1
@@ -78,5 +91,6 @@ for name, sql in sorted(oracle.items()):
             fail += 1
             continue
     print(f"OK   {name}: {len(g)} rows")
+shutil.rmtree(os.path.join(outdir, "duckdb.tmp"), ignore_errors=True)
 print("ALL OK" if fail == 0 else f"{fail} FAILURES")
 sys.exit(1 if fail else 0)
