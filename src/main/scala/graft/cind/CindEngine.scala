@@ -11,8 +11,8 @@ final case class CindRow(
     support: Long)
 
 /** [[CindEngine.encodedJoinLines]]' result: the persisted capture
-  * dictionary, the encoded lines relation (not persisted — the discovery
-  * skeleton decides), the dictionary's counted size, the ONE
+  * dictionary, the encoded lines relation (not persisted — the caller's
+  * persist rule decides), the dictionary's counted size, the ONE
   * broadcast-vs-shuffle regime decision every downstream join hint reads
   * (`broadcast`), whether the lines are a pure map over a cached upstream
   * (no shuffle to recompute them), and the internal caches (lines0/dedup +
@@ -281,9 +281,8 @@ object CindEngine {
     // either: its zeroValue (a full empty bit array, MBs) would be serialized
     // into every task closure. mapPartitions emits exactly one array per
     // partition, so the RDD is non-empty whenever keys has partitions.
-    val or = (a: Array[Long], b: Array[Long]) => {
-      var i = 0; while (i < a.length) { a(i) |= b(i); i += 1 }; a
-    }
+    val or = (a: Array[Long], b: Array[Long]) =>
+      graft.core.Bloom.wrap(nb, nh, a).mergeInPlace(graft.core.Bloom.wrap(nb, nh, b)).bits
     val rdd = bitArrays.rdd
     val merged =
       if (rdd.getNumPartitions == 0) new Array[Long](words)
@@ -312,9 +311,8 @@ object CindEngine {
 
   /** Membership filter column via the native codegen'd expression
     * (graft.functions.BloomMightContain): no UDF cliff -- the probe stays
-    * inside whole-stage codegen (no boxing, no Option wrapper; long keys
-    * skip the UTF8String->String conversion entirely) and the filter bits
-    * ship once per executor through the broadcast. */
+    * inside whole-stage codegen (no boxing, no Option wrapper) and the
+    * filter bits ship once per executor through the broadcast. */
   private def bloomContains(
       bf: org.apache.spark.broadcast.Broadcast[graft.core.BloomFilter],
       key: Column): Column =
@@ -648,27 +646,18 @@ object CindEngine {
     * MultiunionOverlapCandidates; the dep side carries its support so
     * `overlap == support` identifies 1/1 CINDs, reference
     * plan/SmallToLargeTraversalStrategy.scala:63-105). Output:
-    * (dep_code, dep_v1, ref_code, ref_v1, overlap, dep_support). */
-  def unaryOverlaps(triples: DataFrame, minSupport: Int = DefaultMinSupport,
-      sketch: Boolean = true, expectedPairs: Long = 4000000L): DataFrame = {
-    val enc = encodedJoinLines(triples, minSupport)
-    val unaryLines = arityLines(enc.lines, unary = true)
-    val internal = Seq.newBuilder[Dataset[_]]
-    // overlaps below minSupport can never certify a CIND nor survive the
-    // reference's candidate filters — the kernel's support floor keeps the
-    // materialized relation proportional to the useful candidates
-    val counts =
-      if (!sketch) PairCounts(unaryLines, minSupport, SplitThreshold)
-      else {
-        // overlap-side sketch (reference E4/E5/A4/G6, the strategy-1 scale
-        // valve): prune the pair keys before they are buffered, so the
-        // shuffle carries the frequent candidates, not every co-occurrence
-        val cached = unaryLines.persist()
-        cached.count() // sketch pass + count pass both read the lines
-        internal += cached
-        PairCounts(cached, minSupport, SplitThreshold,
-          admit = sketchAdmit(cached, minSupport, expectedPairs, SplitThreshold))
-      }
+    * (dep_code, dep_v1, ref_code, ref_v1, overlap, dep_support).
+    *
+    * Overlaps below minSupport can never certify a CIND nor survive the
+    * reference's candidate filters, and the [[PairCounts]] kernel drops
+    * them at its merge, so the materialized relation stays proportional to
+    * the useful candidates. The reference bounds the same state with a
+    * spectral-Bloom pre-pass (E4/E5/A4/G6); on the kernel that pass only
+    * pruned keys the floor drops anyway, and it was slower (BASELINE.md
+    * "One overlap count"). */
+  def unaryOverlaps(triples: DataFrame, minSupport: Int = DefaultMinSupport): DataFrame = {
+    val enc = persistedLines(encodedJoinLines(triples, minSupport))
+    val counts = PairCounts(arityLines(enc.lines, unary = true), minSupport, SplitThreshold)
     val unary = enc.dict.filter(col("v2") === "")
     val depSide = unary.select(col("id").as("dep_id"), col("code").as("dep_code"),
       col("v1").as("dep_v1"), col("support").as("dep_support"))
@@ -684,55 +673,27 @@ object CindEngine {
       .join(hinted(refSide), "ref_id")
       .select(col("dep_code"), col("dep_v1"), col("ref_code"), col("ref_v1"),
         col("n").as("overlap"), col("dep_support"))
-    CacheOps.cacheResult(out, internal.result() ++ enc.internal)
+    CacheOps.cacheResult(out, enc.internal)
   }
 
-  /** Spectral-sketch candidate filter over the unordered pair keys of
-    * `lines` (the reference's half-approximate round 1: E4/E5 extract, A4
-    * merge, G6 `EvaluateHalfApproximateOverlapSets` collapse), returned as
-    * the kernel's admit predicate:
-    *
-    *   - per-partition SPECTRAL Bloom filters count the kernel's enumerated
-    *     keys map-side (no shuffle; cell width derived from minSupport as
-    *     in the reference),
-    *   - cells tree-merge on executors,
-    *   - the sketch collapses to a membership filter of keys with count >=
-    *     minSupport (`toBloomFilter`, the reference's G6 move), broadcast.
-    *
-    * Saturating counters never under-count, so every key with true count >=
-    * minSupport is admitted — downstream exact filters see no change; the
-    * shuffle just carries plausible candidates instead of every
-    * co-occurrence. Undersizing `expectedPairs` only weakens pruning. */
-  private def sketchAdmit(lines: DataFrame, minSupport: Int,
-      expectedPairs: Long, splitThreshold: Int): Long => Boolean = {
-    val spark = lines.sparkSession
-    val proto = graft.core.SpectralBloomFilter.create(expectedPairs, 0.1, minSupport)
-    val (nc, bpc, nh, words) = (proto.numCells, proto.bitsPerCell, proto.numHashes, proto.cells.length)
-    val cellArrays = PairCounts.foldPartitions(lines, splitThreshold) { pairs =>
-      val s = new graft.core.SpectralBloomFilter(nc, bpc, nh, new Array[Long](words))
-      val buf = new Array[Long](4096)
-      var len = pairs.fill(buf, 0)
-      while (len > 0) {
-        var k = 0; while (k < len) { s.add(buf(k)); k += 1 }
-        len = pairs.fill(buf, 0)
-      }
-      s.cells
-    }(spark.implicits.newLongArrayEncoder)
-    // executor-side tree merge (see buildBloomLongs): cell arrays are MBs each,
-    // funnelling them all through the driver is the scale bottleneck; and
-    // treeReduce (not treeAggregate) so the MB-sized zero array is not
-    // serialized into every task closure
-    val mergeCells = (a: Array[Long], b: Array[Long]) =>
-      new graft.core.SpectralBloomFilter(nc, bpc, nh, a)
-        .mergeInPlace(new graft.core.SpectralBloomFilter(nc, bpc, nh, b)).cells
-    val rdd = cellArrays.rdd
-    val merged =
-      if (rdd.getNumPartitions == 0) new Array[Long](words)
-      else rdd.treeReduce(mergeCells, depth = 2)
-    val bcast = spark.sparkContext.broadcast(new graft.core.SpectralBloomFilter(nc, bpc, nh, merged)
-      .toBloomFilter(minSupport))
-    PairCounts.taskAdmit { () => val bf = bcast.value; pk => bf.mightContain(pk) }
-  }
+  /** The persist rule of every pair-counting caller: the encoded lines are
+    * persisted (and counted, so the kernel's parallel stage
+    * materializations read a filled cache) iff recomputing them shuffles —
+    * the salted regroup shapes. The kernel reads the lines once per union
+    * arm (the narrow and wide skew-split branches' differing pushed-down
+    * projections defeat exchange reuse): the r13 job profile showed the
+    * whole regroup subtree EXECUTING 4x there. In the broadcast-map regime
+    * the lines are a pure map over the cached lines0, and re-running that
+    * map per consumer measured CHEAPER than writing + count-barriering a
+    * second full copy (r14 A/B, OPTIMIZATION_r14.md). The persisted lines
+    * join `internal`, for the caller's `cacheResult` to release. */
+  private def persistedLines(enc: EncodedLines): EncodedLines =
+    if (enc.linesMapOnly) enc
+    else {
+      val lines = enc.lines.persist()
+      lines.count()
+      enc.copy(lines = lines, internal = lines +: enc.internal)
+    }
 
   /** Decode directed counts into CIND rows: keep pairs whose co-count
     * equals the dep's support — the ONE place a result is certified —
@@ -789,21 +750,11 @@ object CindEngine {
   }
 
   /** The discovery skeleton (the reference's plan/TraversalStrategy
-    * .scala base): encode the join lines, apply the persist rule, count
-    * their pairs through the [[PairCounts]] kernel, decode, apply the AR
-    * output filter, and materialize the compact result while releasing
-    * every internal cache. `sizes` only shrinks in tests.
-    *
-    * Persist rule: the encoded lines are persisted (and counted, so the
-    * kernel's parallel stage materializations read a filled cache) iff
-    * recomputing them shuffles — the salted regroup shapes. The kernel
-    * reads the lines once per union arm (the narrow and wide skew-split
-    * branches' differing pushed-down projections defeat exchange reuse):
-    * the r13 job profile showed the whole regroup subtree EXECUTING 4x
-    * there. In the broadcast-map regime the lines are a pure map over the
-    * cached lines0, and re-running that map per consumer measured CHEAPER
-    * than writing + count-barriering a second full copy (r14 A/B,
-    * OPTIMIZATION_r14.md). */
+    * .scala base): encode the join lines, apply the persist rule
+    * ([[persistedLines]]), count their pairs through the [[PairCounts]]
+    * kernel, decode, apply the AR output filter, and materialize the
+    * compact result while releasing every internal cache. `sizes` only
+    * shrinks in tests. */
   private[cind] def discover(triples: DataFrame, minSupport: Int, splitThreshold: Int,
       bloomConditions: Boolean, bloomCaptures: Boolean,
       expectedFrequentKeys: Long, projections: String,
@@ -811,16 +762,9 @@ object CindEngine {
       sizes: PairCounts.Sizes = PairCounts.Sizes()): Dataset[CindRow] = {
     // expectedFrequentKeys sizes the condition Bloom path (reference rule:
     // estimated triples / minSupport, FrequentConditionPlanner.scala:34-38)
-    val enc0 = encodedJoinLines(triples, minSupport, bloomConditions,
+    val enc = persistedLines(encodedJoinLines(triples, minSupport, bloomConditions,
       arRules = arRules, bloomCaptures = bloomCaptures,
-      expectedConditions = expectedFrequentKeys, projections = projections)
-    val enc =
-      if (enc0.linesMapOnly) enc0
-      else {
-        val lines = enc0.lines.persist()
-        lines.count()
-        enc0.copy(lines = lines, internal = lines +: enc0.internal)
-      }
+      expectedConditions = expectedFrequentKeys, projections = projections))
     val counts = expandCounts(PairCounts(enc.lines, minSupport, splitThreshold, sizes = sizes))
     val cinds = decodeCinds(enc, counts, minSupport)
     val out = arRules.fold(cinds)(rules => arImpliedCindFilter(cinds.toDF(), rules))

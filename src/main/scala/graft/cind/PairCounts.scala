@@ -1,6 +1,6 @@
 package graft.cind
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** The unordered pair-count kernel: for every pair of captures co-occurring
@@ -55,18 +55,16 @@ private[cind] object PairCounts {
   }
 
   /** `(pk, n)` for every unordered pair key `pk = dep << 32 | ref`
-    * (dep < ref) that `admit` accepts, `n` the number of lines holding both
-    * ids, kept iff `n >= minSupport`. `lines` carries an `ids ARRAY<LONG>`
-    * column of duplicate-free ids below 2^32. `admit` (null: all) filters
-    * keys before they are buffered — [[CindEngine.unaryOverlaps]] passes
-    * its sketch's candidate filter. */
+    * (dep < ref), `n` the number of lines holding both ids, kept iff
+    * `n >= minSupport`. `lines` carries an `ids ARRAY<LONG>` column of
+    * duplicate-free ids below 2^32. */
   def apply(lines: DataFrame, minSupport: Int, splitThreshold: Int,
-      admit: Long => Boolean = null, sizes: Sizes = Sizes()): DataFrame = {
+      sizes: Sizes = Sizes()): DataFrame = {
     val spark = lines.sparkSession
     import spark.implicits._
     val Sizes(capacity, buckets) = sizes
     val blocks = units(lines, splitThreshold).mapPartitions { it =>
-      val pairs = new PairCursor(it, admit)
+      val pairs = new PairCursor(it)
       var buf = new Array[Long](math.min(capacity, InitialBuffer))
       val coder = new BlockCoder(buckets)
       Iterator.continually {
@@ -86,25 +84,6 @@ private[cind] object PairCounts {
       .toDF("pk", "n")
   }
 
-  /** An admit predicate built on the executor, once per task: `build`
-    * reads its broadcasts there and returns the per-key test. Reading a
-    * broadcast per key would take `TorrentBroadcast.value`'s lock once per
-    * pair. */
-  def taskAdmit(build: () => Long => Boolean): Long => Boolean = new TaskAdmit(build)
-
-  private final class TaskAdmit(build: () => Long => Boolean)
-      extends (Long => Boolean) with Serializable {
-    @transient private lazy val test = build()
-    def apply(pk: Long): Boolean = test(pk)
-  }
-
-  /** The pair enumerator as a partition-wise function, for consumers that
-    * fold every key themselves (the overlap sketch): `f` gets a cursor
-    * over the partition's pair keys and returns the partition's result. */
-  def foldPartitions[T: Encoder](lines: DataFrame,
-      splitThreshold: Int)(f: PairCursor => T): Dataset[T] =
-    units(lines, splitThreshold).mapPartitions(it => Iterator.single(f(new PairCursor(it, null))))
-
   /** Work units `(ids, first, stride)`: narrow lines whole, wide lines
     * sliced and round-robined (see the object doc). Lines with fewer than
     * two ids have no pair and drop out. */
@@ -122,7 +101,7 @@ private[cind] object PairCounts {
   }
 
   /** Resumable pair-key enumeration over a partition's work units. */
-  final class PairCursor(units: Iterator[(Array[Long], Int, Int)], admit: Long => Boolean) {
+  private final class PairCursor(units: Iterator[(Array[Long], Int, Int)]) {
     private var ids = Array.emptyLongArray
     private var i = 0
     private var j = 1
@@ -138,10 +117,7 @@ private[cind] object PairCounts {
         val hi = a << 32
         while (j < ids.length && len < buf.length) {
           val b = ids(j)
-          if (b != a) {
-            val pk = hi | b
-            if (admit == null || admit(pk)) { buf(len) = pk; len += 1 }
-          }
+          if (b != a) { buf(len) = hi | b; len += 1 }
           j += 1
         }
         if (j >= ids.length) { i += stride; j = i + 1 }

@@ -1,35 +1,22 @@
 package graft.core
 
-import scala.util.hashing.MurmurHash3
-
-/** Plain Bloom filter over string keys with exportable bit array.
+/** Plain Bloom filter over 64-bit keys.
   *
-  * The reference relies on a modified Guava exposing
-  * `exportBits()/wrap()/intersect()/putAll()` plus a counting ("spectral")
-  * variant (reference README.md:22-26; used e.g. in
-  * candidate_merging/IntersectHalfApproximateCindCandidates.scala:40-46).
-  * Exact hash/FPP parity is not required — only set semantics (no false
-  * negatives; bitwise union ≈ set union; bitwise intersection over-approximates
-  * set intersection), so this is a fresh implementation: double hashing from
-  * two MurmurHash3 seeds, bits stored as Array[Long] so the filter is directly
-  * Spark-serializable and mergeable in aggregators.
+  * The reference builds its frequency filters on a modified Guava
+  * (reference README.md:22-26). Exact hash/FPP parity is not required —
+  * only set semantics (no false negatives; bitwise union ≈ set union) — so
+  * this is a fresh implementation: double hashing from two seeded fmix64
+  * variants of the key, bits stored as Array[Long] so the filter is
+  * directly Spark-serializable and mergeable across partitions. Every key
+  * the engine filters on is already an `xxhash64` long (a condition, a
+  * capture, a shingle), so no key is ever stringified.
   */
 final class BloomFilter(val numBits: Int, val numHashes: Int, val bits: Array[Long])
     extends Serializable {
 
-  def put(key: String): Unit =
-    putHashes(MurmurHash3.stringHash(key, 0x9747b28c),
-      MurmurHash3.stringHash(key, 0x5bd1e995))
-
-  /** Long-key insert — fmix64 double hashing, NO per-key String allocation
-    * (the packed-long pair-key stream is the most voluminous relation in
-    * the CIND job; stringifying every key there costs an allocation + a
-    * char-wise hash per key). String and long key spaces are independent:
-    * a filter must be built and queried with the SAME key type. */
-  def put(key: Long): Unit =
-    putHashes(Bloom.longHash1(key), Bloom.longHash2(key))
-
-  private def putHashes(h1: Int, h2: Int): Unit = {
+  def put(key: Long): Unit = {
+    val h1 = Bloom.longHash1(key)
+    val h2 = Bloom.longHash2(key)
     var i = 0
     while (i < numHashes) {
       val idx = Bloom.index(h1, h2, i, numBits)
@@ -38,14 +25,9 @@ final class BloomFilter(val numBits: Int, val numHashes: Int, val bits: Array[Lo
     }
   }
 
-  def mightContain(key: String): Boolean =
-    containsHashes(MurmurHash3.stringHash(key, 0x9747b28c),
-      MurmurHash3.stringHash(key, 0x5bd1e995))
-
-  def mightContain(key: Long): Boolean =
-    containsHashes(Bloom.longHash1(key), Bloom.longHash2(key))
-
-  private def containsHashes(h1: Int, h2: Int): Boolean = {
+  def mightContain(key: Long): Boolean = {
+    val h1 = Bloom.longHash1(key)
+    val h2 = Bloom.longHash2(key)
     var i = 0
     while (i < numHashes) {
       val idx = Bloom.index(h1, h2, i, numBits)
@@ -62,19 +44,6 @@ final class BloomFilter(val numBits: Int, val numHashes: Int, val bits: Array[Lo
     while (i < bits.length) { bits(i) |= other.bits(i); i += 1 }
     this
   }
-
-  /** Bitwise intersection — over-approximates the key-set intersection
-    * (never drops a key present in both; may keep extras). */
-  def intersectInPlace(other: BloomFilter): BloomFilter = {
-    require(other.numBits == numBits && other.numHashes == numHashes)
-    var i = 0
-    while (i < bits.length) { bits(i) &= other.bits(i); i += 1 }
-    this
-  }
-
-  def exportBits: Array[Long] = bits.clone()
-
-  def copy: BloomFilter = new BloomFilter(numBits, numHashes, bits.clone())
 }
 
 object Bloom {
@@ -110,120 +79,4 @@ object Bloom {
 
   def wrap(numBits: Int, numHashes: Int, bits: Array[Long]): BloomFilter =
     new BloomFilter(numBits, numHashes, bits)
-}
-
-/** Counting ("spectral") Bloom filter: fixed-width saturating counters, min
-  * over hash cells as the count estimate (never under-counts). Mirrors the
-  * reference's spectral filter role (util/BloomFilterParameters.scala:33-34,
-  * used by the half-approximate overlap merges) without its bit layout.
-  */
-final class SpectralBloomFilter(
-    val numCells: Int,
-    val bitsPerCell: Int,
-    val numHashes: Int,
-    val cells: Array[Long]) extends Serializable {
-
-  private val maxCount: Long = (1L << bitsPerCell) - 1
-
-  private def getCell(idx: Int): Long = {
-    val bitPos = idx.toLong * bitsPerCell
-    val word = (bitPos >>> 6).toInt
-    val off = (bitPos & 63).toInt
-    if (off + bitsPerCell <= 64) (cells(word) >>> off) & maxCount
-    else {
-      val lo = cells(word) >>> off
-      val hi = cells(word + 1) << (64 - off)
-      (lo | hi) & maxCount
-    }
-  }
-
-  private def setCell(idx: Int, value: Long): Unit = {
-    val v = math.min(value, maxCount)
-    val bitPos = idx.toLong * bitsPerCell
-    val word = (bitPos >>> 6).toInt
-    val off = (bitPos & 63).toInt
-    if (off + bitsPerCell <= 64) {
-      cells(word) = (cells(word) & ~(maxCount << off)) | (v << off)
-    } else {
-      val loBits = 64 - off
-      cells(word) = (cells(word) & ~(maxCount << off)) | (v << off)
-      val hiMask = maxCount >>> loBits
-      cells(word + 1) = (cells(word + 1) & ~hiMask) | (v >>> loBits)
-    }
-  }
-
-  def add(key: String, delta: Long = 1L): Unit =
-    addHashes(MurmurHash3.stringHash(key, 0x9747b28c),
-      MurmurHash3.stringHash(key, 0x5bd1e995), delta)
-
-  /** Long-key insert (see [[BloomFilter.put(key:Long)*]]): same cell
-    * indexing as the plain filter, so a spectral sketch built with long
-    * keys collapses ([[toBloomFilter]]) to a filter queryable with the
-    * SAME long keys. */
-  def add(key: Long, delta: Long): Unit =
-    addHashes(Bloom.longHash1(key), Bloom.longHash2(key), delta)
-
-  def add(key: Long): Unit = add(key, 1L)
-
-  private def addHashes(h1: Int, h2: Int, delta: Long): Unit = {
-    var i = 0
-    while (i < numHashes) {
-      val idx = Bloom.index(h1, h2, i, numCells)
-      setCell(idx, getCell(idx) + delta)
-      i += 1
-    }
-  }
-
-  /** Upper bound of the key's insert count (min over its cells). */
-  def count(key: String): Long =
-    countHashes(MurmurHash3.stringHash(key, 0x9747b28c),
-      MurmurHash3.stringHash(key, 0x5bd1e995))
-
-  def count(key: Long): Long =
-    countHashes(Bloom.longHash1(key), Bloom.longHash2(key))
-
-  private def countHashes(h1: Int, h2: Int): Long = {
-    var min = Long.MaxValue
-    var i = 0
-    while (i < numHashes) {
-      val idx = Bloom.index(h1, h2, i, numCells)
-      val c = getCell(idx)
-      if (c < min) min = c
-      i += 1
-    }
-    if (min == Long.MaxValue) 0L else min
-  }
-
-  /** Cell-wise saturating sum — equivalent to adding both key bags. */
-  def mergeInPlace(other: SpectralBloomFilter): SpectralBloomFilter = {
-    require(other.numCells == numCells && other.bitsPerCell == bitsPerCell &&
-      other.numHashes == numHashes)
-    var i = 0
-    while (i < numCells) { setCell(i, getCell(i) + other.getCell(i)); i += 1 }
-    this
-  }
-
-  /** Collapse to a membership filter of keys with count >= minCount. */
-  def toBloomFilter(minCount: Long): BloomFilter = {
-    val bf = new BloomFilter(numCells, numHashes, new Array[Long]((numCells + 63) >>> 6))
-    var i = 0
-    while (i < numCells) {
-      if (getCell(i) >= minCount) bf.bits(i >>> 6) |= (1L << (i & 63))
-      i += 1
-    }
-    bf
-  }
-}
-
-object SpectralBloomFilter {
-  /** bitsPerCell follows the reference's rule 33 - nlz(minSupport)
-    * (plan/SmallToLargeTraversalStrategy.scala:181-193): enough width to
-    * count just past the support threshold. */
-  def create(expectedInsertions: Long, fpp: Double, minSupport: Int): SpectralBloomFilter = {
-    val proto = Bloom.create(expectedInsertions, fpp)
-    val bitsPerCell = math.min(32, 33 - Integer.numberOfLeadingZeros(math.max(1, minSupport)))
-    val numCells = proto.numBits
-    val words = ((numCells.toLong * bitsPerCell + 63) >>> 6).toInt
-    new SpectralBloomFilter(numCells, bitsPerCell, proto.numHashes, new Array[Long](words))
-  }
 }

@@ -49,8 +49,8 @@ object ExplainAudit {
       show("sim_topk_brute", graft.sim.Similarity.bruteForceTopK(
         spark.read.parquet(s"$sf/embeddings.parquet"),
         org.apache.spark.sql.functions.col("vec_id") % 100 === 0, 10))
-    if (which == "all" || which == "sketch")
-      show("cind_unary_overlaps (sketch-pruned)", graft.cind.CindEngine.unaryOverlaps(
+    if (which == "all" || which == "overlaps")
+      show("cind_unary_overlaps", graft.cind.CindEngine.unaryOverlaps(
         graft.rdf.TripleSource.derive(spark, sf)))
     if (which == "all" || which == "minhash")
       show("dedup_minhash_pairs", graft.dedup.Dedup.minhashLshPairs(

@@ -49,9 +49,13 @@ object PlanDump {
     * and adaptive query-stage ids (numbered in materialization order,
     * which parallel broadcasts race), RDD and broadcast-variable ids
     * (session-wide counters, shifted by every earlier query), call-site
-    * line numbers, and lambda class names and object hash codes. */
+    * line numbers, lambda class names and object hash codes, and the
+    * numeric suffix of lambda variable names (`lambda x_5#L`: the Scala
+    * API's fresh-name counter is JVM-wide, so it counts every lambda an
+    * earlier query built; the name before it is kept). */
   def normalise(plan: String): String = Seq(
     "#\\d+" -> "#",
+    "(lambda [A-Za-z]\\w*?)_\\d+#" -> "$1_#",
     "plan_id=\\d+" -> "plan_id=",
     "codegen id : \\d+" -> "codegen id : ",
     "(?m)^Arguments: \\d+$" -> "Arguments: ",

@@ -11,6 +11,31 @@ object BruteForce {
 
   def apply(triples: Seq[(String, String, String)], minSupport: Int)
       : Set[(Capture, Capture, Long)] = {
+    val sets = valueSets(triples)
+    val caps = sets.keys.toSeq
+    (for {
+      dep <- caps if sets(dep).size >= minSupport
+      ref <- caps
+      if ref != dep && !dep.implies(ref) && sets(dep).subsetOf(sets(ref))
+    } yield (dep, ref, sets(dep).size.toLong)).toSet
+  }
+
+  /** `CindEngine.unaryOverlaps`' relation: (dep, ref, overlap, dep support)
+    * for every ordered pair of distinct unary captures, each with support
+    * >= minSupport, whose value sets share >= minSupport values. */
+  def unaryOverlaps(triples: Seq[(String, String, String)], minSupport: Int)
+      : Set[(Capture, Capture, Long, Long)] = {
+    val sets = valueSets(triples).filter { case (c, vs) => c.isUnary && vs.size >= minSupport }
+    (for {
+      (dep, dv) <- sets.toSeq
+      (ref, rv) <- sets.toSeq
+      overlap = (dv intersect rv).size
+      if ref != dep && overlap >= minSupport
+    } yield (dep, ref, overlap.toLong, dv.size.toLong)).toSet
+  }
+
+  /** Every capture's value set: the join values it holds. */
+  def valueSets(triples: Seq[(String, String, String)]): Map[Capture, Set[String]] = {
     val sets = scala.collection.mutable.Map
       .empty[Capture, scala.collection.mutable.Set[String]]
     def add(cap: Capture, v: String): Unit =
@@ -26,11 +51,6 @@ object BruteForce {
       add(Capture(ConditionCodes.capture(P, O), p, ""), o)
       add(Capture(ConditionCodes.capture(S | P, O), s, p), o)
     }
-    val caps = sets.keys.toSeq
-    (for {
-      dep <- caps if sets(dep).size >= minSupport
-      ref <- caps
-      if ref != dep && !dep.implies(ref) && sets(dep).subsetOf(sets(ref))
-    } yield (dep, ref, sets(dep).size.toLong)).toSet
+    sets.map { case (c, vs) => c -> vs.toSet }.toMap
   }
 }

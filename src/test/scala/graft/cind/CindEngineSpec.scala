@@ -183,13 +183,26 @@ class CindEngineSpec extends SparkSpec {
     val cindsFromOverlaps = ov.collect { case ((d, r), (o, s)) if o == s && !d.implies(r) => (d, r, s) }.toSet
     val unaryBrute = bruteForce(tiny, 2).filter { case (d, r, _) => d.isUnary && r.isUnary }
     assert(cindsFromOverlaps == unaryBrute)
-    // the overlap-side sketch is semantics-preserving (even deliberately
-    // undersized, heavy-collision sketches only weaken pruning)
-    val exact = CindEngine.unaryOverlaps(toDF(tiny), minSupport = 2, sketch = false)
-      .collect().map(_.toSeq).toSet
-    val sketched = CindEngine.unaryOverlaps(toDF(tiny), minSupport = 2,
-      sketch = true, expectedPairs = 64).collect().map(_.toSeq).toSet
-    assert(sketched == exact)
+    // the whole relation against the brute force, in both encode regimes:
+    // every ordered pair of distinct frequent unary captures sharing
+    // >= minSupport values, once, with its overlap and dep support
+    def rows(minSupport: Int) = {
+      val got = CindEngine.unaryOverlaps(toDF(tiny), minSupport).collect()
+        .map(r => (Capture(r.getInt(0), r.getString(1), ""),
+          Capture(r.getInt(2), r.getString(3), ""), r.getLong(4), r.getLong(5)))
+      assert(got.distinct.length == got.length, s"a pair repeats (minSupport $minSupport)")
+      got.toSet
+    }
+    for (fallback <- Seq(false, true); minSupport <- Seq(1, 2, 3)) {
+      val want = BruteForce.unaryOverlaps(tiny, minSupport)
+      assert(want.nonEmpty)
+      if (fallback) spark.conf.set("spark.graft.cind.dictEncodeMaxBroadcastRows", "0")
+      try {
+        val got = rows(minSupport)
+        assert(got == want, s"(minSupport $minSupport, shuffle-join encode: $fallback)" +
+          s"\nmissing=${want -- got}\nextra=${got -- want}")
+      } finally spark.conf.unset("spark.graft.cind.dictEncodeMaxBroadcastRows")
+    }
   }
 
   test("two-round sketch-pruned strategy equals the exact CIND set") {

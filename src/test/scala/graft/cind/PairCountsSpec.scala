@@ -22,19 +22,18 @@ class PairCountsSpec extends SparkSpec {
     }
   }
 
-  private def bruteForce(lines: Seq[Seq[Long]], minSupport: Int,
-      admit: Long => Boolean = _ => true): Map[Long, Long] =
+  private def bruteForce(lines: Seq[Seq[Long]], minSupport: Int): Map[Long, Long] =
     lines.flatMap { ids =>
       for (a <- ids; b <- ids if a < b) yield (a << 32) | b
-    }.filter(admit).groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+    }.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
       .filter(_._2 >= minSupport)
 
   private def df(lines: Seq[Seq[Long]], partitions: Int): DataFrame =
     lines.map(_.toArray).toDF("ids").repartition(partitions)
 
   private def kernel(lines: DataFrame, minSupport: Int, splitThreshold: Int = 1024,
-      admit: Long => Boolean = null, sizes: PairCounts.Sizes = tiny): Map[Long, Long] = {
-    val rows = PairCounts(lines, minSupport, splitThreshold, admit, sizes)
+      sizes: PairCounts.Sizes = tiny): Map[Long, Long] = {
+    val rows = PairCounts(lines, minSupport, splitThreshold, sizes)
       .as[(Long, Long)].collect()
     assert(rows.map(_._1).distinct.length == rows.length, "a pair key left the merge twice")
     rows.toMap
@@ -74,13 +73,5 @@ class PairCountsSpec extends SparkSpec {
     assert(kernel(df(lines, 9), 1) == Map(((4L << 32) | 6L) -> 1L))
     assert(kernel(df(lines.take(3), 5), 1).isEmpty)
     assert(kernel(df(Nil, 3), 1).isEmpty)
-  }
-
-  test("the admit predicate filters keys before they are counted") {
-    val lines = randomLines(seed = 3, n = 50, maxWidth = 10, vocab = 25)
-    val admit: Long => Boolean = pk => (pk ^ (pk >>> 32)) % 3 != 0
-    val want = bruteForce(lines, 2, admit)
-    assert(want.nonEmpty && want.size < bruteForce(lines, 2).size)
-    assert(kernel(df(lines, 3), 2, splitThreshold = 3, admit = admit) == want)
   }
 }

@@ -4,64 +4,40 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class BloomSpec extends AnyFunSuite {
 
+  /** Well-spread 64-bit keys, as the pipeline's xxhash64 keys are. */
+  private def keys(seed: Long, n: Int): Seq[Long] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(n)(rnd.nextLong())
+  }
+
   test("no false negatives") {
     val bf = Bloom.create(1000, 0.01)
-    val keys = (0 until 1000).map(i => s"key-$i")
-    keys.foreach(bf.put)
-    keys.foreach(k => assert(bf.mightContain(k)))
+    val ks = keys(1, 1000)
+    ks.foreach(bf.put)
+    ks.foreach(k => assert(bf.mightContain(k)))
   }
 
   test("false positive rate is roughly as configured") {
     val bf = Bloom.create(10000, 0.01)
-    (0 until 10000).foreach(i => bf.put(s"in-$i"))
-    val fps = (0 until 10000).count(i => bf.mightContain(s"out-$i"))
+    keys(2, 10000).foreach(bf.put)
+    val fps = keys(3, 10000).count(bf.mightContain)
     assert(fps < 300, s"fp count $fps")
   }
 
   test("merge is bitwise union of key sets") {
     val a = Bloom.create(100, 0.01)
     val b = Bloom.create(100, 0.01)
-    a.put("x"); b.put("y")
+    a.put(17L); b.put(-42L)
     a.mergeInPlace(b)
-    assert(a.mightContain("x") && a.mightContain("y"))
-  }
-
-  test("intersect never drops keys present in both") {
-    val a = Bloom.create(1000, 0.01)
-    val b = Bloom.create(1000, 0.01)
-    (0 until 100).foreach(i => a.put(s"both-$i"))
-    (0 until 100).foreach(i => b.put(s"both-$i"))
-    (0 until 100).foreach(i => a.put(s"onlyA-$i"))
-    (0 until 100).foreach(i => b.put(s"onlyB-$i"))
-    a.intersectInPlace(b)
-    (0 until 100).foreach(i => assert(a.mightContain(s"both-$i")))
+    assert(a.mightContain(17L) && a.mightContain(-42L))
   }
 
   test("export/wrap round-trips") {
     val a = Bloom.create(100, 0.01)
-    a.put("hello")
-    val b = Bloom.wrap(a.numBits, a.numHashes, a.exportBits)
-    assert(b.mightContain("hello"))
-  }
-
-  test("spectral filter counts are upper bounds and exact-ish when sparse") {
-    val sbf = SpectralBloomFilter.create(1000, 0.01, minSupport = 10)
-    (0 until 7).foreach(_ => sbf.add("seven"))
-    (0 until 12).foreach(_ => sbf.add("twelve"))
-    assert(sbf.count("seven") >= 7)
-    assert(sbf.count("twelve") >= 12)
-    assert(sbf.count("absent") <= 1)
-    val bf = sbf.toBloomFilter(10)
-    assert(bf.mightContain("twelve"))
-  }
-
-  test("spectral merge sums counts") {
-    val a = SpectralBloomFilter.create(100, 0.01, 10)
-    val b = SpectralBloomFilter.create(100, 0.01, 10)
-    (0 until 4).foreach(_ => a.add("k"))
-    (0 until 5).foreach(_ => b.add("k"))
-    a.mergeInPlace(b)
-    assert(a.count("k") >= 9)
+    a.put(0x1234567890abcdefL)
+    val b = Bloom.wrap(a.numBits, a.numHashes, a.bits.clone())
+    assert(b.mightContain(0x1234567890abcdefL))
+    assert(b.bits.sameElements(a.bits))
   }
 
   test("default 10M/1% sizing has numBits not divisible by 64 and still works") {
@@ -72,15 +48,9 @@ class BloomSpec extends AnyFunSuite {
     assert(proto.numBits % 64 != 0, "sizing regression guard expects a non-multiple")
     val wrapped = Bloom.wrap(proto.numBits, proto.numHashes,
       new Array[Long]((proto.numBits + 63) >>> 6))
-    (0 until 50000).foreach(i => wrapped.put(s"k-$i"))
-    (0 until 50000).foreach(i => assert(wrapped.mightContain(s"k-$i")))
-  }
-
-  test("spectral counters saturate instead of overflowing") {
-    val sbf = SpectralBloomFilter.create(100, 0.01, minSupport = 2)
-    val max = (1L << sbf.bitsPerCell) - 1
-    (0L until (max + 5)).foreach(_ => sbf.add("hot"))
-    assert(sbf.count("hot") == max)
+    val ks = keys(4, 50000)
+    ks.foreach(wrapped.put)
+    ks.foreach(k => assert(wrapped.mightContain(k)))
   }
 
   test("long-key path: no false negatives, plausible fp rate") {
@@ -90,19 +60,5 @@ class BloomSpec extends AnyFunSuite {
     keys.foreach(k => assert(bf.mightContain(k)))
     val fps = (20000L until 30000L).count(bf.mightContain)
     assert(fps < 300, s"fp count $fps")
-  }
-
-  test("spectral long-key adds collapse to a long-key-queryable filter") {
-    val s = SpectralBloomFilter.create(10000, 0.1, 5)
-    // keys 0..99 added 5 times (frequent), 100..199 once (infrequent)
-    for (k <- 0L until 100L; _ <- 0 until 5) s.add(k)
-    for (k <- 100L until 200L) s.add(k)
-    (0L until 100L).foreach(k => assert(s.count(k) >= 5))
-    val bf = s.toBloomFilter(5)
-    // no false negatives among the frequent keys, queried as longs
-    (0L until 100L).foreach(k => assert(bf.mightContain(k)))
-    // most infrequent keys rejected (sketch overcounts only via collisions)
-    val admitted = (100L until 200L).count(bf.mightContain)
-    assert(admitted < 30, s"admitted $admitted infrequent keys")
   }
 }

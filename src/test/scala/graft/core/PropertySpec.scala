@@ -50,20 +50,12 @@ object PropertySpec extends Properties("graft.core") {
     }
 
   property("bloom merge is bitwise union of key sets (no false negatives)") =
-    forAll(Gen.listOf(Gen.alphaNumStr), Gen.listOf(Gen.alphaNumStr)) { (ks1, ks2) =>
+    forAll(Gen.listOf(Gen.long), Gen.listOf(Gen.long)) { (ks1, ks2) =>
       val a = Bloom.create(1000, 0.01)
       val b = Bloom.create(1000, 0.01)
       ks1.foreach(a.put)
       ks2.foreach(b.put)
       a.mergeInPlace(b)
       (ks1 ++ ks2).forall(a.mightContain)
-    }
-
-  property("spectral counts upper-bound true counts") =
-    forAll(Gen.listOf(Gen.oneOf("a", "b", "c", "d", "e"))) { keys =>
-      val s = SpectralBloomFilter.create(100, 0.01, 3)
-      keys.foreach(k => s.add(k))
-      val truth = keys.groupBy(identity).view.mapValues(_.size.toLong)
-      truth.forall { case (k, n) => s.count(k) >= math.min(n, 7) } // cap=2^3-1
     }
 }
