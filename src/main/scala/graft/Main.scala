@@ -31,9 +31,12 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *                         under Spark's external sort, so there is no
   *                         window to size
   *   --use-ars             association-rule pruning (reference --use-ars)
-  *   --use-bloom           Bloom-filtered frequency pruning, filters sized by
-  *                         a sampled triple-count estimate (reference
-  *                         --use-fis sizing rule; results identical)
+  *   --use-bloom           Bloom-filtered frequent-condition pruning, the
+  *                         filter sized by a sampled triple-count estimate
+  *                         (reference --use-fis sizing rule; results
+  *                         identical). Captures take no flag: the join lines
+  *                         always come from one shape, and the shuffle-regime
+  *                         encode always probes a frequent-capture filter
   *   --projection ATTRS    which of s/p/o to project (reference --projection,
   *                         default spo)
   *   --clean-implied       minimality pruning (reference --clean-implied)
@@ -148,7 +151,7 @@ object Main {
         math.max(1000L, est / math.max(1, c.support))
       } else 10000000L
     val cinds = CindEngine.allCinds(triples, c.support,
-      bloomConditions = c.useBloom, bloomCaptures = c.useBloom,
+      bloomConditions = c.useBloom,
       expectedFrequentKeys = expected, projections = c.projections,
       arRules = rules)
     if (c.cleanImplied) {

@@ -680,9 +680,8 @@ object SparkEntry {
     "cind_all_hybrid" -> ((s, dir) => // the hybrid exact/Bloom merge (A3)
       CindEngine.allCindsHybrid(triples(s, dir), MS).toDF()
         .orderBy(cindCols.map(col): _*)),
-    "cind_all_bloom" -> ((s, dir) => // 100 TB valves: both Bloom paths ON
-      CindEngine.allCinds(triples(s, dir), MS,
-        bloomConditions = true, bloomCaptures = true).toDF()
+    "cind_all_bloom" -> ((s, dir) => // 100 TB valve: the condition Bloom filter ON
+      CindEngine.allCinds(triples(s, dir), MS, bloomConditions = true).toDF()
         .orderBy(cindCols.map(col): _*)),
     "cind_association_rules" -> ((s, dir) =>
       CindEngine.associationRules(triples(s, dir), MS)

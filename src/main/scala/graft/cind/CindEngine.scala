@@ -14,16 +14,15 @@ final case class CindRow(
   * dictionary, the encoded lines relation (not persisted — the caller's
   * persist rule decides), the dictionary's counted size, the ONE
   * broadcast-vs-shuffle regime decision every downstream join hint reads
-  * (`broadcast`), whether the lines are a pure map over a cached upstream
-  * (no shuffle to recompute them), and the internal caches (lines0/dedup +
-  * dict) the caller must release once its compact result is materialized
-  * (VERDICT r13 #4: these leaked). */
+  * (`broadcast`; in that regime the lines are also a pure map over the
+  * cached lines0, with no shuffle to recompute them), and the internal
+  * caches (lines0 + dict) the caller must release once its compact result
+  * is materialized (VERDICT r13 #4: these leaked). */
 private[cind] final case class EncodedLines(
     dict: DataFrame,
     lines: DataFrame,
     nDict: Long,
     broadcast: Boolean,
-    linesMapOnly: Boolean,
     internal: Seq[Dataset[_]])
 
 /** The CIND discovery pipeline, re-expressed Spark-first.
@@ -36,11 +35,12 @@ private[cind] final case class EncodedLines(
   *                                          frequent members only; a broadcast
   *                                          semi-join or Bloom filter on the union;
   *                                          ref: FrequentConditionPlanner BFs, E14)
-  *     -> dedup + capture dictionary       (persisted; dense int IDs; support
-  *                                          filter; ref: RDFind.scala:348-400)
   *     -> join lines by value              (JoinLines kernel: sorted, deduplicated
   *                                          capture runs per value, merged at the
   *                                          reduce side; ref: UnionJoinCandidates)
+  *     -> capture dictionary               (supports from the cached lines; persisted;
+  *                                          dense int IDs; support filter;
+  *                                          ref: RDFind.scala:348-400)
   *     -> pair co-occurrence counts        (PairCounts kernel: sorted runs,
   *                                          delta-coded blocks, support floor
   *                                          at the merge; ref: overlap sets)
@@ -342,57 +342,10 @@ object CindEngine {
     spark.conf.getOption("spark.graft.cind.dictEncodeMaxBroadcastRows")
       .map(_.toLong).getOrElse(DefaultDictEncodeMaxBroadcastRows)
 
-  /** Per-value capture count above which the FALLBACK regroup pre-salts a
-    * join value across aggregation buffers (VERDICT r12 #2: a hot value
-    * otherwise builds its whole id array in ONE collect_list buffer — the
-    * single-row memory hazard of the shuffle-encode regime). Values past
-    * the threshold split into ceil(n/threshold) salted sub-groups first
-    * (each buffer bounded ≈ threshold longs), and only those few hot
-    * values pay a second, tiny concat aggregation. Intersection/counting
-    * downstream is order- and duplicate-insensitive, so results are
-    * unchanged (spec-pinned). */
-  val DefaultHotLineSaltThreshold = 1 << 16
-
-  private[cind] def hotLineSaltThreshold(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.cind.hotLineSaltThreshold")
-      .map(_.toInt).getOrElse(DefaultHotLineSaltThreshold)
-
   /** Regime decisions print to stderr only when asked (ADVICE r12: library
     * code must not emit unconditional stderr noise per invocation). */
   private[cind] def cindVerbose(spark: SparkSession): Boolean =
     spark.conf.getOption("spark.graft.cind.verbose").exists(_.toBoolean)
-
-  /** Salted two-phase regroup of (join_val, id, nsalt) rows into
-    * (join_val, ids): phase 1 groups by (join_val, salt) with every
-    * aggregation buffer bounded ≈ the salt threshold; phase 2 concatenates
-    * ONLY the salted (hot) values' parts — buffer count there is the hot
-    * value count, never the value vocabulary. The narrow branch and the
-    * hot branch read the SAME phase-1 exchange (Spark reuses the identical
-    * exchange subtree), so the stream shuffles once. */
-  private def saltedLines(tagged: DataFrame): DataFrame = {
-    val phase1 = tagged
-      .withColumn("salt", pmod(hash(col("id")), col("nsalt")))
-      .withColumn("jh", xxhash64(col("join_val")))
-      .groupBy(col("jh"), col("join_val"), col("nsalt"), col("salt"))
-      .agg(collect_list(col("id")).as("part"))
-    phase1.filter(col("nsalt") === 1)
-      .select(col("join_val"), col("part").as("ids"))
-      .unionAll(phase1.filter(col("nsalt") > 1)
-        .groupBy("jh", "join_val")
-        .agg(flatten(collect_list(col("part"))).as("ids"))
-        .select(col("join_val"), col("ids")))
-  }
-
-  /** [[saltedLines]] when per-value sizes are not already known from a
-    * cached array column: one extra combinable count-by-key exchange
-    * derives nsalt — the valve's price in the two-pass (bloomCaptures)
-    * shape. */
-  private def boundedRegroupCounted(rows: DataFrame, hot: Int): DataFrame = {
-    val counts = rows.groupBy("join_val").agg(count(lit(1)).as("n_"))
-    saltedLines(rows.join(counts, "join_val")
-      .select(col("join_val"), col("id"),
-        (floor((col("n_") - 1) / lit(hot)) + 1).cast("int").as("nsalt")))
-  }
 
   /** The pruned, dictionary-encoded join lines shared by discovery, the
     * join-line histogram and the unary overlaps: the persisted
@@ -414,7 +367,6 @@ object CindEngine {
   private[cind] def encodedJoinLines(triples: DataFrame, minSupport: Int,
       bloomConditions: Boolean = false,
       arRules: Option[DataFrame] = None,
-      bloomCaptures: Boolean = false,
       expectedConditions: Long = 10000000L,
       projections: String = "spo"): EncodedLines = {
     // 1. Condition-frequency pruning first (reference FrequentConditionPlanner
@@ -439,36 +391,24 @@ object CindEngine {
     }
     val spark = triples.sparkSession
     import spark.implicits._
-    // 2. The cached upstream both the capture supports and the encode read.
-    //    Exact shape: ONE full-data shuffle groups instances by join value
-    //    through the [[JoinLines]] kernel — map-side sorted, deduplicated
-    //    runs per value, merged on the reduce side. Caveat at scale: the
-    //    merge holds one join value's distinct condition-frequent captures;
-    //    for adversarial hub values use bloomCaptures=true — the
-    //    reference's `--find-frequent-captures` valve
-    //    (programs/RDFind.scala:376-399), whose two-pass shape never
-    //    materializes a per-value capture array before the frequency
-    //    filter, so hub join values stay row-shaped (pass 1: dedup shuffle
-    //    + capture supports; pass 2: encode + regroup below).
-    val (upstream, grouped) =
-      if (!bloomCaptures) {
-        val lines0 = JoinLines(pruned).persist()
-        // no eager count: the next consumer is dictWithIds' partition-size
-        // job, which fills this cache on the way; every later reader
-        // (dictionary collect, encode, fallback explode) runs after that
-        // job has finished, so nothing races an unfilled cache.
-        // 3. Capture supports from the cached lines: each line is one
-        //    DISTINCT join value, so explode+count == count_distinct(join_val).
-        (lines0, lines0.select(explode(col("caps")).as("c"))
-          .groupBy(col("c.code").as("code"), col("c.v1").as("v1"), col("c.v2").as("v2"))
-          .agg(count(lit(1)).as("support"))
-          .filter(col("support") >= minSupport))
-      } else {
-        val dedup = pruned.dropDuplicates("code", "v1", "v2", "join_val").persist()
-        (dedup, dedup.groupBy("code", "v1", "v2")
-          .agg(count(lit(1)).as("support"))
-          .filter(col("support") >= minSupport))
-      }
+    // 2. ONE full-data shuffle groups instances by join value through the
+    //    [[JoinLines]] kernel — map-side sorted, deduplicated runs per
+    //    value, merged on the reduce side into one row per value — cached,
+    //    because the capture supports and the encode both read it. The row
+    //    holds a value's distinct condition-frequent captures; the pair
+    //    step's O(w^2) enumeration bounds a discoverable line's width long
+    //    before that row's memory does (BASELINE.md "One line shape").
+    val lines0 = JoinLines(pruned).persist()
+    // no eager count: the next consumer is dictWithIds' partition-size
+    // job, which fills this cache on the way; every later reader
+    // (dictionary collect, encode, shuffle-regime explode) runs after that
+    // job has finished, so nothing races an unfilled cache.
+    // 3. Capture supports from the cached lines: each line is one
+    //    DISTINCT join value, so explode+count == count_distinct(join_val).
+    val grouped = lines0.select(explode(col("caps")).as("c"))
+      .groupBy(col("c.code").as("code"), col("c.v1").as("v1"), col("c.v2").as("v2"))
+      .agg(count(lit(1)).as("support"))
+      .filter(col("support") >= minSupport)
     val (dict, nDict) = dictWithIds(spark, grouped)
     // SCALE VALVE (SURVEY §5 hard-part 5, forced by the r11 sf10
     // broadcast-regime finding): past dictEncodeMaxBroadcastRows the
@@ -478,77 +418,41 @@ object CindEngine {
     if (cindVerbose(spark))
       System.err.println(s"graft.cind: dict=$nDict captures, encode=" +
         (if (inRegime) "broadcast-map" else "shuffle-join"))
-    // the dictionary ships once per executor as a broadcast hash map, and
-    // the native dict_encode_ids expression rewrites a capture-struct
-    // array to frequent-capture ids in place (misses drop out)
-    def dictEncoded(caps: Column): Column = {
-      val dictMap = new java.util.HashMap[String, java.lang.Long]()
-      dict.select("code", "v1", "v2", "id").collect().foreach { r =>
-        dictMap.put(graft.functions.DictEncodeIds.key(
-          r.getInt(0), r.getString(1), r.getString(2)), r.getLong(3))
-      }
-      org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.functions.DictEncodeIds(
-          org.apache.spark.sql.graft.ColumnBridge.expression(caps),
-          spark.sparkContext.broadcast(dictMap)))
-    }
-    // frequent-capture membership BF over [[condHash]] keys, built at
-    // dictionary scale and sized by it (the filter holds exactly the nDict
-    // dictionary keys): the shuffle paths probe it MAP-SIDE so infrequent
-    // captures never reach an encode exchange (VERDICT r12 #3). False
-    // positives only ADMIT extra rows; the dictionary join or map miss
-    // drops them.
-    def frequentCaptureRows(rows: DataFrame): DataFrame =
-      rows.filter(bloomContains(
-        spark.sparkContext.broadcast(buildBloomLongs(
-          grouped.select(condHash(col("code"), col("v1"), col("v2")).as("k")).as[Long],
-          math.max(nDict, 1L), 0.01)),
-        condHash(col("code"), col("v1"), col("v2"))))
-    val idCols = dict.select("code", "v1", "v2", "id")
+    // 4. In the broadcast regime the lines never re-shuffle: the
+    //    dictionary ships once per executor as a broadcast hash map, the
+    //    native dict_encode_ids expression rewrites each capture-struct
+    //    array to frequent-capture ids in place (misses drop out), and
+    //    lines reduced to zero frequent captures drop out (they fed neither
+    //    pairs nor the histogram). Past it: explode the cached lines'
+    //    capture arrays, drop infrequent captures map-side through a
+    //    frequent-capture Bloom filter (VERDICT r12 #3; built from the
+    //    cached dictionary's nDict keys and sized by them — false positives
+    //    only ADMIT rows the dictionary join then drops), inner-join the
+    //    dictionary on the capture key, and regroup by join value. Two
+    //    exchanges instead of zero, but every structure stays partitioned.
     val lines =
-      if (!bloomCaptures) {
-        // 4. In the broadcast regime the grouped lines never re-shuffle:
-        //    a map-side rewrite, and lines reduced to zero frequent
-        //    captures drop out (they fed neither pairs nor the histogram).
-        //    Past it: explode the cached lines' capture arrays, BF-drop
-        //    infrequent captures map-side, inner-join the dict on the
-        //    capture key, and regroup by join value through the salted
-        //    bounded regroup (VERDICT r12 #2) — nsalt rides the explode for
-        //    free from the cached array sizes. Two exchanges instead of
-        //    zero, but every structure stays partitioned.
-        if (inRegime)
-          upstream.select(col("join_val"), dictEncoded(col("caps")).as("ids"))
-            .filter(size(col("ids")) > 0)
-        else {
-          val hot = hotLineSaltThreshold(spark)
-          saltedLines(frequentCaptureRows(upstream
-            .select(col("join_val"),
-              (floor((size(col("caps")) - 1) / lit(hot)) + 1).cast("int").as("nsalt"),
-              explode(col("caps")).as("c"))
-            .select(col("join_val"), col("nsalt"), col("c.code"), col("c.v1"), col("c.v2")))
-            .join(idCols, Seq("code", "v1", "v2"))
-            .select(col("join_val"), col("id"), col("nsalt")))
+      if (inRegime) {
+        val dictMap = new java.util.HashMap[String, java.lang.Long]()
+        dict.select("code", "v1", "v2", "id").collect().foreach { r =>
+          dictMap.put(graft.functions.DictEncodeIds.key(
+            r.getInt(0), r.getString(1), r.getString(2)), r.getLong(3))
         }
+        val ids = org.apache.spark.sql.graft.ColumnBridge.column(
+          graft.functions.DictEncodeIds(
+            org.apache.spark.sql.graft.ColumnBridge.expression(col("caps")),
+            spark.sparkContext.broadcast(dictMap)))
+        lines0.select(col("join_val"), ids.as("ids")).filter(size(col("ids")) > 0)
       } else {
-        // BF-filtered instances encode through the same map (broadcast
-        // regime; an encode JOIN here shuffled the full deduped instance
-        // stream twice — ~180 MB of map writes at sf0.1) or the same
-        // equi-join (past it). Per-value sizes are unknown in this row
-        // shape, so the bounded regroup derives them with one combinable
-        // count-by-key pass (the hot-buffer valve's price).
-        val toEncode = frequentCaptureRows(upstream)
-        val ided =
-          if (inRegime)
-            toEncode.select(col("join_val"),
-              explode(dictEncoded(array(struct(col("code"), col("v1"), col("v2"))))).as("id"))
-          else
-            toEncode.join(idCols, Seq("code", "v1", "v2")).select(col("join_val"), col("id"))
-        boundedRegroupCounted(ided, hotLineSaltThreshold(spark))
+        val captureKey = condHash(col("code"), col("v1"), col("v2"))
+        val frequent = spark.sparkContext.broadcast(buildBloomLongs(
+          dict.select(captureKey.as("k")).as[Long], math.max(nDict, 1L), 0.01))
+        lines0.select(col("join_val"), explode(col("caps")).as("c"))
+          .select(col("join_val"), col("c.code"), col("c.v1"), col("c.v2"))
+          .filter(bloomContains(frequent, captureKey))
+          .join(dict.select("code", "v1", "v2", "id"), Seq("code", "v1", "v2"))
+          .groupBy("join_val").agg(collect_list(col("id")).as("ids"))
       }
-    // map-only: in the broadcast regime the exact-shape lines are a pure
-    // map over the cached lines0; every other shape regroups (shuffles)
-    EncodedLines(dict, lines, nDict, broadcast = inRegime,
-      linesMapOnly = inRegime && !bloomCaptures, internal = Seq(upstream, dict))
+    EncodedLines(dict, lines, nDict, broadcast = inRegime, internal = Seq(lines0, dict))
   }
 
   /** Dictionary of frequent captures with deterministic dense int IDs —
@@ -679,7 +583,7 @@ object CindEngine {
   /** The persist rule of every pair-counting caller: the encoded lines are
     * persisted (and counted, so the kernel's parallel stage
     * materializations read a filled cache) iff recomputing them shuffles —
-    * the salted regroup shapes. The kernel reads the lines once per union
+    * the shuffle regime's regroup. The kernel reads the lines once per union
     * arm (the narrow and wide skew-split branches' differing pushed-down
     * projections defeat exchange reuse): the r13 job profile showed the
     * whole regroup subtree EXECUTING 4x there. In the broadcast-map regime
@@ -688,7 +592,7 @@ object CindEngine {
     * second full copy (r14 A/B, OPTIMIZATION_r14.md). The persisted lines
     * join `internal`, for the caller's `cacheResult` to release. */
   private def persistedLines(enc: EncodedLines): EncodedLines =
-    if (enc.linesMapOnly) enc
+    if (enc.broadcast) enc
     else {
       val lines = enc.lines.persist()
       lines.count()
@@ -756,15 +660,15 @@ object CindEngine {
     * compact result while releasing every internal cache. `sizes` only
     * shrinks in tests. */
   private[cind] def discover(triples: DataFrame, minSupport: Int, splitThreshold: Int,
-      bloomConditions: Boolean, bloomCaptures: Boolean,
+      bloomConditions: Boolean,
       expectedFrequentKeys: Long, projections: String,
       arRules: Option[DataFrame],
       sizes: PairCounts.Sizes = PairCounts.Sizes()): Dataset[CindRow] = {
     // expectedFrequentKeys sizes the condition Bloom path (reference rule:
     // estimated triples / minSupport, FrequentConditionPlanner.scala:34-38)
     val enc = persistedLines(encodedJoinLines(triples, minSupport, bloomConditions,
-      arRules = arRules, bloomCaptures = bloomCaptures,
-      expectedConditions = expectedFrequentKeys, projections = projections))
+      arRules = arRules, expectedConditions = expectedFrequentKeys,
+      projections = projections))
     val counts = expandCounts(PairCounts(enc.lines, minSupport, splitThreshold, sizes = sizes))
     val cinds = decodeCinds(enc, counts, minSupport)
     val out = arRules.fold(cinds)(rules => arImpliedCindFilter(cinds.toDF(), rules))
@@ -791,11 +695,10 @@ object CindEngine {
   def allCinds(triples: DataFrame, minSupport: Int = DefaultMinSupport,
       splitThreshold: Int = SplitThreshold,
       bloomConditions: Boolean = false,
-      bloomCaptures: Boolean = false,
       expectedFrequentKeys: Long = 10000000L,
       projections: String = "spo",
       arRules: Option[DataFrame] = None): Dataset[CindRow] =
-    discover(triples, minSupport, splitThreshold, bloomConditions, bloomCaptures,
+    discover(triples, minSupport, splitThreshold, bloomConditions,
       expectedFrequentKeys, projections, arRules)
 
   /** The reference's other traversal strategies under their own names, for

@@ -210,13 +210,6 @@ object Soak {
         .getOrElse(Set("count-match", "minhash"))
     if (which("count-match"))
       run("cind_all_sf1", CindEngine.allCinds(triples1).toDF())
-    if (which("count-match-bloomcaps"))
-      // the two-pass line-formation shape (VERDICT r13 #7): instances
-      // dedup + encode to ids MAP-SIDE before grouping, so the formation
-      // exchange carries ids instead of string structs — the default-at-
-      // scale A/B against the string-struct formation above
-      run("cind_all_bloomcaps_sf1",
-        CindEngine.allCinds(triples1, bloomCaptures = true).toDF())
     if (which("minhash"))
       run("dedup_minhash_pairs_sf1", Dedup.minhashLshPairs(docs1, 50))
     // ---- LLM-pipeline heavies at 10x (SPARK_GRAFT_SOAK_ONLY selects):

@@ -55,16 +55,12 @@ class CindEngineSpec extends SparkSpec {
   test("shuffle-join encode fallback is result-identical to the broadcast encode") {
     // dictEncodeMaxBroadcastRows = 0 forces the scale valve: no driver-side
     // dict collect, encode via shuffle equi-join — results must be
-    // bit-identical on both the exact and the bloomCaptures line shapes
+    // bit-identical
     def run() = distinctKeys(CindEngine.allCinds(toDF(tiny), minSupport = 2).collect())
-    def runBloom() = distinctKeys(CindEngine.allCinds(toDF(tiny), minSupport = 2,
-        bloomCaptures = true).collect())
-    val (bExact, bBloom) = (run(), runBloom())
+    val bExact = run()
     spark.conf.set("spark.graft.cind.dictEncodeMaxBroadcastRows", "0")
-    try {
-      assert(run() == bExact)
-      assert(runBloom() == bBloom)
-    } finally spark.conf.unset("spark.graft.cind.dictEncodeMaxBroadcastRows")
+    try assert(run() == bExact)
+    finally spark.conf.unset("spark.graft.cind.dictEncodeMaxBroadcastRows")
     assert(bExact == bruteForce(tiny, 2))
   }
 
@@ -80,6 +76,7 @@ class CindEngineSpec extends SparkSpec {
       "hybrid" -> (() => CindEngine.allCindsHybrid(toDF(tiny), minSupport = 2)),
       "small-to-large" -> (() => CindEngine.allCindsSmallToLarge(toDF(tiny), minSupport = 2)),
       "intersect" -> (() => CindEngine.allCindsIntersect(toDF(tiny), minSupport = 2)),
+      "bloom" -> (() => CindEngine.allCinds(toDF(tiny), minSupport = 2, bloomConditions = true)),
       "joinLineHistogram" -> (() => CindEngine.joinLineHistogram(toDF(tiny), minSupport = 2)),
       "unaryOverlaps" -> (() => CindEngine.unaryOverlaps(toDF(tiny), minSupport = 2)))
     for (fallback <- Seq(false, true); (name, call) <- calls) {
@@ -160,13 +157,6 @@ class CindEngineSpec extends SparkSpec {
     val b = CindEngine.allCinds(toDF(tiny), minSupport = 2, bloomConditions = true)
       .collect().map(key).toSet
     assert(b == bruteForce(tiny, 2))
-    // frequent-captures BF (reference --find-frequent-captures) is likewise
-    // semantics-preserving: FPs only reach the inner encode join, which
-    // drops them
-    val bc = CindEngine.allCinds(toDF(tiny), minSupport = 2,
-      bloomConditions = true, bloomCaptures = true)
-      .collect().map(key).toSet
-    assert(bc == bruteForce(tiny, 2))
   }
 
   test("unaryOverlaps reports exact co-occurrence counts; overlap==support <=> CIND") {
@@ -341,14 +331,11 @@ class CindEngineSpec extends SparkSpec {
     }
   }
 
-  test("fallback regroup salts hot join values: one synthetic mega-value, identical lines") {
-    // VERDICT r12 #2 done-criterion: a join value co-occurring with >= 1e5
-    // captures must pass the shuffle-encode fallback under SMALL shuffle
-    // partitions (the spec session runs 4) without any unbounded
-    // collect_list buffer — the salted two-phase regroup splits it into
-    // ceil(n/threshold) bounded sub-buffers — and the regrouped lines must
-    // decode IDENTICALLY to the broadcast-regime encode.
-    import spark.implicits._
+  test("shuffle-regime regroup keeps a mega-value whole: identical lines") {
+    // a join value co-occurring with >= 1e5 captures must pass the
+    // shuffle-encode regroup under SMALL shuffle partitions (the spec
+    // session runs 4) as ONE line of distinct ids, and the regrouped lines
+    // must decode IDENTICALLY to the broadcast-regime encode
     import org.apache.spark.sql.functions.{col, concat, explode, lit}
     val n = 60000
     // every triple shares pred "p" and obj "hub": the o-projected join line
@@ -357,45 +344,43 @@ class CindEngineSpec extends SparkSpec {
       concat(lit("s"), col("id")).as("subj"), lit("p").as("pred"),
       lit("hub").as("obj"))
     def decodedLines(forceFallback: Boolean)
-        : (Map[String, Set[(Int, String, String)]], Map[String, Int]) = {
-      if (forceFallback) {
-        spark.conf.set("spark.graft.cind.dictEncodeMaxBroadcastRows", "0")
-        spark.conf.set("spark.graft.cind.hotLineSaltThreshold", "1000")
-      }
+        : (Map[String, Set[(Int, String, String)]], Map[String, Int], Seq[String]) = {
+      if (forceFallback) spark.conf.set("spark.graft.cind.dictEncodeMaxBroadcastRows", "0")
       try {
         val enc = CindEngine.encodedJoinLines(triples, minSupport = 1)
         val (dict, lines) = (enc.dict, enc.lines)
+        val values = lines.select(col("join_val")).collect().map(_.getString(0)).toSeq
         val rows = lines.select(col("join_val"), explode(col("ids")).as("id"))
           .join(dict.select(col("id"), col("code"), col("v1"), col("v2")), "id")
           .select(col("join_val"), col("code"), col("v1"), col("v2"))
           .collect()
+        enc.internal.foreach(_.unpersist())
         val byVal = rows.groupBy(_.getString(0))
         (byVal.map { case (jv, rs) =>
            jv -> rs.map(r => (r.getInt(1), r.getString(2), r.getString(3))).toSet },
-         byVal.map { case (jv, rs) => jv -> rs.length })
-      } finally if (forceFallback) {
+         byVal.map { case (jv, rs) => jv -> rs.length },
+         values)
+      } finally if (forceFallback)
         spark.conf.unset("spark.graft.cind.dictEncodeMaxBroadcastRows")
-        spark.conf.unset("spark.graft.cind.hotLineSaltThreshold")
-      }
     }
-    val (salted, saltedLens) = decodedLines(forceFallback = true)
-    val (bcast, _) = decodedLines(forceFallback = false)
-    assert(salted("hub").size == 2 * n + 1) // the mega line: >= 1e5 captures
-    // no id duplicated by the salting (each line's ids stay a set)
-    saltedLens.foreach { case (jv, len) => assert(len == salted(jv).size, jv) }
-    assert(salted == bcast)
+    val (shuffled, shuffledLens, values) = decodedLines(forceFallback = true)
+    val (bcast, _, _) = decodedLines(forceFallback = false)
+    assert(shuffled("hub").size == 2 * n + 1) // the mega line: >= 1e5 captures
+    // one row per join value: no value split into parts
+    assert(values.distinct.length == values.length, "a value split into parts")
+    // no id duplicated by the regroup (each line's ids stay a set)
+    shuffledLens.foreach { case (jv, len) => assert(len == shuffled(jv).size, jv) }
+    assert(shuffled == bcast)
   }
 
-  test("salted regroup is result-identical on the standard fixture (extreme salting)") {
-    // in the shuffle-join encode, a line wider than the salt threshold is
-    // regrouped from ceil(w / threshold) salted parts, which the concat
-    // branch joins back into one line: at thresholds 1 and 2 the fixture's
-    // lines take both that branch and the narrow one, in both line shapes
-    // (exact and bloomCaptures), and the lines and the CIND set must not
-    // change
+  test("shuffle-regime lines decode as the broadcast lines do on the tiny fixture") {
+    // the shuffle-join encode regroups each line from its exploded,
+    // dictionary-joined captures: every value must come back as ONE line of
+    // distinct ids, the lines must decode as the broadcast regime's do, and
+    // the CIND set must not change
     import org.apache.spark.sql.functions.{col, explode}
-    def decodedLines(bloomCaps: Boolean): Map[String, Set[(Int, String, String)]] = {
-      val enc = CindEngine.encodedJoinLines(toDF(tiny), minSupport = 2, bloomCaptures = bloomCaps)
+    def decodedLines(): Map[String, Set[(Int, String, String)]] = {
+      val enc = CindEngine.encodedJoinLines(toDF(tiny), minSupport = 2)
       try {
         val perLine = enc.lines.select(col("join_val"), col("ids")).collect()
           .map(r => r.getString(0) -> r.getSeq[Long](1))
@@ -408,21 +393,13 @@ class CindEngineSpec extends SparkSpec {
             (r.getAs[Int]("code"), r.getAs[String]("v1"), r.getAs[String]("v2"))).toSet }
       } finally enc.internal.foreach(_.unpersist())
     }
+    val whole = decodedLines()
+    assert(whole.values.map(_.size).max > 2, "no line wider than two captures")
     spark.conf.set("spark.graft.cind.dictEncodeMaxBroadcastRows", "0")
     try {
-      for (bloomCaps <- Seq(false, true)) {
-        val whole = decodedLines(bloomCaps)
-        assert(whole.values.map(_.size).max > 2, "no line wider than both thresholds")
-        for (threshold <- Seq(1, 2)) {
-          val ctx = s"threshold $threshold, bloomCaptures $bloomCaps"
-          spark.conf.set("spark.graft.cind.hotLineSaltThreshold", threshold.toString)
-          try {
-            assert(decodedLines(bloomCaps) == whole, ctx)
-            assert(distinctKeys(CindEngine.allCinds(toDF(tiny), minSupport = 2,
-              bloomCaptures = bloomCaps).collect()) == bruteForce(tiny, 2), ctx)
-          } finally spark.conf.unset("spark.graft.cind.hotLineSaltThreshold")
-        }
-      }
+      assert(decodedLines() == whole)
+      assert(distinctKeys(CindEngine.allCinds(toDF(tiny), minSupport = 2).collect()) ==
+        bruteForce(tiny, 2))
     } finally spark.conf.unset("spark.graft.cind.dictEncodeMaxBroadcastRows")
   }
 
@@ -590,7 +567,7 @@ class CindEngineSpec extends SparkSpec {
       }.sum
     val enc = CindEngine.encodedJoinLines(toDF(tiny), minSupport = 2)
     try {
-      assert(enc.linesMapOnly)
+      assert(enc.broadcast)
       assert(encodes(enc.lines) == 1)
       // the kernel reads the lines in a narrow and a wide branch
       assert(encodes(PairCounts(enc.lines, 2, CindEngine.SplitThreshold)) == 2)

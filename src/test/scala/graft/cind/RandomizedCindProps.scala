@@ -88,7 +88,7 @@ object RandomizedCindProps extends Properties("graft.cind.e2e") {
       val results = for (shuffleEncode <- Seq(false, true)) yield {
         if (shuffleEncode) spark.conf.set("spark.graft.cind.dictEncodeMaxBroadcastRows", "0")
         val rows = try CindEngine.discover(df, 2, splitThreshold = 3, bloomConditions = false,
-            bloomCaptures = false, expectedFrequentKeys = 10000000L, projections = "spo",
+            expectedFrequentKeys = 10000000L, projections = "spo",
             arRules = None, sizes = tiny).collect()
           finally spark.conf.unset("spark.graft.cind.dictEncodeMaxBroadcastRows")
         val got = rows.map(key).toSet
@@ -100,8 +100,8 @@ object RandomizedCindProps extends Properties("graft.cind.e2e") {
       results.forall(identity)
     }
 
-  // the full option stack (AR pruning + both Bloom paths) on arbitrary
-  // inputs: the Bloom paths only over-admit, so the AR-pruned set is the
+  // the full option stack (AR pruning + the condition Bloom filter) on
+  // arbitrary inputs: the filter only over-admits, so the AR-pruned set is the
   // one the exact prune finds — the randomized counterpart of MainSpec's
   // fixture flag matrix
   property("AR + Bloom composition: Bloom keeps AR-pruned set") =
@@ -110,7 +110,7 @@ object RandomizedCindProps extends Properties("graft.cind.e2e") {
       val df = ts.toDF("subj", "pred", "obj")
       val rules = CindEngine.associationRules(df, 2)
       val rowsA = CindEngine.allCinds(df, minSupport = 2,
-        bloomConditions = true, bloomCaptures = true, arRules = Some(rules)).collect()
+        bloomConditions = true, arRules = Some(rules)).collect()
       val rowsB = CindEngine.allCinds(df, minSupport = 2, arRules = Some(rules)).collect()
       val (a, b) = (rowsA.map(key).toSet, rowsB.map(key).toSet)
       if (a != b) println(s"triples=$ts\nonly-bloom=${a -- b}\nonly-exact=${b -- a}")
